@@ -176,8 +176,8 @@ def _q_rollup_1h_stats(spark, sf_dir):
 
 def _q_cascade_fused(spark, sf_dir):
     """All three retention tiers written in ONE Spark action
-    (materialize_cascade: tier-union + partitionBy("tier") — the shared
-    raw→1m stage is computed once) and read back; every tier row must
+    (materialize_cascade: one aggregation computes every tier from raw,
+    written with partitionBy("tier")) and read back; every tier row must
     equal the per-tier batch oracles. This is the physical path the
     scaling probe times, oracle-checked end-to-end through its actual
     write+read."""

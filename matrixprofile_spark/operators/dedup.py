@@ -25,7 +25,7 @@ rather than n².
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -191,21 +191,22 @@ def lsh_candidate_pairs(
     representative per hot bucket) already covers them; silently
     quadratic candidate joins do not.
 
-    Shape (round 8): ONE aggregation packs each bucket's member ids
-    into an array, the cap is a plain size() filter on it, and the
-    ordered pairs stream out of two chained explodes — no self-join at
-    all. The previous shape computed the banded stream + bucket-size
-    window on BOTH sides of a self-join: two (band, bucket) exchanges,
-    two sorts, two windows, plus the join itself, for the identical
-    pair set. Pair fan-out is unchanged (a bucket of b members yields
-    b(b-1)/2 rows either way, pipelined through Generate rather than
-    materialized); the residual distinct() exchange on (id_a, id_b) is
-    inherent — a pair discovered via two bands must emit once."""
+    Shape: ONE aggregation packs each bucket's member ids into an
+    array and the ordered pairs stream out of two chained explodes — no
+    self-join at all. The cap is a member count over a (band, bucket)
+    window applied BEFORE that aggregation, so a hot bucket's id list
+    is never built; the window and the aggregation share one exchange.
+    A bucket of b members yields b(b-1)/2 rows, pipelined through
+    Generate rather than materialized; the residual distinct() exchange
+    on (id_a, id_b) is inherent — a pair discovered via two bands must
+    emit once."""
     banded = _banded(sigs, bands)
+    if max_bucket is not None:
+        n = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
+        banded = (banded.withColumn("_n", n)
+                  .where(F.col("_n") <= max_bucket).drop("_n"))
     buckets = banded.groupBy("band", "bucket").agg(
         F.collect_list("id").alias("ids"))
-    if max_bucket is not None:
-        buckets = buckets.where(F.size("ids") <= max_bucket)
     return (
         buckets.select(F.explode("ids").alias("id_a"), "ids")
         .select("id_a", F.explode("ids").alias("id_b"))

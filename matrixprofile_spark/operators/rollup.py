@@ -5,9 +5,9 @@ Generalizes the reference's `statistics` operator
 re-aggregable materialized rollups. Each tier row carries an **algebraic
 sketch** — cnt/sum/min/max/sum_sq/first/last — chosen so that:
 
-- every coarser tier is computed *exactly* from the finer tier (sum of
-  sums, min of mins, min_by(first, bucket), …), never from raw → the
-  cascade reads 60× / 24× less data per hop;
+- `rollup_cascade` and the incremental path compute a coarser tier
+  *exactly* from the finer one (sum of sums, min of mins,
+  min_by(first, bucket), …), reading 60× / 24× less data per hop;
 - mean = sum/cnt and population std = sqrt(sum_sq/cnt - (sum/cnt)^2) are
   recoverable at any tier without raw;
 - results are independent of partition count / aggregation order for
@@ -28,11 +28,23 @@ from pyspark.sql import functions as F
 
 TIERS_S = {"1m": 60, "1h": 3600, "1d": 86400}
 
-SKETCH_COLS = ("cnt", "vsum", "vmin", "vmax", "sum_sq", "vfirst", "vlast")
-
 
 def _bucket(col: str, tier_s: int):
     return (F.floor(F.col(col) / tier_s) * tier_s).cast("bigint")
+
+
+def _sketch_from_raw(points: DataFrame, *keys) -> DataFrame:
+    """The seven sketch aggregates of non-NULL raw points per ``keys``."""
+    v, ts = F.col("value"), F.col("ts_epoch")
+    return points.where(v.isNotNull()).groupBy(*keys).agg(
+        F.count(v).alias("cnt"),
+        F.sum(v).alias("vsum"),
+        F.min(v).alias("vmin"),
+        F.max(v).alias("vmax"),
+        F.sum(v * v).alias("sum_sq"),
+        F.min_by(v, ts).alias("vfirst"),
+        F.max_by(v, ts).alias("vlast"),
+    )
 
 
 def rollup_from_raw(series: DataFrame, tier_s: int) -> DataFrame:
@@ -42,22 +54,8 @@ def rollup_from_raw(series: DataFrame, tier_s: int) -> DataFrame:
     up front — a bucket with only NULLs contributes no sketch row, the
     same semantics the DuckDB oracle applies.
     """
-    v = F.col("value")
-    return (
-        series.where(v.isNotNull())
-        .groupBy(
-            "conv_id", "metric", _bucket("ts_epoch", tier_s).alias("bucket_epoch")
-        )
-        .agg(
-            F.count(v).alias("cnt"),
-            F.sum(v).alias("vsum"),
-            F.min(v).alias("vmin"),
-            F.max(v).alias("vmax"),
-            F.sum(v * v).alias("sum_sq"),
-            F.min_by(v, F.col("ts_epoch")).alias("vfirst"),
-            F.max_by(v, F.col("ts_epoch")).alias("vlast"),
-        )
-    )
+    return _sketch_from_raw(series, "conv_id", "metric",
+                            _bucket("ts_epoch", tier_s).alias("bucket_epoch"))
 
 
 def rollup_cascade(finer: DataFrame, tier_s: int) -> DataFrame:
@@ -94,22 +92,17 @@ def build_cascade(series: DataFrame) -> dict[str, DataFrame]:
 def cascade_union(series: DataFrame) -> DataFrame:
     """All three tiers as ONE DataFrame tagged by a `tier` column.
 
-    The three branches share the raw→1m aggregation subtree; Spark's
-    exchange / AQE query-stage reuse executes that shuffle — the only
-    scan of raw, the dominant cost — exactly once, and the 1h/1d
-    branches re-aggregate the (tiny) reduce-side sketch rows from the
-    reused stage. This is what makes `materialize_cascade` a
-    single-action, single-commit write of every tier."""
-    tiers = build_cascade(series)
-    parts = [
-        tiers[t].select(F.lit(t).alias("tier"), "conv_id", "metric",
-                        "bucket_epoch", *SKETCH_COLS)
-        for t in ("1m", "1h", "1d")
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    One aggregation: every point is tagged with its three
+    (tier, bucket_epoch) pairs and a single groupBy computes each
+    tier's sketch straight from raw, so the raw stream and its one
+    exchange run once. For integer-valued metrics it bit-equals
+    `build_cascade` per tier (exact float64 sums, see above)."""
+    tags = F.array(*[F.struct(F.lit(t).alias("tier"),
+                              _bucket("ts_epoch", s).alias("bucket_epoch"))
+                     for t, s in TIERS_S.items()])
+    return _sketch_from_raw(
+        series.select("conv_id", "metric", "ts_epoch", "value", F.inline(tags)),
+        "tier", "conv_id", "metric", "bucket_epoch")
 
 
 def materialize_cascade(
@@ -121,16 +114,19 @@ def materialize_cascade(
     job-scheduling + commit + re-read constant per tier that does not
     shrink with cluster size — measured ~3 s core-count-invariant on
     the scaling probe, the single biggest drag on cascade scaling
-    efficiency. Here the tier union writes once, `partitionBy("tier")`,
-    so all constants are paid once; the shared raw→1m shuffle stage is
-    reused across tier branches instead of re-read from disk. Returns
-    the read-back per-tier DataFrames (partition-pruned on `tier`)."""
+    efficiency. Here the one-pass tier aggregation (`cascade_union`)
+    writes once, `partitionBy("tier")`, so all constants are paid once
+    and no tier is re-read from disk. Returns the read-back per-tier
+    DataFrames (partition-pruned on `tier`)."""
     out = cascade_union(series)
     if files_per_tier is not None:
         # round-robin into N writer tasks; each writes one file per tier
         # dir it holds rows for, so the commit fan-in is bounded at
         # ~3·N files without serializing any single tier into one task
         out = out.repartition(files_per_tier)
+    # the writer's own sort is by `tier` alone; the full key lays each
+    # file out in conv_id/metric runs, which parquet encodes smaller
+    out = out.sortWithinPartitions("tier", "conv_id", "metric", "bucket_epoch")
     out.write.mode("overwrite").partitionBy("tier").parquet(path)
     spark = series.sparkSession
     # explicit schema: an all-empty input writes zero part files and

@@ -214,6 +214,49 @@ def test_lsh_hot_bucket_cap_bounds_candidates(spark):
     assert set(map(tuple, pairs2[["id_a", "id_b"]].values)) == {(1000, 1001)}
 
 
+def test_lsh_cap_drops_only_the_oversized_bucket(spark):
+    """The cap counts a bucket's members before any id list is built.
+    With one oversized bucket per band (30 identical docs, cap 10), a
+    bucket of exactly the cap (10 identical docs) and a few ordinary
+    near-duplicates, the pair set must equal the pairs of every
+    (band, bucket) of at most max_bucket members — and the hot docs
+    must pair with nothing."""
+    from itertools import combinations
+
+    from matrixprofile_spark.operators.dedup import (
+        _banded,
+        lsh_candidate_pairs,
+        minhash_signatures,
+        shingles,
+    )
+
+    rows = [(i, "the same boilerplate text repeated again and again here")
+            for i in range(30)]
+    rows += [(100 + i, "ten copies of one short footer line at the cap")
+             for i in range(10)]
+    rows += [(200 + i, f"a distinct doc number {i} with words {i % 3} end")
+             for i in range(12)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = minhash_signatures(shingles(docs))
+    cap = 10
+
+    banded = _banded(sigs, 4).toPandas()
+    want = set()
+    for _, g in banded.groupby(["band", "bucket"]):
+        if len(g) <= cap:
+            want |= set(combinations(sorted(g.id), 2))
+    pairs = lsh_candidate_pairs(sigs, bands=4, max_bucket=cap)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    # the count is a window on the (band, bucket) exchange the id-list
+    # aggregation reuses, not a size() filter on the built lists
+    assert "count(1) windowspecdefinition(band" in plan, plan
+    assert plan.count("hashpartitioning(band") == 1, plan
+    got = set(map(tuple, pairs.toPandas()[["id_a", "id_b"]].values))
+    assert got == want
+    assert set(combinations(range(100, 110), 2)) <= got  # at the cap
+    assert not any(a < 30 or b < 30 for a, b in got)  # hot: no pairs
+
+
 def test_ivf_codebook_sampling_routes_like_full(spark):
     """A hash-sampled codebook (deterministic, no RNG) must route
     queries to the same nearest cell as the full-corpus codebook when

@@ -65,14 +65,16 @@ def test_refresh_rollup_joins_are_broadcast(ser):
 
 
 def test_cascade_union_shares_one_raw_aggregation(ser):
-    """The tier union's three branches must share the raw→1m subtree:
-    only ONE partial aggregation keyed by the 1m bucket may appear (the
-    1h/1d branches re-aggregate its sketch rows), or the raw table is
-    scanned per tier at 100 TB. Count partial_min_by slots: raw→1m is
-    the only stage aggregating over ts_epoch-derived first/last."""
+    """All tiers come from ONE aggregation over one pass of raw: exactly
+    one partial min_by over the raw values, one lag window (the series
+    projection runs once) and no per-tier Union whose branches would
+    each re-run the window, the explode and the raw→1m aggregate."""
     plan = _plan(rollup.cascade_union(ser))
-    # one raw-keyed partial agg (floor(ts/60)) regardless of tier count
-    assert plan.count("floor((ts_epoch") + plan.count("floor(ts_epoch") <= 2, plan
+    assert plan.count("partial_min_by(value") == 1, plan
+    lag_windows = [ln for ln in plan.splitlines()
+                   if "Window [" in ln and "lag(" in ln]
+    assert len(lag_windows) == 1, plan
+    assert "Union" not in plan, plan
 
 
 def test_dedup_lsh_has_no_cartesian(spark):

@@ -114,6 +114,14 @@ def test_cascade_equals_from_raw(transcripts):
     pd.testing.assert_frame_equal(from_1m, from_raw)
 
 
+def _assert_tiers_equal(got, want):
+    for tier in ("1m", "1h", "1d"):
+        a, b = got[tier], want[tier]
+        assert a.dtypes == b.dtypes, tier
+        assert a.exceptAll(b).count() == 0, tier
+        assert b.exceptAll(a).count() == 0, tier
+
+
 def test_materialize_cascade_matches_chained(transcripts, tmp_path):
     """The single-action partitionBy("tier") write must land exactly the
     rows the chained write→read→write loop would — per tier, bit-for-bit
@@ -121,12 +129,31 @@ def test_materialize_cascade_matches_chained(transcripts, tmp_path):
     ser = S.project_series(transcripts)
     got = rollup.materialize_cascade(ser, str(tmp_path / "tiers"),
                                      files_per_tier=4)
-    want = rollup.build_cascade(ser)
-    for tier in ("1m", "1h", "1d"):
-        a, b = got[tier], want[tier]
-        assert a.columns == b.columns
-        assert a.exceptAll(b).count() == 0
-        assert b.exceptAll(a).count() == 0
+    _assert_tiers_equal(got, rollup.build_cascade(ser))
+
+
+def test_materialize_cascade_default_path_matches_chained(transcripts,
+                                                          tmp_path):
+    """The default write (no files_per_tier repartition) — the path
+    `jobs/rollup_job.py --mode batch` takes — lands the same rows."""
+    ser = S.project_series(transcripts)
+    got = rollup.materialize_cascade(ser, str(tmp_path / "tiers"))
+    _assert_tiers_equal(got, rollup.build_cascade(ser))
+
+
+@pytest.mark.parametrize("case", ["all_null", "empty"])
+def test_materialize_cascade_no_points_gives_empty_tiers(transcripts,
+                                                         tmp_path, case):
+    """No non-NULL point means no sketch row in any tier; the write
+    leaves no part file, so the read-back must use the static schema."""
+    from pyspark.sql import functions as F
+
+    ser = S.project_series(transcripts)
+    ser = ser.where(F.col("value").isNull()) if case == "all_null" \
+        else ser.limit(0)
+    got = rollup.materialize_cascade(ser, str(tmp_path / "tiers"))
+    _assert_tiers_equal(got, rollup.build_cascade(ser))
+    assert all(df.count() == 0 for df in got.values())
 
 
 def test_refresh_rollup_equals_full_recompute(transcripts, spark):
