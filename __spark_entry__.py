@@ -564,19 +564,20 @@ def _chosen_token_series(spark, sf_dir):
     return chosen.localCheckpoint(eager=True)
 
 
+def _mp_r2(prof, *keys):
+    """One (keys…, idx, dist_r2) row per profile position: ``mp``
+    exploded with its bigint index and rounded to 2 decimals."""
+    return prof.select(*keys, F.posexplode("mp").alias("idx", "dist")).select(
+        *keys, F.col("idx").cast("bigint").alias("idx"),
+        F.round("dist", 2).alias("dist_r2"))
+
+
 def _q_mpx_w16(spark, sf_dir):
     """MPX profile, oracle-checked against a DuckDB brute-force
     z-normalized-distance self-join, rounded to 2 decimals."""
     chosen = _chosen_token_series(spark, sf_dir)
-    prof = P.mpx_profiles(chosen, _MPX_W, packed=True, n_groups=5)
-    exploded = prof.select(
-        "conv_id", F.posexplode("mp").alias("idx", "dist")
-    )
-    return exploded.select(
-        "conv_id",
-        F.col("idx").cast("bigint").alias("idx"),
-        F.round("dist", 2).alias("dist_r2"),
-    )
+    return _mp_r2(P.mpx_profiles(chosen, _MPX_W, packed=True, n_groups=5),
+                  "conv_id")
 
 
 def _q_mass2_w16(spark, sf_dir):
@@ -836,12 +837,7 @@ def _q_snippets(spark, sf_dir):
 def _q_skimp_pmp(spark, sf_dir):
     chosen = _chosen_token_series(spark, sf_dir)
     prof = P.skimp_profiles(chosen, windows=[8, 16, 32], packed=True, n_groups=5)
-    return prof.select(
-        "conv_id", "metric", "w",
-        F.posexplode("mp").alias("idx", "dist"),
-    ).select("conv_id", "metric", "w",
-             F.col("idx").cast("bigint").alias("idx"),
-             F.round("dist", 2).alias("dist_r2"))
+    return _mp_r2(prof, "conv_id", "metric", "w")
 
 
 def _q_skimp_sampled(spark, sf_dir):
@@ -854,12 +850,7 @@ def _q_skimp_sampled(spark, sf_dir):
     chosen = _chosen_token_series(spark, sf_dir)
     prof = P.skimp_profiles(chosen, windows=[8, 16, 32, 48, 64],
                             sample_pct=0.5, packed=True, n_groups=5)
-    return prof.select(
-        "conv_id", "metric", "w",
-        F.posexplode("mp").alias("idx", "dist"),
-    ).select("conv_id", "metric", "w",
-             F.col("idx").cast("bigint").alias("idx"),
-             F.round("dist", 2).alias("dist_r2"))
+    return _mp_r2(prof, "conv_id", "metric", "w")
 
 
 def _q_skimp_memo(spark, sf_dir):
@@ -875,12 +866,7 @@ def _q_skimp_memo(spark, sf_dir):
     wd = tempfile.mkdtemp(prefix="mp_spark_skimp_memo_")
     INC.run_skimp_memo(spark, chosen, wd, windows=[8, 16], n_groups=10)
     INC.run_skimp_memo(spark, chosen, wd, windows=[8, 16, 32], n_groups=15)
-    store = INC.read_skimp_store(spark, wd)
-    return store.select(
-        "conv_id", "metric", "w", F.posexplode("mp").alias("idx", "dist")
-    ).select("conv_id", "metric", "w",
-             F.col("idx").cast("bigint").alias("idx"),
-             F.round("dist", 2).alias("dist_r2"))
+    return _mp_r2(INC.read_skimp_store(spark, wd), "conv_id", "metric", "w")
 
 
 def _q_pmp_discords(spark, sf_dir):
@@ -944,10 +930,7 @@ def _q_salted_mpx(spark, sf_dir):
     prof = salted_mpx_profiles(packed, 32, hot_threshold=1024, bands=8,
                                packed=True, checkpoint=False,
                                n_groups=n_hot)
-    return prof.select(
-        "conv_id", F.posexplode("mp").alias("idx", "dist")
-    ).select("conv_id", F.col("idx").cast("bigint").alias("idx"),
-             F.round("dist", 2).alias("dist_r2"))
+    return _mp_r2(prof, "conv_id")
 
 
 _STOMP_EZ = 8  # ceil(w/2) for w=16 (stomp.py:276)
@@ -966,41 +949,29 @@ def _floor_round(col, nd=2, eps=0.05):
     return F.when(c < eps, F.lit(0.0)).otherwise(F.round(c, nd))
 
 
-def _q_stomp_w16(spark, sf_dir):
+def _q_stomp(col: str):
     """STOMP exact profile (FFT seed + O(1) rolling update, ez=ceil(w/2));
-    oracle = brute-force SQL with the stomp exclusion zone."""
-    chosen = _chosen_token_series(spark, sf_dir)
-    prof = P.stomp_profiles(chosen, _MPX_W, packed=True, n_groups=5)
-    e = prof.select("conv_id", F.posexplode("mp").alias("idx", "dist"))
-    return _finite(e).select(
-        "conv_id", F.col("idx").cast("bigint").alias("idx"),
-        _floor_round("dist").alias("dist_r2"),
-    )
+    oracle = brute-force SQL with the stomp exclusion zone. ``col`` picks
+    the exploded profile:
 
+    - ``mp``: the two-sided profile;
+    - ``lmp``: left profile (stomp.py:170-184), nearest neighbor among
+      j ≤ i − ez − 1 only;
+    - ``rmp``: right profile, nearest neighbor among j ≥ i + ez + 1 only
+      (the reference's golden contract, its tests/test_stomp.py:38-58).
 
-def _q_stomp_left_w16(spark, sf_dir):
-    """STOMP left profile lmp (stomp.py:170-184): nearest neighbor among
-    j ≤ i − ez − 1 only; +inf edges dropped on both sides."""
-    chosen = _chosen_token_series(spark, sf_dir)
-    prof = P.stomp_profiles(chosen, _MPX_W, packed=True, n_groups=5)
-    e = prof.select("conv_id", F.posexplode("lmp").alias("idx", "dist"))
-    return _finite(e).select(
-        "conv_id", F.col("idx").cast("bigint").alias("idx"),
-        _floor_round("dist").alias("dist_r2"),
-    )
+    +inf edges are dropped on both sides."""
 
+    def q(spark, sf_dir):
+        chosen = _chosen_token_series(spark, sf_dir)
+        prof = P.stomp_profiles(chosen, _MPX_W, packed=True, n_groups=5)
+        e = prof.select("conv_id", F.posexplode(col).alias("idx", "dist"))
+        return _finite(e).select(
+            "conv_id", F.col("idx").cast("bigint").alias("idx"),
+            _floor_round("dist").alias("dist_r2"),
+        )
 
-def _q_stomp_right_w16(spark, sf_dir):
-    """STOMP right profile rmp: nearest neighbor among j ≥ i + ez + 1
-    only (reference golden contract /root/reference/tests/
-    test_stomp.py:38-58); +inf edges dropped on both sides."""
-    chosen = _chosen_token_series(spark, sf_dir)
-    prof = P.stomp_profiles(chosen, _MPX_W, packed=True, n_groups=5)
-    e = prof.select("conv_id", F.posexplode("rmp").alias("idx", "dist"))
-    return _finite(e).select(
-        "conv_id", F.col("idx").cast("bigint").alias("idx"),
-        _floor_round("dist").alias("dist_r2"),
-    )
+    return q
 
 
 def _q_scrimp_exact_w16(spark, sf_dir):
@@ -1008,11 +979,7 @@ def _q_scrimp_exact_w16(spark, sf_dir):
     is exact and shares the MPX brute-force oracle."""
     chosen = _chosen_token_series(spark, sf_dir)
     prof = P.scrimp_profiles(chosen, _MPX_W, sample_pct=1.0, packed=True, n_groups=5)
-    e = prof.select("conv_id", F.posexplode("mp").alias("idx", "dist"))
-    return e.select(
-        "conv_id", F.col("idx").cast("bigint").alias("idx"),
-        F.round("dist", 2).alias("dist_r2"),
-    )
+    return _mp_r2(prof, "conv_id")
 
 
 def _ab_pairs(spark, sf_dir):
@@ -1044,38 +1011,25 @@ def _q_ab_join_w16(spark, sf_dir):
     )
 
 
-def _q_av_cmp_w16(spark, sf_dir):
-    """Corrected matrix profile under the complexity annotation vector
-    (transform.py:131-179 + apply_av 15-87)."""
-    chosen = _chosen_token_series(spark, sf_dir)
-    out = P.cmp_profiles(chosen, _MPX_W, av="complexity", packed=True, n_groups=5)
-    return out.select(
-        "conv_id", F.col("idx").cast("bigint").alias("idx"),
-        F.round("cmp", 2).alias("cmp_r2"),
-    )
+def _q_av(av: str):
+    """Corrected matrix profile under one annotation vector
+    (apply_av, transform.py:15-87). ``av`` is one of:
 
+    - ``complexity`` (transform.py:131-179);
+    - ``meanstd`` (transform.py:182-227: av = 1 where moving_std <
+      mean(moving_std));
+    - ``clipping`` (transform.py:230-285: windowed count of
+      global-min/max hits, min-shifted and max-normalized, inverted)."""
 
-def _q_av_meanstd_w16(spark, sf_dir):
-    """Corrected MP under the meanstd annotation vector
-    (transform.py:182-227: av = 1 where moving_std < mean(moving_std))."""
-    chosen = _chosen_token_series(spark, sf_dir)
-    out = P.cmp_profiles(chosen, _MPX_W, av="meanstd", packed=True, n_groups=5)
-    return out.select(
-        "conv_id", F.col("idx").cast("bigint").alias("idx"),
-        F.round("cmp", 2).alias("cmp_r2"),
-    )
+    def q(spark, sf_dir):
+        chosen = _chosen_token_series(spark, sf_dir)
+        out = P.cmp_profiles(chosen, _MPX_W, av=av, packed=True, n_groups=5)
+        return out.select(
+            "conv_id", F.col("idx").cast("bigint").alias("idx"),
+            F.round("cmp", 2).alias("cmp_r2"),
+        )
 
-
-def _q_av_clipping_w16(spark, sf_dir):
-    """Corrected MP under the clipping annotation vector
-    (transform.py:230-285: windowed count of global-min/max hits,
-    min-shifted and max-normalized, inverted)."""
-    chosen = _chosen_token_series(spark, sf_dir)
-    out = P.cmp_profiles(chosen, _MPX_W, av="clipping", packed=True, n_groups=5)
-    return out.select(
-        "conv_id", F.col("idx").cast("bigint").alias("idx"),
-        F.round("cmp", 2).alias("cmp_r2"),
-    )
+    return q
 
 
 def _q_moving_median_w8(spark, sf_dir):
@@ -1331,12 +1285,7 @@ def _q_profile_json_roundtrip(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="mp_spark_json_") + "/profiles"
     write_profiles_json(prof, path)
     back = read_profiles_json(spark, path)
-    return back.select(
-        "conv_id", F.posexplode("mp").alias("idx", "dist")
-    ).select(
-        "conv_id", F.col("idx").cast("bigint").alias("idx"),
-        F.round("dist", 2).alias("dist_r2"),
-    )
+    return _mp_r2(back, "conv_id")
 
 
 def _q_mpf_roundtrip(spark, sf_dir):
@@ -1357,12 +1306,7 @@ def _q_mpf_roundtrip(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="mp_spark_mpf_") + "/profiles"
     write_profiles_mpf(prof, path)
     back = read_profiles_mpf(spark, path)
-    return back.select(
-        "conv_id", F.posexplode("mp").alias("idx", "dist")
-    ).select(
-        "conv_id", F.col("idx").cast("bigint").alias("idx"),
-        F.round("dist", 2).alias("dist_r2"),
-    )
+    return _mp_r2(back, "conv_id")
 
 
 _STREAM_SEQ = [0]
@@ -1998,14 +1942,14 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "time_travel_1m": _q_time_travel_1m,
         "mpx_w16": _q_mpx_w16,
         "mass2_w16": _q_mass2_w16,
-        "stomp_w16": _q_stomp_w16,
-        "stomp_left_w16": _q_stomp_left_w16,
-        "stomp_right_w16": _q_stomp_right_w16,
+        "stomp_w16": _q_stomp("mp"),
+        "stomp_left_w16": _q_stomp("lmp"),
+        "stomp_right_w16": _q_stomp("rmp"),
         "scrimp_exact_w16": _q_scrimp_exact_w16,
         "ab_join_w16": _q_ab_join_w16,
-        "av_cmp_w16": _q_av_cmp_w16,
-        "av_meanstd_w16": _q_av_meanstd_w16,
-        "av_clipping_w16": _q_av_clipping_w16,
+        "av_cmp_w16": _q_av("complexity"),
+        "av_meanstd_w16": _q_av("meanstd"),
+        "av_clipping_w16": _q_av("clipping"),
         "moving_median_w8": _q_moving_median_w8,
         "max_subsequence": _q_max_subsequence,
         "hcluster_assign": _q_hcluster_assign,

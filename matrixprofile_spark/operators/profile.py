@@ -7,6 +7,14 @@ comes from Spark partitioning across groups, the analog of the
 reference's OpenMP prange over diagonals (cympx.pyx:78) and its
 multiprocessing pool over row batches (stomp.py:311-328).
 
+Every packed-series operator is one `_kernel_stage(src, keys, schema,
+kernel)`: it repartitions by the group keys with an explicit,
+work-aware count (`_grouped`), checks each series against
+MAX_PACKED_POINTS (read on the driver when the plan is built), and
+calls `kernel(key, values, pdf)`; a kernel returns its output frame,
+or None to skip the series (e.g. too short for its window) without
+computing anything.
+
 Layout strategy (100 TB scale):
 - `pack_series` first collapses each series to ONE row holding a sorted
   value array (shuffle on (conv_id, metric) — the only raw-data shuffle
@@ -114,31 +122,22 @@ MAX_PACKED_POINTS = 200_000_000
 MAX_LINKAGE_SERIES = 20_000
 
 
-def _guard_packed(values: np.ndarray, key) -> None:
-    if len(values) > MAX_PACKED_POINTS:
-        raise ValueError(
-            f"series {tuple(key)} has {len(values)} points > "
-            f"MAX_PACKED_POINTS={MAX_PACKED_POINTS}; a packed kernel task "
-            "would exhaust executor memory — downsample via the rollup "
-            "tiers or raise the limit deliberately"
-        )
+def _packed_guard():
+    """Size check for one packed series. MAX_PACKED_POINTS is read HERE,
+    on the driver while the plan is built, and closed over: a Python
+    worker re-imports this module and would only ever see the default."""
+    limit = MAX_PACKED_POINTS
 
+    def guard(values: np.ndarray, key) -> None:
+        if len(values) > limit:
+            raise ValueError(
+                f"series {tuple(key)} has {len(values)} points > "
+                f"MAX_PACKED_POINTS={limit}; a packed kernel task "
+                "would exhaust executor memory — downsample via the rollup "
+                "tiers or raise the limit deliberately"
+            )
 
-def _too_short(values: np.ndarray, w: int) -> bool:
-    return len(values) < 2 * w
-
-
-_PROFILE_COLUMNS = [
-    "conv_id", "metric", "w", "mp", "pi", "lmp", "lpi",
-    "rmp", "rpi", "ez", "join", "sample_pct", "algorithm",
-]
-
-
-def _empty_profile_frame() -> pd.DataFrame:
-    """Zero-row frame matching PROFILE_SCHEMA, built without running any
-    kernel (a too-short series must be skipped, not computed-and-sliced —
-    the kernel itself would raise on n below its own minimum)."""
-    return pd.DataFrame(columns=_PROFILE_COLUMNS)
+    return guard
 
 
 def _kernel_parts(df: DataFrame, n_groups: int | None = None) -> int:
@@ -165,6 +164,27 @@ def _grouped(src: DataFrame, *cols: str, n_groups: int | None = None):
     return src.repartition(_kernel_parts(src, n_groups), *cols).groupBy(*cols)
 
 
+def _kernel_stage(src: DataFrame, keys, schema: str, kernel,
+                  n_groups: int | None = None) -> DataFrame:
+    """One grouped kernel stage over packed-series rows: ``kernel(key,
+    values, pdf)`` runs once per ``keys`` group on the unpacked, guarded
+    ``values`` and returns its frame, or None to skip the series — decided
+    BEFORE computing, since a series below a kernel's minimum length would
+    crash it. None becomes a column-less empty frame (zero rows)."""
+    guard = _packed_guard()
+
+    def fn(key, pdf):
+        values = np.asarray(pdf["values"].iloc[0], dtype="d")
+        guard(values, key)
+        out = kernel(key, values, pdf)
+        return pd.DataFrame() if out is None else out
+
+    return _grouped(src, *keys, n_groups=n_groups).applyInPandas(fn, schema)
+
+
+_SERIES = ("conv_id", "metric")
+
+
 def mpx_profiles(series: DataFrame, w: int, packed: bool = False,
                  n_groups: int | None = None) -> DataFrame:
     """Exact MPX matrix profile per series (mpx.py:20-100 per group).
@@ -174,16 +194,12 @@ def mpx_profiles(series: DataFrame, w: int, packed: bool = False,
     caller can anti-join to find skipped keys)."""
     src = series if packed else pack_series(series)
 
-    def fn(key, pdf):
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
-        _guard_packed(values, key)
-        if _too_short(values, w):
-            # skip WITHOUT running the kernel: n < w would hand the
-            # kernel a negative profile length and crash the task
-            return _empty_profile_frame()
+    def kernel(key, values, pdf):
+        if len(values) < 2 * w:
+            return None
         return _profile_row(key, W.mpx_profile(values, w))
 
-    return _grouped(src, "conv_id", "metric", n_groups=n_groups).applyInPandas(fn, PROFILE_SCHEMA)
+    return _kernel_stage(src, _SERIES, PROFILE_SCHEMA, kernel, n_groups)
 
 
 def stomp_profiles(series: DataFrame, w: int, packed: bool = False,
@@ -191,15 +207,12 @@ def stomp_profiles(series: DataFrame, w: int, packed: bool = False,
     """STOMP with left/right profiles per series (stomp.py:196-377)."""
     src = series if packed else pack_series(series)
 
-    def fn(key, pdf):
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
-        if _too_short(values, w):
-            return _profile_row(key, {"mp": [], "pi": [], "w": w, "ez": 0,
-                                      "join": False, "sample_pct": 1,
-                                      "algorithm": "stomp"}).iloc[0:0]
+    def kernel(key, values, pdf):
+        if len(values) < 2 * w:
+            return None
         return _profile_row(key, stomp(values, w))
 
-    return _grouped(src, "conv_id", "metric", n_groups=n_groups).applyInPandas(fn, PROFILE_SCHEMA)
+    return _kernel_stage(src, _SERIES, PROFILE_SCHEMA, kernel, n_groups)
 
 
 def scrimp_profiles(
@@ -211,12 +224,9 @@ def scrimp_profiles(
     partitionings (engine requirement; reference is unseeded)."""
     src = series if packed else pack_series(series)
 
-    def fn(key, pdf):
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
-        if _too_short(values, w):
-            return _profile_row(key, {"mp": [], "pi": [], "w": w, "ez": 0,
-                                      "join": False, "sample_pct": sample_pct,
-                                      "algorithm": "scrimp++"}).iloc[0:0]
+    def kernel(key, values, pdf):
+        if len(values) < 2 * w:
+            return None
         # zlib.crc32 — stable across processes (Python's hash() is salted)
         import zlib
 
@@ -225,7 +235,7 @@ def scrimp_profiles(
                                 random_state=gseed)
         return _profile_row(key, prof)
 
-    return _grouped(src, "conv_id", "metric", n_groups=n_groups).applyInPandas(fn, PROFILE_SCHEMA)
+    return _kernel_stage(src, _SERIES, PROFILE_SCHEMA, kernel, n_groups)
 
 
 def skimp_profiles(
@@ -268,10 +278,9 @@ def skimp_profiles(
             n_groups=None if n_groups is None else n_groups * len(wins),
         )
 
-    def fn_sweep(key, pdf):  # windows=None: in-kernel doubling search
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
+    def sweep(key, values, pdf):  # windows=None: in-kernel doubling search
         if len(values) < 16:
-            return _empty_profile_frame()
+            return None
         prof = W.compute(values, windows=None, threshold=threshold,
                          sample_pct=sample_pct, seed=seed)
         rows = []
@@ -287,7 +296,7 @@ def skimp_profiles(
             })
         return pd.DataFrame(rows)
 
-    return _grouped(src, "conv_id", "metric", n_groups=n_groups).applyInPandas(fn_sweep, PROFILE_SCHEMA)
+    return _kernel_stage(src, _SERIES, PROFILE_SCHEMA, sweep, n_groups)
 
 
 def skimp_profiles_from_worklist(worklist: DataFrame,
@@ -299,19 +308,16 @@ def skimp_profiles_from_worklist(worklist: DataFrame,
     it against a persisted profile store (skimp.py:195-206 reuse
     semantics) and only missing (conv_id, metric, w) keys reach here."""
 
-    def fn_one(key, pdf):
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
+    def kernel(key, values, pdf):
         w = int(key[2])
-        _guard_packed(values, key)
-        if _too_short(values, w):
-            return _empty_profile_frame()
+        if len(values) < 2 * w:
+            return None
         out = _profile_row((key[0], key[1]), W.mpx_profile(values, w))
         out["algorithm"] = "skimp"
         return out
 
-    return _grouped(worklist, "conv_id", "metric", "w", n_groups=n_groups).applyInPandas(
-        fn_one, PROFILE_SCHEMA
-    )
+    return _kernel_stage(worklist, (*_SERIES, "w"), PROFILE_SCHEMA, kernel,
+                         n_groups)
 
 
 def with_discoveries(
@@ -341,9 +347,8 @@ def with_discoveries(
     src = series if packed else pack_series(series)
     joined = profiles.join(src, ["conv_id", "metric"])
 
-    def fn(key, pdf):
+    def kernel(key, values, pdf):
         row = pdf.iloc[0]
-        values = np.asarray(row["values"], dtype="d")
         mp = np.asarray(row["mp"], dtype="d")
         pi = np.asarray(row["pi"], dtype="int64")
         w = int(row["w"])
@@ -362,9 +367,8 @@ def with_discoveries(
             "regimes": reg,
         }])
 
-    return _grouped(joined, "conv_id", "metric", "w", n_groups=n_groups).applyInPandas(
-        fn, DISCOVERY_SCHEMA
-    )
+    return _kernel_stage(joined, (*_SERIES, "w"), DISCOVERY_SCHEMA, kernel,
+                         n_groups)
 
 
 def snippet_profiles(
@@ -375,12 +379,9 @@ def snippet_profiles(
     """Representative snippets per series (snippets.py:17-126)."""
     src = series if packed else pack_series(series)
 
-    def fn(key, pdf):
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
+    def kernel(key, values, pdf):
         if len(values) < 2 * snippet_size:
-            return pd.DataFrame(columns=[
-                "conv_id", "metric", "snippet_size", "rank", "index",
-                "fraction", "neighbor_count"]).iloc[0:0]
+            return None
         out = snippets_kernel(values, snippet_size, num_snippets=num_snippets,
                               window_size=window_size)
         return pd.DataFrame([
@@ -391,7 +392,7 @@ def snippet_profiles(
             for i, s in enumerate(out)
         ])
 
-    return _grouped(src, "conv_id", "metric", n_groups=n_groups).applyInPandas(fn, SNIPPET_SCHEMA)
+    return _kernel_stage(src, _SERIES, SNIPPET_SCHEMA, kernel, n_groups)
 
 
 def pairwise_mpdist(
@@ -508,19 +509,17 @@ def cmp_profiles(
 
     src = series if packed else pack_series(series)
 
-    def fn(key, pdf):
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
-        cols = ["conv_id", "metric", "w", "idx", "cmp"]
-        if _too_short(values, w):
-            return pd.DataFrame(columns=cols).iloc[0:0]
+    def kernel(key, values, pdf):
+        if len(values) < 2 * w:
+            return None
         prof = apply_av(W.mpx_profile(values, w), av)
         cmp_arr = prof["cmp"]
         return pd.DataFrame({
             "conv_id": key[0], "metric": key[1], "w": w,
             "idx": np.arange(len(cmp_arr), dtype="int64"), "cmp": cmp_arr,
-        })[cols]
+        })
 
-    return _grouped(src, "conv_id", "metric", n_groups=n_groups).applyInPandas(fn, CMP_SCHEMA)
+    return _kernel_stage(src, _SERIES, CMP_SCHEMA, kernel, n_groups)
 
 
 def max_subsequence_windows(
@@ -537,20 +536,18 @@ def max_subsequence_windows(
 
     src = series if packed else pack_series(series)
 
-    def fn(key, pdf):
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
-        cols = ["conv_id", "metric", "upper_window"]
+    def kernel(key, values, pdf):
         if len(values) < 16:
-            return pd.DataFrame(columns=cols).iloc[0:0]
+            return None
         try:
             uw = maximum_subsequence(values, threshold=threshold)
         except NoSolutionPossible:
-            return pd.DataFrame(columns=cols).iloc[0:0]
+            return None
         return pd.DataFrame([{
             "conv_id": key[0], "metric": key[1], "upper_window": int(uw),
         }])
 
-    return _grouped(src, "conv_id", "metric", n_groups=n_groups).applyInPandas(fn, MAXW_SCHEMA)
+    return _kernel_stage(src, _SERIES, MAXW_SCHEMA, kernel, n_groups)
 
 
 def hierarchical_assignments(
@@ -666,8 +663,7 @@ def pmp_motifs(
     joined = pmp_profiles.join(src.select("conv_id", "metric", "values"),
                                ["conv_id", "metric"])
 
-    def fn(key, pdf):
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
+    def kernel(key, values, pdf):
         windows, pmp, pmpi = _pmp_rows_to_matrix(pdf)
         prof = {
             "pmp": pmp, "pmpi": pmpi, "windows": windows,
@@ -685,9 +681,7 @@ def pmp_motifs(
         return pd.DataFrame(rows, columns=[
             "conv_id", "metric", "rank", "w", "first_idx", "second_idx"])
 
-    return _grouped(joined, "conv_id", "metric", n_groups=n_groups).applyInPandas(
-        fn, PMP_MOTIF_SCHEMA
-    )
+    return _kernel_stage(joined, _SERIES, PMP_MOTIF_SCHEMA, kernel, n_groups)
 
 
 def global_top_motifs(discoveries: DataFrame, profiles: DataFrame,

@@ -34,6 +34,8 @@ from matrixprofile_spark.kernels.mpx import (
 )
 from matrixprofile_spark.operators.profile import (
     PROFILE_SCHEMA,
+    _grouped,
+    _packed_guard,
     _profile_row,
     mpx_profiles,
     pack_series,
@@ -116,14 +118,18 @@ def salted_mpx_profiles(
     hot_banded = hot.join(F.broadcast(band_ids))
 
     n_bands = bands
+    # every band task holds the whole hot series: the same size check as
+    # the one-task kernel stages, with the limit read here on the driver
+    guard = _packed_guard()
 
     def partial_fn(key, pdf):
         values = np.asarray(pdf["values"].iloc[0], dtype="d")
+        guard(values, key[:2])
         band = int(key[2])
         pl = len(values) - w + 1
         bounds = _band_bounds(pl, minlag, n_bands)
         if band >= len(bounds):
-            return pd.DataFrame(columns=["conv_id", "metric", "band", "mp", "pi"]).iloc[0:0]
+            return pd.DataFrame()
         mp, pi = mpx_self_join(values, w, diag_range=bounds[band])
         return pd.DataFrame([{
             "conv_id": key[0], "metric": key[1], "band": band,
@@ -167,8 +173,6 @@ def salted_mpx_profiles(
         return _profile_row(key, prof)
 
     if n_groups is not None:
-        from matrixprofile_spark.operators.profile import _grouped
-
         grouped_merge = _grouped(partials, "conv_id", "metric",
                                  n_groups=n_groups)
     else:

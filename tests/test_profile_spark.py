@@ -9,6 +9,7 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.errors import PythonException
 
 from matrixprofile_spark.kernels import workflows as W
 from matrixprofile_spark.kernels.mpdist import mpdist
@@ -68,7 +69,6 @@ def test_mpx_profiles_matches_kernel(golden_series, sampledata):
 
 def test_stomp_profiles_matches_kernel(golden_series, sampledata):
     row = P.stomp_profiles(golden_series, 32).collect()[0]
-    prof = W.stomp(sampledata, 32) if hasattr(W, "stomp") else None
     from matrixprofile_spark.kernels.stomp import stomp
 
     prof = stomp(sampledata, 32)
@@ -107,24 +107,60 @@ def test_worklist_short_series_returns_empty(spark):
     assert [r["conv_id"] for r in rows] == ["ok"]
 
 
-def test_mpx_profiles_short_series_returns_empty(spark):
-    """n < w through mpx_profiles must skip, not crash: the pre-fix
-    branch ran the kernel (negative profile length) before slicing."""
+# every operator routed through _kernel_stage, built over a series
+# table s; ``pre`` holds upstream profile tables (mpx at w=16 and a
+# two-window PMP) for the operators that consume one
+_ROUTED = {
+    "mpx": lambda s, pre: P.mpx_profiles(s, 16),
+    "stomp": lambda s, pre: P.stomp_profiles(s, 16),
+    "scrimp": lambda s, pre: P.scrimp_profiles(s, 16),
+    "skimp_sweep": lambda s, pre: P.skimp_profiles(s),
+    "skimp_worklist": lambda s, pre: P.skimp_profiles(s, windows=[16]),
+    "discoveries": lambda s, pre: P.with_discoveries(pre["mpx"], s),
+    "snippets": lambda s, pre: P.snippet_profiles(s, 16),
+    "cmp": lambda s, pre: P.cmp_profiles(s, 16),
+    "max_subsequence": lambda s, pre: P.max_subsequence_windows(s),
+    "pmp_motifs": lambda s, pre: P.pmp_motifs(pre["pmp"], s),
+}
+
+
+def _upstream(series):
+    return {"mpx": P.mpx_profiles(series, 16),
+            "pmp": P.skimp_profiles(series, windows=[8, 16])}
+
+
+@pytest.mark.parametrize("op", sorted(_ROUTED))
+def test_short_series_returns_empty(spark, op):
+    """A 5-point series is below every operator's minimum (w and
+    snippet_size 16, the 16-point sweep floor): each must skip it
+    without running its kernel, not crash (the pre-fix mpx branch ran
+    the kernel on a negative profile length before slicing)."""
     df = spark.createDataFrame(
-        [("tiny", "value", 0, 0.0, 1.0),
-         ("tiny", "value", 1, 1.0, 2.0),
-         ("tiny", "value", 2, 2.0, 3.0),
-         ("tiny", "value", 3, 3.0, 4.0),
-         ("tiny", "value", 4, 4.0, 5.0)],
+        [("tiny", "value", i, float(i), float(i + 1)) for i in range(5)],
         "conv_id string, metric string, idx long, ts_epoch double, value double",
     )
-    assert P.mpx_profiles(df, 16).count() == 0
+    assert _ROUTED[op](df, _upstream(df)).count() == 0
+
+
+@pytest.mark.parametrize("op", [*sorted(_ROUTED), "salted_hot"])
+def test_kernel_stages_refuse_oversized_series(golden_series, monkeypatch, op):
+    """Every packed-series kernel stage refuses a series above
+    MAX_PACKED_POINTS. The limit is read on the driver when the plan is
+    built, so lowering it here reaches the workers; upstream tables are
+    planned first, so only the operator under test sees the low limit."""
+    pre = _upstream(golden_series)
+    monkeypatch.setattr(P, "MAX_PACKED_POINTS", 10)
+    if op == "salted_hot":  # every series hot: only the band path runs
+        df = salted_mpx_profiles(golden_series, 32, hot_threshold=100, bands=4)
+    else:
+        df = _ROUTED[op](golden_series, pre)
+    with pytest.raises(PythonException, match="MAX_PACKED_POINTS=10"):
+        df.collect()
 
 
 def test_discoveries_match_kernel(golden_series, sampledata):
     prof_df = P.mpx_profiles(golden_series, 32)
     disc = P.with_discoveries(prof_df, golden_series).collect()[0]
-    mp, pi = W.mpx_self_join(sampledata, 32) if hasattr(W, "mpx_self_join") else (None, None)
     from matrixprofile_spark.kernels.mpx import mpx_self_join
     from matrixprofile_spark.kernels import discover as D
 
