@@ -13,6 +13,7 @@ end-to-end including its input.
 
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 from collections.abc import Callable
@@ -603,21 +604,27 @@ def _q_mass2_w16(spark, sf_dir):
     )
 
 
-def _q_discords(spark, sf_dir):
-    chosen = _chosen_token_series(spark, sf_dir)
-    prof = P.mpx_profiles(chosen, _MPX_W, packed=True, n_groups=5)
-    disc = P.with_discoveries(prof, chosen, packed=True, n_groups=5)
+def _discoveries(chosen, w: int, **kw):
+    """(profiles, discoveries) of a packed chosen fixture: the MPX
+    profile at ``w``, then with_discoveries (``kw``: e.g. zero_eps)."""
+    prof = P.mpx_profiles(chosen, w, packed=True, n_groups=5)
+    return prof, P.with_discoveries(prof, chosen, packed=True, n_groups=5,
+                                    **kw)
+
+
+def _ranked(disc, col: str):
+    """One (conv_id, metric, rank, idx) row per entry of the index array
+    ``col`` (discords, regimes); rank is the array position, both
+    bigint."""
     return disc.select(
-        "conv_id", "metric",
-        F.posexplode("discords").alias("rank", "idx"),
+        "conv_id", "metric", F.posexplode(col).alias("rank", "idx"),
     ).select("conv_id", "metric", F.col("rank").cast("bigint").alias("rank"),
              F.col("idx").cast("bigint").alias("idx"))
 
 
-def _q_motifs(spark, sf_dir):
-    chosen = _chosen_token_series(spark, sf_dir)
-    prof = P.mpx_profiles(chosen, _MPX_W, packed=True, n_groups=5)
-    disc = P.with_discoveries(prof, chosen, packed=True, zero_eps=1e-4, n_groups=5)
+def _motif_pairs(disc):
+    """One (conv_id, metric, rank, first_idx, second_idx) row per
+    ``motif_pairs`` entry; rank is the array position."""
     return disc.select(
         "conv_id", "metric",
         F.posexplode("motif_pairs").alias("rank", "pair"),
@@ -626,6 +633,16 @@ def _q_motifs(spark, sf_dir):
         F.element_at("pair", 1).alias("first_idx"),
         F.element_at("pair", 2).alias("second_idx"),
     )
+
+
+def _q_discords(spark, sf_dir):
+    chosen = _chosen_token_series(spark, sf_dir)
+    return _ranked(_discoveries(chosen, _MPX_W)[1], "discords")
+
+
+def _q_motifs(spark, sf_dir):
+    chosen = _chosen_token_series(spark, sf_dir)
+    return _motif_pairs(_discoveries(chosen, _MPX_W, zero_eps=1e-4)[1])
 
 
 def _chosen_tier_series(spark, sf_dir, bucket_s: int, label: str,
@@ -678,14 +695,7 @@ def _q_tier_discords(bucket_s: int, label: str, n_lo: int,
     def q(spark, sf_dir):
         chosen = _chosen_tier_series(spark, sf_dir, bucket_s, label, n_lo,
                                      stretch=stretch)
-        prof = P.mpx_profiles(chosen, 8, packed=True, n_groups=5)
-        disc = P.with_discoveries(prof, chosen, packed=True, n_groups=5)
-        return disc.select(
-            "conv_id", "metric",
-            F.posexplode("discords").alias("rank", "idx"),
-        ).select("conv_id", "metric",
-                 F.col("rank").cast("bigint").alias("rank"),
-                 F.col("idx").cast("bigint").alias("idx"))
+        return _ranked(_discoveries(chosen, 8)[1], "discords")
 
     return q
 
@@ -700,17 +710,7 @@ def _q_tier_motifs(bucket_s: int, label: str, n_lo: int,
     def q(spark, sf_dir):
         chosen = _chosen_tier_series(spark, sf_dir, bucket_s, label, n_lo,
                                      stretch=stretch)
-        prof = P.mpx_profiles(chosen, 8, packed=True, n_groups=5)
-        disc = P.with_discoveries(prof, chosen, packed=True, zero_eps=1e-4,
-                                  n_groups=5)
-        return disc.select(
-            "conv_id", "metric",
-            F.posexplode("motif_pairs").alias("rank", "pair"),
-        ).select(
-            "conv_id", "metric", F.col("rank").cast("bigint").alias("rank"),
-            F.element_at("pair", 1).alias("first_idx"),
-            F.element_at("pair", 2).alias("second_idx"),
-        )
+        return _motif_pairs(_discoveries(chosen, 8, zero_eps=1e-4)[1])
 
     return q
 
@@ -719,9 +719,7 @@ def _q_global_discords(spark, sf_dir):
     """Cross-conversation top-10 discords: per-series discoveries
     exploded, distances looked up in the profile table, one global
     TakeOrderedAndProject (deterministic ties: conv_id, idx)."""
-    chosen = _chosen_token_series(spark, sf_dir)
-    prof = P.mpx_profiles(chosen, _MPX_W, packed=True, n_groups=5)
-    disc = P.with_discoveries(prof, chosen, packed=True, n_groups=5)
+    prof, disc = _discoveries(_chosen_token_series(spark, sf_dir), _MPX_W)
     out = P.global_top_discords(disc, prof, k=10)
     return out.select(
         "conv_id", "metric", F.col("idx").cast("bigint").alias("idx"),
@@ -735,10 +733,8 @@ def _q_global_motifs(spark, sf_dir):
     pair's distance recovered from the profile (greatest of the two
     endpoint mp values = the kernel's pick distance), one global
     TakeOrderedAndProject (deterministic ties: conv_id, first_idx)."""
-    chosen = _chosen_token_series(spark, sf_dir)
-    prof = P.mpx_profiles(chosen, _MPX_W, packed=True, n_groups=5)
-    disc = P.with_discoveries(prof, chosen, packed=True, zero_eps=1e-4,
-                              n_groups=5)
+    prof, disc = _discoveries(_chosen_token_series(spark, sf_dir), _MPX_W,
+                              zero_eps=1e-4)
     out = P.global_top_motifs(disc, prof, k=10, zero_eps=1e-4)
     return out.select(
         "conv_id", "metric",
@@ -785,12 +781,7 @@ def _q_analyze_w16(spark, sf_dir):
 
 def _q_regimes(spark, sf_dir):
     chosen = _chosen_token_series(spark, sf_dir)
-    prof = P.mpx_profiles(chosen, _MPX_W, packed=True, n_groups=5)
-    disc = P.with_discoveries(prof, chosen, packed=True, n_groups=5)
-    return disc.select(
-        "conv_id", "metric", F.posexplode("regimes").alias("rank", "idx")
-    ).select("conv_id", "metric", F.col("rank").cast("bigint").alias("rank"),
-             F.col("idx").cast("bigint").alias("idx"))
+    return _ranked(_discoveries(chosen, _MPX_W)[1], "regimes")
 
 
 def _q_snippets(spark, sf_dir):
@@ -1309,42 +1300,43 @@ def _q_mpf_roundtrip(spark, sf_dir):
     return _mp_r2(back, "conv_id")
 
 
-_STREAM_SEQ = [0]
+_STREAM_SEQ = itertools.count(1)
+
+
+def _stream_fixture(df, tag: str):
+    """Write a stream operator's source fixture to a fresh temp dir and
+    return ``(src, query_name)``. The memory sink registers the query
+    name as a session table, so a per-process sequence number keeps
+    repeated runs from sharing one."""
+    import tempfile
+
+    src = tempfile.mkdtemp(prefix=f"mp_spark_{tag}_") + "/src"
+    df.write.mode("overwrite").parquet(src)
+    return src, f"{tag}_{next(_STREAM_SEQ)}"
 
 
 def _q_stream_stateful_stats(spark, sf_dir):
     """Per-series running statistics as a STATEFUL stream
     (applyInPandasWithState; state carries across micro-batches);
     final state must equal the batch statistics oracle."""
-    import tempfile
-
     from matrixprofile_spark.streaming.structured import stream_stateful_stats
 
     ser = _series(spark, sf_dir).where(F.col("conv_id") < "conv-00100")
-    wd = tempfile.mkdtemp(prefix="mp_spark_state_")
-    ser.write.mode("overwrite").parquet(f"{wd}/src")
-    _STREAM_SEQ[0] += 1
-    return stream_stateful_stats(spark, f"{wd}/src",
-                                 query_name=f"state_stats_{_STREAM_SEQ[0]}")
+    src, name = _stream_fixture(ser, "state_stats")
+    return stream_stateful_stats(spark, src, query_name=name)
 
 
 def _q_stream_sessionize(spark, sf_dir):
     """Session windows as a STREAM (native session_window event-time
     aggregation, availableNow drain); must equal the batch gap-threshold
     sessionize row-wise, sessions keyed by start_ts."""
-    import tempfile
-
     from matrixprofile_spark.streaming.structured import stream_sessionize
 
     t = _transcripts(spark, sf_dir).where(
         F.col("conv_id") < "conv-00100"
     ).select("conv_id", "turn_idx", "ts_epoch")
-    wd = tempfile.mkdtemp(prefix="mp_spark_sess_")
-    t.write.mode("overwrite").parquet(f"{wd}/src")
-    _STREAM_SEQ[0] += 1
-    return stream_sessionize(spark, f"{wd}/src",
-                             query_name=f"stream_sess_{_STREAM_SEQ[0]}",
-                             gap_s=180)
+    src, name = _stream_fixture(t, "stream_sess")
+    return stream_sessionize(spark, src, query_name=name, gap_s=180)
 
 
 def _q_stream_rollup_1m_append(spark, sf_dir):
@@ -1360,19 +1352,14 @@ def _q_stream_rollup_1m_append(spark, sf_dir):
     below-watermark rollup of ALL rows under any trigger config — a
     time-disordered multi-file backlog would shed its out-of-order tail
     instead (see stream_rollup_1m_append's ARRIVAL CONTRACT)."""
-    import tempfile
-
     from matrixprofile_spark.streaming.structured import (
         stream_rollup_1m_append,
     )
 
     ser = _series(spark, sf_dir).where(F.col("conv_id") < "conv-00100")
-    wd = tempfile.mkdtemp(prefix="mp_spark_app_")
-    ser.coalesce(1).write.mode("overwrite").parquet(f"{wd}/src")
-    _STREAM_SEQ[0] += 1
-    return stream_rollup_1m_append(
-        spark, f"{wd}/src",
-        query_name=f"stream_r1m_app_{_STREAM_SEQ[0]}", delay="601 seconds")
+    src, name = _stream_fixture(ser.coalesce(1), "stream_r1m_app")
+    return stream_rollup_1m_append(spark, src, query_name=name,
+                                   delay="601 seconds")
 
 
 def _q_stream_dedup_turns(spark, sf_dir):
@@ -1384,20 +1371,14 @@ def _q_stream_dedup_turns(spark, sf_dir):
     the whole backlog (~1.5 days of events) — otherwise originals
     arriving behind an already-advanced watermark would drop as late
     under multi-batch drains (the operator's arrival contract)."""
-    import tempfile
-
     from matrixprofile_spark.streaming.structured import stream_dedup_turns
 
     t = _transcripts(spark, sf_dir).where(
         F.col("conv_id") < "conv-00100"
     ).select("conv_id", "turn_idx", "ts_epoch", "text")
     dupes = t.where(F.col("turn_idx") % 7 == 3)
-    wd = tempfile.mkdtemp(prefix="mp_spark_ddw_")
-    t.unionAll(dupes).write.mode("overwrite").parquet(f"{wd}/src")
-    _STREAM_SEQ[0] += 1
-    return stream_dedup_turns(
-        spark, f"{wd}/src", query_name=f"stream_ddw_{_STREAM_SEQ[0]}",
-        delay="30 days")
+    src, name = _stream_fixture(t.unionAll(dupes), "stream_ddw")
+    return stream_dedup_turns(spark, src, query_name=name, delay="30 days")
 
 
 def _q_stream_mpx_incremental(spark, sf_dir):
@@ -1407,8 +1388,6 @@ def _q_stream_mpx_incremental(spark, sf_dir):
     the profile only over the contiguous prefix, so the final snapshot
     must equal the batch MPX brute-force oracle bit-for-bit at 2
     decimals."""
-    import tempfile
-
     from matrixprofile_spark.streaming.structured import (
         stream_mpx_incremental,
     )
@@ -1418,14 +1397,12 @@ def _q_stream_mpx_incremental(spark, sf_dir):
         "conv_id", F.posexplode("values").alias("idx", "value")
     ).select("conv_id", F.col("idx").cast("long").alias("idx"),
              F.col("value").cast("double").alias("value"))
-    wd = tempfile.mkdtemp(prefix="mp_spark_stampi_")
     # hash-repartition: each file holds a pseudo-random slice of every
     # series, so arrival order is maximally out-of-order
-    pts.repartition(8).write.mode("overwrite").parquet(f"{wd}/src")
-    _STREAM_SEQ[0] += 1
+    src, name = _stream_fixture(pts.repartition(8), "stampi")
     out = stream_mpx_incremental(
-        spark, f"{wd}/src", w=_MPX_W, minlag=_MPX_MINLAG,
-        query_name=f"stampi_{_STREAM_SEQ[0]}", files_per_trigger=2)
+        spark, src, w=_MPX_W, minlag=_MPX_MINLAG, query_name=name,
+        files_per_trigger=2)
     return out.select(
         "conv_id", "idx", F.round("dist", 2).alias("dist_r2"))
 
@@ -1433,16 +1410,11 @@ def _q_stream_mpx_incremental(spark, sf_dir):
 def _q_stream_rollup_1m(spark, sf_dir):
     """raw→1m rollup via Structured Streaming (file source, event-time
     windows, availableNow trigger); must equal the batch rollup oracle."""
-    import tempfile
-
     from matrixprofile_spark.streaming.structured import stream_rollup_1m
 
     ser = _series(spark, sf_dir).where(F.col("conv_id") < "conv-00100")
-    wd = tempfile.mkdtemp(prefix="mp_spark_stream_")
-    ser.write.mode("overwrite").parquet(f"{wd}/src")
-    _STREAM_SEQ[0] += 1
-    return stream_rollup_1m(spark, f"{wd}/src",
-                            query_name=f"stream_r1m_{_STREAM_SEQ[0]}")
+    src, name = _stream_fixture(ser, "stream_r1m")
+    return stream_rollup_1m(spark, src, query_name=name)
 
 
 # -------- training-data pipeline queries (documents / embeddings) --------

@@ -13,7 +13,9 @@ work-aware count (`_grouped`), checks each series against
 MAX_PACKED_POINTS (read on the driver when the plan is built), and
 calls `kernel(key, values, pdf)`; a kernel returns its output frame,
 or None to skip the series (e.g. too short for its window) without
-computing anything.
+computing anything. The two pair operators (`pairwise_mpdist`,
+`ab_join_pairs`) run per pair row instead and apply the same check to
+both series of every pair.
 
 Layout strategy (100 TB scale):
 - `pack_series` first collapses each series to ONE row holding a sorted
@@ -138,6 +140,17 @@ def _packed_guard():
             )
 
     return guard
+
+
+def _guarded_pair(guard, r):
+    """Both packed series of one pair row (``values_a``/``values_b``),
+    each size-checked by ``guard`` before a kernel sees it."""
+    out = []
+    for side in ("a", "b"):
+        values = np.asarray(r[f"values_{side}"], dtype="d")
+        guard(values, (r[f"conv_id_{side}"], r["metric"]))
+        out.append(values)
+    return out
 
 
 def _kernel_parts(df: DataFrame, n_groups: int | None = None) -> int:
@@ -434,12 +447,12 @@ def pairwise_mpdist(
     )
     pairs = a.join(b, (F.col("conv_id_a") < F.col("conv_id_b"))
                    & (F.col("metric") == F.col("metric_b")))
+    guard = _packed_guard()
 
     def fn(pdf):
         rows = []
         for _, r in pdf.iterrows():
-            va = np.asarray(r["values_a"], dtype="d")
-            vb = np.asarray(r["values_b"], dtype="d")
+            va, vb = _guarded_pair(guard, r)
             if len(va) < 2 * w or len(vb) < 2 * w:
                 continue
             d = mpdist(va, vb, w, threshold=threshold) if len(va) >= len(vb) \
@@ -474,11 +487,12 @@ def ab_join_pairs(pairs: DataFrame, w: int) -> DataFrame:
     the reference and are dropped here (cympx.pyx:260-274 sentinel)."""
     from matrixprofile_spark.kernels.mpx import mpx_ab_join
 
+    guard = _packed_guard()
+
     def fn(pdf):
         frames = []
         for _, r in pdf.iterrows():  # one iteration per PAIR, not per point
-            va = np.asarray(r["values_a"], dtype="d")
-            vb = np.asarray(r["values_b"], dtype="d")
+            va, vb = _guarded_pair(guard, r)
             if len(va) < 2 * w or len(vb) < 2 * w:
                 continue
             mp, _, mpb, _ = mpx_ab_join(va, vb, w)

@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-METRICS = ("latency", "token_count")
-
 
 def latency_series(transcripts: DataFrame) -> DataFrame:
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
@@ -63,50 +61,37 @@ def turn_rate_series(transcripts: DataFrame, bucket_s: int = 60) -> DataFrame:
     )
 
 
-def project_series(transcripts: DataFrame, metrics=METRICS) -> DataFrame:
-    """The requested metric series, in the long schema.
+def project_series(transcripts: DataFrame) -> DataFrame:
+    """The latency and token_count series, in the long schema.
 
-    For the default latency+token_count pair the plan is a SINGLE pass:
-    one lag window, then explode of a per-row (metric, value) struct
-    array — the upstream scan (or the synthetic generator's own
-    window-sort) runs once, not once per metric, and the exchange
-    carries only (conv_id, idx, ts_epoch, length(text)) — the projection
-    is pushed below the window shuffle, never the text payload. Other
-    metric combinations fall back to a per-metric union (each branch
-    pruned independently by Catalyst)."""
-    if tuple(metrics) == METRICS:
-        w = Window.partitionBy("conv_id").orderBy("turn_idx")
-        base = transcripts.select(
-            "conv_id",
-            F.col("turn_idx").cast("bigint").alias("idx"),
-            F.col("ts_epoch"),
-            (F.col("ts_epoch") - F.lag("ts_epoch").over(w))
-            .cast("double").alias("_lat"),
-            F.length("text").cast("double").alias("_tok"),
+    The plan is a SINGLE pass: one lag window, then explode of a per-row
+    (metric, value) struct array — the upstream scan (or the synthetic
+    generator's own window-sort) runs once, not once per metric, and the
+    exchange carries only (conv_id, idx, ts_epoch, length(text)) — the
+    projection is pushed below the window shuffle, never the text
+    payload. A single metric (or turn_rate) comes from its own
+    ``*_series`` function."""
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    base = transcripts.select(
+        "conv_id",
+        F.col("turn_idx").cast("bigint").alias("idx"),
+        F.col("ts_epoch"),
+        (F.col("ts_epoch") - F.lag("ts_epoch").over(w))
+        .cast("double").alias("_lat"),
+        F.length("text").cast("double").alias("_tok"),
+    )
+    mv = F.explode(
+        F.array(
+            F.struct(F.lit("latency").alias("metric"),
+                     F.col("_lat").alias("value")),
+            F.struct(F.lit("token_count").alias("metric"),
+                     F.col("_tok").alias("value")),
         )
-        mv = F.explode(
-            F.array(
-                F.struct(F.lit("latency").alias("metric"),
-                         F.col("_lat").alias("value")),
-                F.struct(F.lit("token_count").alias("metric"),
-                         F.col("_tok").alias("value")),
-            )
-        ).alias("mv")
-        return base.select("conv_id", mv, "idx", "ts_epoch").select(
-            "conv_id", F.col("mv.metric").alias("metric"), "idx",
-            "ts_epoch", F.col("mv.value").alias("value"),
-        )
-    parts = []
-    if "latency" in metrics:
-        parts.append(latency_series(transcripts))
-    if "token_count" in metrics:
-        parts.append(token_count_series(transcripts))
-    if "turn_rate" in metrics:
-        parts.append(turn_rate_series(transcripts))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    ).alias("mv")
+    return base.select("conv_id", mv, "idx", "ts_epoch").select(
+        "conv_id", F.col("mv.metric").alias("metric"), "idx",
+        "ts_epoch", F.col("mv.value").alias("value"),
+    )
 
 
 def top_tools(transcripts: DataFrame, bucket_s: int = 3600,

@@ -16,6 +16,15 @@ of the streaming aggregate — they are not order-stable under streaming
 retraction — and are recovered by the batch compactor when the 1m tier is
 rolled into 1h (the cascade re-aggregates from the finer tier, so nothing
 is lost).
+
+Every operator here is ``_source → plan → _drain``: ``_source`` is the
+one parquet file source; the operator builds its plan on it; ``_drain``
+runs the plan to completion (``availableNow``) into the memory sink
+``query_name`` — raw emitted rows stay readable as
+``spark.table(query_name)`` — while pinning the shuffle-partition count
+and a tmpfs checkpoint that it restores and removes whether the query
+returns or fails. Snapshot-emitting stateful operators then keep each
+key's highest-``upd`` snapshot via ``_latest``.
 """
 
 from __future__ import annotations
@@ -32,27 +41,66 @@ SERIES_SCHEMA = (
 )
 
 
-class _state_partitions:
-    """Pin spark.sql.shuffle.partitions for a streaming query's lifetime.
+def _source(spark: SparkSession, schema: str, path: str,
+            files_per_trigger: int = 8) -> DataFrame:
+    """The parquet file source every operator reads: ``schema`` is fixed
+    up front (a stream cannot infer it) and each micro-batch takes at
+    most ``files_per_trigger`` new files."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(path)
+    )
 
-    A stateful stream materializes one state-store instance per shuffle
-    partition in EVERY micro-batch; with the session's batch-tuned
-    count (32-128) and a handful of keys, per-batch state-store
-    open/commit dominates wall time ~10×. The conf is read at query
-    START, so pinning it around .start()/awaitTermination() sizes the
-    state store to the key count without touching later batch plans.
+
+def _drain(out: DataFrame, query_name: str, mode: str,
+           partitions: int = 16) -> DataFrame:
+    """Run ``out`` to the end of its available input (``availableNow``)
+    into the memory sink ``query_name`` with output ``mode``, and return
+    ``spark.table(query_name)``.
+
+    Pins spark.sql.shuffle.partitions to ``partitions`` for the query's
+    lifetime. A stateful stream materializes one state-store instance per
+    shuffle partition in EVERY micro-batch; with the session's
+    batch-tuned count (32-128) and a handful of keys, per-batch
+    state-store open/commit dominates wall time ~10×. The conf is read at
+    query START, so pinning it for the drain sizes the state store to
+    the key count without touching later batch plans.
     (A production job sizes this to its key cardinality once — the
-    partition count is baked into the checkpoint.)"""
+    partition count is baked into the checkpoint.)
 
-    def __init__(self, spark: SparkSession, n: int):
-        self.spark, self.n = spark, n
+    Per-batch state-store commits also fsync the checkpoint, so it goes
+    to tmpfs (/dev/shm) when the host has one. That is RAM, so the
+    directory is removed, and the partition count restored, in a
+    ``finally``: also when the query fails."""
+    spark = out.sparkSession
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    ckpt = (tempfile.mkdtemp(prefix=f"ckpt_{query_name}_", dir="/dev/shm")
+            if os.path.isdir("/dev/shm") else None)
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        wq = (
+            out.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+        )
+        if ckpt is not None:
+            wq = wq.option("checkpointLocation", ckpt)
+        wq.start().awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+        if ckpt is not None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.table(query_name)
 
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
 
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
+def _latest(snapshots: DataFrame, *keys: str) -> DataFrame:
+    """The highest-``upd`` snapshot per ``keys`` — the upsert a
+    production sink keyed by ``keys`` would perform."""
+    w = Window.partitionBy(*keys).orderBy(F.desc("upd"))
+    return (snapshots.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1))
 
 
 def stream_stateful_stats(
@@ -106,37 +154,18 @@ def stream_stateful_stats(
             "vsum": vsum, "vmin": vmin, "vmax": vmax, "sum_sq": ssq,
         }])
 
-    src = (
-        spark.readStream.schema(SERIES_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src_path)
-    )
     snapshots = (
-        src.groupBy("conv_id", "metric")
+        _source(spark, SERIES_SCHEMA, src_path)
+        .groupBy("conv_id", "metric")
         .applyInPandasWithState(
             fn, out_schema, state_schema, "update",
             GroupStateTimeout.NoTimeout,
         )
     )
-    with _state_partitions(spark, 8):
-        q = (
-            snapshots.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    all_snaps = spark.table(query_name)
-    w = F.row_number().over(
-        Window.partitionBy("conv_id", "metric").orderBy(F.desc("upd"))
-    )
-    return (
-        all_snaps.withColumn("_rn", w)
-        .where(F.col("_rn") == 1)
-        .select("conv_id", "metric", "cnt", "vsum", "vmin", "vmax",
-                "sum_sq", (F.col("vsum") / F.col("cnt")).alias("mean"))
-    )
+    all_snaps = _drain(snapshots, query_name, "update", partitions=8)
+    return _latest(all_snaps, "conv_id", "metric").select(
+        "conv_id", "metric", "cnt", "vsum", "vmin", "vmax", "sum_sq",
+        (F.col("vsum") / F.col("cnt")).alias("mean"))
 
 
 def stream_mpx_incremental(
@@ -282,50 +311,50 @@ def stream_mpx_incremental(
             "is_audit": is_audit,
         })
 
-    src = (
-        spark.readStream
-        .schema("conv_id string, idx long, value double")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(src_path)
-    )
     snapshots = (
-        src.groupBy("conv_id")
+        _source(spark, "conv_id string, idx long, value double", src_path,
+                files_per_trigger)
+        .groupBy("conv_id")
         .applyInPandasWithState(
             fn, out_schema, state_schema, "update",
             GroupStateTimeout.NoTimeout,
         )
     )
-    ckpt = None
-    try:
-        with _state_partitions(spark, 8):
-            wq = (
-                snapshots.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-            )
-            # micro-batch wall time is dominated by per-batch state-store
-            # commits; fsync to tmpfs instead of disk when available
-            if os.path.isdir("/dev/shm"):
-                ckpt = tempfile.mkdtemp(prefix=f"ckpt_{query_name}_",
-                                        dir="/dev/shm")
-                wq = wq.option("checkpointLocation", ckpt)
-            q = wq.start()
-            q.awaitTermination()
-    finally:
-        # /dev/shm is RAM — leaking a checkpoint per run leaks tmpfs;
-        # the availableNow drain is complete once awaitTermination returns
-        if ckpt is not None:
-            shutil.rmtree(ckpt, ignore_errors=True)
-    all_snaps = spark.table(query_name)
-    wnd = Window.partitionBy("conv_id", "idx").orderBy(F.desc("upd"))
+    all_snaps = _drain(snapshots, query_name, "update", partitions=8)
     # is_audit rows are gap-fill audits (see docstring), surfaced via
     # spark.table(query_name), not mixed into the profile result
     return (
-        all_snaps.withColumn("_rn", F.row_number().over(wnd))
-        .where(F.col("_rn") == 1)
+        _latest(all_snaps, "conv_id", "idx")
         .where(~F.col("is_audit"))
         .select("conv_id", "idx", "dist")
+    )
+
+
+def _window_rollup(spark: SparkSession, src_path: str, tier_s: int,
+                   delay: str) -> DataFrame:
+    """The streaming raw→``tier_s`` aggregate shared by both emission
+    modes: non-NULL values per (conv_id, metric, event-time window)
+    under a ``delay`` watermark, with the streaming-safe sketch columns
+    (see the module docstring for why first/last are left out)."""
+    v = F.col("value")
+    return (
+        _source(spark, SERIES_SCHEMA, src_path).where(v.isNotNull())
+        .withColumn("ts", F.timestamp_seconds(F.col("ts_epoch")))
+        .withWatermark("ts", delay)
+        .groupBy("conv_id", "metric",
+                 F.window("ts", f"{tier_s} seconds").alias("win"))
+        .agg(
+            F.count(v).alias("cnt"),
+            F.sum(v).alias("vsum"),
+            F.min(v).alias("vmin"),
+            F.max(v).alias("vmax"),
+            F.sum(v * v).alias("sum_sq"),
+        )
+        .select(
+            "conv_id", "metric",
+            F.unix_timestamp(F.col("win.start")).alias("bucket_epoch"),
+            "cnt", "vsum", "vmin", "vmax", "sum_sq",
+        )
     )
 
 
@@ -344,49 +373,8 @@ def stream_rollup_1m(
     final watermark — wrong for a drain-the-backlog run). A production
     continuous job would use append mode + watermark into Iceberg.
     """
-    v = F.col("value")
-    src = (
-        spark.readStream.schema(SERIES_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src_path)
-    )
-    agg = (
-        src.where(v.isNotNull())
-        .withColumn("ts", F.timestamp_seconds(F.col("ts_epoch")))
-        .withWatermark("ts", "1 hour")
-        .groupBy(
-            "conv_id",
-            "metric",
-            F.window("ts", f"{tier_s} seconds").alias("win"),
-        )
-        .agg(
-            F.count(v).alias("cnt"),
-            F.sum(v).alias("vsum"),
-            F.min(v).alias("vmin"),
-            F.max(v).alias("vmax"),
-            F.sum(v * v).alias("sum_sq"),
-        )
-    )
-    with _state_partitions(spark, 16):
-        q = (
-            agg.select(
-                "conv_id",
-                "metric",
-                F.unix_timestamp(F.col("win.start")).alias("bucket_epoch"),
-                "cnt",
-                "vsum",
-                "vmin",
-                "vmax",
-                "sum_sq",
-            )
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(query_name)
+    agg = _window_rollup(spark, src_path, tier_s, "1 hour")
+    return _drain(agg, query_name, "complete")
 
 
 def stream_sessionize(
@@ -410,40 +398,24 @@ def stream_sessionize(
     complete mode + memory sink for the same reason stream_rollup_1m
     does.
     """
-    src = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, ts_epoch long"
-        )
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src_path)
-    )
+    src = _source(spark, "conv_id string, turn_idx long, ts_epoch long",
+                  src_path)
     agg = (
         src.withColumn("ts", F.timestamp_seconds(F.col("ts_epoch")))
         .withWatermark("ts", "1 hour")
-        .groupBy(
-            "conv_id",
-            F.session_window("ts", f"{gap_s} seconds").alias("win"),
-        )
+        .groupBy("conv_id",
+                 F.session_window("ts", f"{gap_s} seconds").alias("win"))
         .agg(
             F.min("ts_epoch").alias("start_ts"),
             F.max("ts_epoch").alias("end_ts"),
             F.count(F.lit(1)).alias("n_turns"),
         )
-    )
-    with _state_partitions(spark, 16):
-        q = (
-            agg.select(
-                "conv_id", "start_ts", "end_ts", "n_turns",
-                (F.col("end_ts") - F.col("start_ts")).alias("span_s"),
-            )
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+        .select(
+            "conv_id", "start_ts", "end_ts", "n_turns",
+            (F.col("end_ts") - F.col("start_ts")).alias("span_s"),
         )
-        q.awaitTermination()
-    return spark.table(query_name)
+    )
+    return _drain(agg, query_name, "complete")
 
 
 def stream_rollup_1m_append(
@@ -477,43 +449,8 @@ def stream_rollup_1m_append(
     wanting exact backlog semantics feed one batch (single file) or a
     time-sliced, mtime-ordered layout.
     """
-    v = F.col("value")
-    src = (
-        spark.readStream.schema(SERIES_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src_path)
-    )
-    agg = (
-        src.where(v.isNotNull())
-        .withColumn("ts", F.timestamp_seconds(F.col("ts_epoch")))
-        .withWatermark("ts", delay)
-        .groupBy(
-            "conv_id",
-            "metric",
-            F.window("ts", f"{tier_s} seconds").alias("win"),
-        )
-        .agg(
-            F.count(v).alias("cnt"),
-            F.sum(v).alias("vsum"),
-            F.min(v).alias("vmin"),
-            F.max(v).alias("vmax"),
-        )
-    )
-    with _state_partitions(spark, 16):
-        q = (
-            agg.select(
-                "conv_id", "metric",
-                F.unix_timestamp(F.col("win.start")).alias("bucket_epoch"),
-                "cnt", "vsum", "vmin", "vmax",
-            )
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(query_name)
+    agg = _window_rollup(spark, src_path, tier_s, delay)
+    return _drain(agg.drop("sum_sq"), query_name, "append")
 
 
 def stream_dedup_turns(
@@ -538,26 +475,13 @@ def stream_dedup_turns(
     backlog's span; a continuous job sizes it to the real redelivery
     horizon.
     """
-    src = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, ts_epoch long, text string"
-        )
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(src_path)
-    )
+    src = _source(
+        spark, "conv_id string, turn_idx long, ts_epoch long, text string",
+        src_path, files_per_trigger)
     out = (
         src.withColumn("ts", F.timestamp_seconds(F.col("ts_epoch")))
         .withWatermark("ts", delay)
         .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
         .select("conv_id", "turn_idx", "ts_epoch", "text")
     )
-    with _state_partitions(spark, 16):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(out, query_name, "append")

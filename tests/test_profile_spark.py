@@ -10,6 +10,7 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.errors import PythonException
+from pyspark.sql import functions as F
 
 from matrixprofile_spark.kernels import workflows as W
 from matrixprofile_spark.kernels.mpdist import mpdist
@@ -142,8 +143,29 @@ def test_short_series_returns_empty(spark, op):
     assert _ROUTED[op](df, _upstream(df)).count() == 0
 
 
-@pytest.mark.parametrize("op", [*sorted(_ROUTED), "salted_hot"])
-def test_kernel_stages_refuse_oversized_series(golden_series, monkeypatch, op):
+def _pairs(series):
+    """ab_join_pairs input: one row per two packed series of a metric."""
+    p = P.pack_series(series)
+    a = p.select(F.col("conv_id").alias("conv_id_a"), "metric",
+                 F.col("values").alias("values_a"))
+    b = p.select(F.col("conv_id").alias("conv_id_b"),
+                 F.col("metric").alias("metric_b"),
+                 F.col("values").alias("values_b"))
+    return a.join(b, (F.col("conv_id_a") < F.col("conv_id_b"))
+                  & (F.col("metric") == F.col("metric_b")))
+
+
+# operators that load two packed series per row, built over two series
+_PAIRED = {
+    "pairwise_mpdist": lambda s: P.pairwise_mpdist(s, 16, metric="value"),
+    "ab_join": lambda s: P.ab_join_pairs(_pairs(s), 16),
+}
+
+
+@pytest.mark.parametrize("op", [*sorted(_ROUTED), "salted_hot",
+                                *sorted(_PAIRED)])
+def test_kernel_stages_refuse_oversized_series(golden_series, two_series,
+                                               monkeypatch, op):
     """Every packed-series kernel stage refuses a series above
     MAX_PACKED_POINTS. The limit is read on the driver when the plan is
     built, so lowering it here reaches the workers; upstream tables are
@@ -152,6 +174,8 @@ def test_kernel_stages_refuse_oversized_series(golden_series, monkeypatch, op):
     monkeypatch.setattr(P, "MAX_PACKED_POINTS", 10)
     if op == "salted_hot":  # every series hot: only the band path runs
         df = salted_mpx_profiles(golden_series, 32, hot_threshold=100, bands=4)
+    elif op in _PAIRED:
+        df = _PAIRED[op](two_series)
     else:
         df = _ROUTED[op](golden_series, pre)
     with pytest.raises(PythonException, match="MAX_PACKED_POINTS=10"):

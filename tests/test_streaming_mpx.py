@@ -223,3 +223,55 @@ def test_dedup_turns_backlog_survives_disordered_multibatch(spark, tmp_path):
                              delay="30 days", files_per_trigger=1)
     got = sorted((r.conv_id, r.turn_idx) for r in out.collect())
     assert got == [("c", 1), ("c", 8), ("c", 9)]
+
+
+
+def _drained(spark, op, value_type, src, name):
+    """Write a 40-point source for one of two operators (a stateless
+    complete-mode aggregate, a stateful update-mode snapshot stream)
+    with ``value`` of ``value_type``, then run it; both declare
+    ``value double``."""
+    from matrixprofile_spark.streaming import structured as S
+
+    cast = str if value_type == "string" else float
+    if op == "rollup_1m":
+        rows = [("c", "m", i, 60 * i, cast(i % 5)) for i in range(40)]
+        schema = "conv_id string, metric string, idx long, ts_epoch long"
+    else:
+        rows = [("c", i, cast(i % 5)) for i in range(40)]
+        schema = "conv_id string, idx long"
+    (spark.createDataFrame(rows, f"{schema}, value {value_type}")
+     .write.mode("overwrite").parquet(src))
+    if op == "rollup_1m":
+        return S.stream_rollup_1m(spark, src, query_name=name)
+    return S.stream_mpx_incremental(spark, src, w=8, minlag=2,
+                                    query_name=name)
+
+
+@pytest.mark.parametrize("op", ["rollup_1m", "mpx_incremental"])
+@pytest.mark.parametrize("outcome", ["returns", "source_fails"])
+def test_drain_restores_partitions_and_removes_checkpoint(
+        spark, tmp_path, op, outcome):
+    """Every stream runs through one drain: whether the query returns
+    or its source fails at runtime (a parquet column whose type
+    contradicts the declared schema), the session's shuffle-partition
+    count is back to its prior value and the query's checkpoint
+    directory is gone."""
+    import glob
+
+    from pyspark.errors import StreamingQueryException
+
+    name = f"t_drain_{op}_{outcome}"
+    src = str(tmp_path / "src")
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        if outcome == "returns":
+            assert _drained(spark, op, "double", src, name).count() > 0
+        else:
+            with pytest.raises(StreamingQueryException):
+                _drained(spark, op, "string", src, name)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+    assert not glob.glob(f"/dev/shm/ckpt_{name}_*")
