@@ -13,6 +13,7 @@ end-to-end including its input.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 import sys
@@ -1303,16 +1304,24 @@ def _q_mpf_roundtrip(spark, sf_dir):
 _STREAM_SEQ = itertools.count(1)
 
 
+@contextlib.contextmanager
 def _stream_fixture(df, tag: str):
     """Write a stream operator's source fixture to a fresh temp dir and
-    return ``(src, query_name)``. The memory sink registers the query
-    name as a session table, so a per-process sequence number keeps
-    repeated runs from sharing one."""
+    yield ``(src, query_name)``; the dir is removed on exit. Stream
+    operators drain into the memory sink and return a table over it, so
+    the source is dead once they return. The memory sink registers the
+    query name as a session table, so a per-process sequence number
+    keeps repeated runs from sharing one."""
+    import shutil
     import tempfile
 
-    src = tempfile.mkdtemp(prefix=f"mp_spark_{tag}_") + "/src"
-    df.write.mode("overwrite").parquet(src)
-    return src, f"{tag}_{next(_STREAM_SEQ)}"
+    wd = tempfile.mkdtemp(prefix=f"mp_spark_{tag}_")
+    try:
+        src = wd + "/src"
+        df.write.mode("overwrite").parquet(src)
+        yield src, f"{tag}_{next(_STREAM_SEQ)}"
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
 
 
 def _q_stream_stateful_stats(spark, sf_dir):
@@ -1322,8 +1331,8 @@ def _q_stream_stateful_stats(spark, sf_dir):
     from matrixprofile_spark.streaming.structured import stream_stateful_stats
 
     ser = _series(spark, sf_dir).where(F.col("conv_id") < "conv-00100")
-    src, name = _stream_fixture(ser, "state_stats")
-    return stream_stateful_stats(spark, src, query_name=name)
+    with _stream_fixture(ser, "state_stats") as (src, name):
+        return stream_stateful_stats(spark, src, query_name=name)
 
 
 def _q_stream_sessionize(spark, sf_dir):
@@ -1335,8 +1344,8 @@ def _q_stream_sessionize(spark, sf_dir):
     t = _transcripts(spark, sf_dir).where(
         F.col("conv_id") < "conv-00100"
     ).select("conv_id", "turn_idx", "ts_epoch")
-    src, name = _stream_fixture(t, "stream_sess")
-    return stream_sessionize(spark, src, query_name=name, gap_s=180)
+    with _stream_fixture(t, "stream_sess") as (src, name):
+        return stream_sessionize(spark, src, query_name=name, gap_s=180)
 
 
 def _q_stream_rollup_1m_append(spark, sf_dir):
@@ -1357,9 +1366,9 @@ def _q_stream_rollup_1m_append(spark, sf_dir):
     )
 
     ser = _series(spark, sf_dir).where(F.col("conv_id") < "conv-00100")
-    src, name = _stream_fixture(ser.coalesce(1), "stream_r1m_app")
-    return stream_rollup_1m_append(spark, src, query_name=name,
-                                   delay="601 seconds")
+    with _stream_fixture(ser.coalesce(1), "stream_r1m_app") as (src, name):
+        return stream_rollup_1m_append(spark, src, query_name=name,
+                                       delay="601 seconds")
 
 
 def _q_stream_dedup_turns(spark, sf_dir):
@@ -1377,8 +1386,9 @@ def _q_stream_dedup_turns(spark, sf_dir):
         F.col("conv_id") < "conv-00100"
     ).select("conv_id", "turn_idx", "ts_epoch", "text")
     dupes = t.where(F.col("turn_idx") % 7 == 3)
-    src, name = _stream_fixture(t.unionAll(dupes), "stream_ddw")
-    return stream_dedup_turns(spark, src, query_name=name, delay="30 days")
+    with _stream_fixture(t.unionAll(dupes), "stream_ddw") as (src, name):
+        return stream_dedup_turns(spark, src, query_name=name,
+                                  delay="30 days")
 
 
 def _q_stream_mpx_incremental(spark, sf_dir):
@@ -1399,10 +1409,10 @@ def _q_stream_mpx_incremental(spark, sf_dir):
              F.col("value").cast("double").alias("value"))
     # hash-repartition: each file holds a pseudo-random slice of every
     # series, so arrival order is maximally out-of-order
-    src, name = _stream_fixture(pts.repartition(8), "stampi")
-    out = stream_mpx_incremental(
-        spark, src, w=_MPX_W, minlag=_MPX_MINLAG, query_name=name,
-        files_per_trigger=2)
+    with _stream_fixture(pts.repartition(8), "stampi") as (src, name):
+        out = stream_mpx_incremental(
+            spark, src, w=_MPX_W, minlag=_MPX_MINLAG, query_name=name,
+            files_per_trigger=2)
     return out.select(
         "conv_id", "idx", F.round("dist", 2).alias("dist_r2"))
 
@@ -1413,8 +1423,8 @@ def _q_stream_rollup_1m(spark, sf_dir):
     from matrixprofile_spark.streaming.structured import stream_rollup_1m
 
     ser = _series(spark, sf_dir).where(F.col("conv_id") < "conv-00100")
-    src, name = _stream_fixture(ser, "stream_r1m")
-    return stream_rollup_1m(spark, src, query_name=name)
+    with _stream_fixture(ser, "stream_r1m") as (src, name):
+        return stream_rollup_1m(spark, src, query_name=name)
 
 
 # -------- training-data pipeline queries (documents / embeddings) --------

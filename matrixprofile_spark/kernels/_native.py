@@ -1,27 +1,39 @@
 """Optional compiled fast path for the MPX streaming-covariance scan.
 
 The reference ships a Cython kernel (cympx.pyx) built at install time;
-this engine's equivalent is a ~30-line C routine compiled once per host
+this engine's equivalent is a small C source compiled once per host
 with the system compiler and loaded via ctypes. The NumPy blocked
 kernel in kernels/mpx.py remains the reference implementation and the
 automatic fallback (no compiler, sandboxed executor, or
 MPX_SPARK_NO_NATIVE=1).
 
-The routine implements the same numeric contract as the NumPy kernel
+The routines implement the same numeric contract as the NumPy kernel
 (mpx.py module docstring): per-diagonal streaming covariance seeded by
-an explicit dot product, df/dg difference-equation updates, strictly-
-greater profile updates in ascending-diagonal order with the col-row
-side written before the offset side. Summation order along a diagonal
-is identical to the NumPy cumsum, so both paths agree to fp rounding of
-the seed dot product.
+an explicit dot product and df/dg difference-equation updates.
+Summation order along a diagonal is identical to the NumPy cumsum, so
+both paths agree to fp rounding of the seed dot product.
+
+The self-join scan (`mpx_self_diags`) is diagonal-blocked: 64
+diagonals (8 GCC vector-extension lanes × 8 vectors, portable C with
+no intrinsics) share one walk over the offsets, each lane keeping its
+own recurrence with the same expressions as a one-diagonal scan, so
+every correlation has the same bits. Profile slots keep the winner of
+a total order: larger correlation; on a tie the smaller diagonal; on
+the same diagonal the column side (neighbour < slot) before the row
+side. That is the winner of the strictly-greater scan in ascending
+diagonals, so results do not depend on the block width. Block tails,
+and bands narrower than a block, run one diagonal at a time through
+the same tie-aware update. The AB-join scan (`mpx_ab_diags`) is still
+one diagonal at a time.
 
 The .so is cached in a user-owned 0700 cache dir keyed by a hash of
-the source + machine + compiler identity, so Spark python workers on
-one host compile at most once (atomic os.replace publish — concurrent
-workers race benignly). Before loading, the cache file's ownership is
-verified (a world-writable shared path would let another local user
-pre-plant a library) and a zero-input self-test call checks the ABI;
-any failure falls back to the NumPy kernel.
+the source + compile flags + machine + compiler identity, so Spark
+python workers on one host compile at most once (atomic os.replace
+publish — concurrent workers race benignly). Before loading, the cache
+file's ownership is verified (a world-writable shared path would let
+another local user pre-plant a library) and a zero-input self-test
+call checks the ABI and the tie rule; any failure falls back to the
+NumPy kernel.
 """
 
 from __future__ import annotations
@@ -36,30 +48,135 @@ import numpy as np
 
 _SRC = r"""
 #include <stdint.h>
+#include <string.h>
 
-/* Matrix-profile diagonal scan: for each diagonal d in [lo, hi), stream
-   the covariance recurrence and fold the Pearson correlation into the
-   running profile on both ends of the pair (o, o+d). */
+/* Matrix-profile diagonal scan over diagonals d in [lo, hi): each
+   diagonal streams its own covariance recurrence and offers the Pearson
+   correlation of the pair (o, o+d) to both profile slots. Diagonals run
+   in blocks of BLOCK = LANES x VECS that share one walk over o; each
+   lane keeps the expressions and order of a one-diagonal scan, so every
+   corr has the same bits, and offer() ranks ties so the winners do not
+   depend on the order the block visits pairs in. */
+
+#define LANES 8
+#define VECS 8
+#define BLOCK (LANES * VECS)
+
+typedef double v8d __attribute__((vector_size(LANES * sizeof(double))));
+typedef int64_t v8l __attribute__((vector_size(LANES * sizeof(int64_t))));
+
+/* Rank of the pair holding slot p with neighbour q: 2d for the column
+   side (q < p), 2d+1 for the row side (q > p). A holder from before
+   this call (no neighbour yet, or a diagonal at or past hi) ranks first,
+   so it keeps the slot on a tie, as a strictly-greater scan would. */
+static inline int64_t held_rank(int64_t p, int64_t q, int64_t hi)
+{
+    if (q < 0) return -1;
+    const int64_t d = q < p ? p - q : q - p;
+    return d >= hi ? -1 : 2 * d + (q > p);
+}
+
+/* Fold pair (p, q) into slot p: a larger corr wins; a tie goes to the
+   smaller rank. */
+static inline void offer(double *mp, int64_t *mpi, int64_t p, int64_t q,
+                         double corr, int64_t rank, int64_t hi)
+{
+    const double cur = mp[p];
+    if (!(corr >= cur)) return;
+    if (corr > cur || rank < held_rank(p, mpi[p], hi)) {
+        mp[p] = corr;
+        mpi[p] = q;
+    }
+}
+
+static double seed(const double *ts, const double *mu, int64_t w, int64_t d)
+{
+    double cov = 0.0;
+    const double mud = mu[d], mu0 = mu[0];
+    for (int64_t k = 0; k < w; k++)
+        cov += (ts[d + k] - mud) * (ts[k] - mu0);
+    return cov;
+}
+
+/* Diagonal d from offset o0 to its end, one offset at a time; cov is
+   the covariance at o0 - 1 (or the seed when o0 == 0). */
+static void diag_tail(const double *sig, const double *df, const double *dg,
+                      int64_t pl, int64_t hi, int64_t d, int64_t o0,
+                      double cov, double *mp, int64_t *mpi)
+{
+    for (int64_t o = o0; o < pl - d; o++) {
+        if (o > 0)
+            cov += df[o] * dg[o + d] + df[o + d] * dg[o];
+        const double corr = cov * sig[o] * sig[o + d];
+        offer(mp, mpi, o + d, o, corr, 2 * d, hi);
+        offer(mp, mpi, o, o + d, corr, 2 * d + 1, hi);
+    }
+}
+
+static inline v8d load(const double *p)
+{
+    v8d v;
+    memcpy(&v, p, sizeof v);
+    return v;
+}
+
+/* Diagonals d0 .. d0+BLOCK-1 together while all are in range (offsets
+   below pl - (d0+BLOCK-1)), then each lane's remainder alone. */
+static void diag_block(const double *ts, const double *mu, const double *sig,
+                       const double *df, const double *dg,
+                       int64_t pl, int64_t w, int64_t hi, int64_t d0,
+                       double *mp, int64_t *mpi)
+{
+    double cv[BLOCK];
+    for (int l = 0; l < BLOCK; l++)
+        cv[l] = seed(ts, mu, w, d0 + l);
+    v8d cov[VECS];
+    memcpy(cov, cv, sizeof cov);
+    const int64_t m = pl - (d0 + BLOCK - 1);
+    for (int64_t o = 0;;) {
+        const double sigo = sig[o], mpo = mp[o];
+        v8d corr[VECS];
+        v8l hit = {0};
+        for (int k = 0; k < VECS; k++) {
+            const int64_t j = o + d0 + k * LANES;
+            corr[k] = cov[k] * sigo * load(sig + j);
+            hit |= (corr[k] >= load(mp + j)) | (corr[k] >= mpo);
+        }
+        int64_t any = 0;
+        for (int l = 0; l < LANES; l++)
+            any |= hit[l];
+        if (any) {
+            double c[BLOCK];
+            memcpy(c, corr, sizeof c);
+            for (int l = 0; l < BLOCK; l++) {
+                const int64_t d = d0 + l;
+                offer(mp, mpi, o + d, o, c[l], 2 * d, hi);
+                offer(mp, mpi, o, o + d, c[l], 2 * d + 1, hi);
+            }
+        }
+        if (++o == m)
+            break;
+        const double dfo = df[o], dgo = dg[o];
+        for (int k = 0; k < VECS; k++) {
+            const int64_t j = o + d0 + k * LANES;
+            cov[k] += dfo * load(dg + j) + load(df + j) * dgo;
+        }
+    }
+    memcpy(cv, cov, sizeof cv);
+    for (int l = 0; l < BLOCK; l++)
+        diag_tail(sig, df, dg, pl, hi, d0 + l, m, cv[l], mp, mpi);
+}
+
 void mpx_self_diags(const double *ts, const double *mu, const double *sig,
                     const double *df, const double *dg,
                     int64_t pl, int64_t w, int64_t lo, int64_t hi,
                     double *mp, int64_t *mpi)
 {
-    for (int64_t d = lo; d < hi; d++) {
-        double cov = 0.0;
-        const double mud = mu[d], mu0 = mu[0];
-        for (int64_t k = 0; k < w; k++)
-            cov += (ts[d + k] - mud) * (ts[k] - mu0);
-        const int64_t m = pl - d;
-        for (int64_t o = 0; o < m; o++) {
-            if (o > 0)
-                cov += df[o] * dg[o + d] + df[o + d] * dg[o];
-            const double corr = cov * sig[o] * sig[o + d];
-            const int64_t j = o + d;
-            if (corr > mp[j]) { mp[j] = corr; mpi[j] = o; }
-            if (corr > mp[o]) { mp[o] = corr; mpi[o] = j; }
-        }
-    }
+    int64_t d = lo;
+    for (; d + BLOCK <= hi; d += BLOCK)
+        diag_block(ts, mu, sig, df, dg, pl, w, hi, d, mp, mpi);
+    for (; d < hi; d++)
+        diag_tail(sig, df, dg, pl, hi, d, 0, seed(ts, mu, w, d), mp, mpi);
 }
 
 /* AB-join one-side scan: diagonals of series a (length pla windows)
@@ -90,6 +207,8 @@ void mpx_ab_diags(const double *a, const double *mua, const double *siga,
 }
 """
 
+_CFLAGS = ("-O3", "-march=native", "-fPIC", "-shared")
+
 _D = ctypes.POINTER(ctypes.c_double)
 _L = ctypes.POINTER(ctypes.c_int64)
 _I64 = ctypes.c_int64
@@ -104,9 +223,10 @@ def _ptr_l(a: np.ndarray):
 
 
 def _cache_tag() -> str:
-    """Source + machine + compiler identity: a binary built for another
-    microarchitecture (VM migration, shared cache volume) or by another
-    compiler gets a different name instead of a SIGILL mid-job."""
+    """Source + flags + machine + compiler identity: a binary built for
+    another microarchitecture (VM migration, shared cache volume), by
+    another compiler or with other flags gets a different name instead
+    of a SIGILL mid-job or a stale library."""
     import platform
 
     try:
@@ -115,7 +235,8 @@ def _cache_tag() -> str:
         ).stdout
     except Exception:
         ccv = b"?"
-    ident = _SRC.encode() + b"|" + platform.machine().encode() + b"|" + ccv
+    ident = b"|".join((_SRC.encode(), " ".join(_CFLAGS).encode(),
+                       platform.machine().encode(), ccv))
     return hashlib.sha256(ident).hexdigest()[:16]
 
 
@@ -138,9 +259,12 @@ def _cache_dir() -> str:
 
 
 def _self_test(lib) -> bool:
-    """Zero-input call: exercises argument marshaling and the store
-    paths (an ABI mismatch shows up as garbage indices or wrong fills)."""
-    pl, w = 6, 2
+    """Zero-input call over one full diagonal block plus a few single
+    diagonals: exercises argument marshaling, both scan paths and the
+    tie rule. Every pair ties at corr 0, so each slot must go to its
+    smallest diagonal, column side first (an ABI mismatch shows up as
+    garbage indices or wrong fills)."""
+    pl, w = 70, 2
     z = np.zeros(pl + w - 1)
     zz = np.zeros(pl)
     mp = np.full(pl, -1.0)
@@ -149,7 +273,9 @@ def _self_test(lib) -> bool:
         _ptr_d(z), _ptr_d(zz), _ptr_d(zz), _ptr_d(zz), _ptr_d(zz),
         pl, w, 1, pl, _ptr_d(mp), _ptr_l(mpi),
     )
-    return bool((mp == 0.0).all() and (mpi >= 0).all() and (mpi < pl).all())
+    want = np.arange(-1, pl - 1)
+    want[0] = 1
+    return bool((mp == 0.0).all() and (mpi == want).all())
 
 
 def _build():
@@ -167,8 +293,7 @@ def _build():
                 with open(src, "w") as f:
                     f.write(_SRC)
                 subprocess.run(
-                    ["cc", "-O3", "-march=native", "-fPIC", "-shared",
-                     "-o", so, src],
+                    ["cc", *_CFLAGS, "-o", so, src],
                     check=True, capture_output=True, timeout=120,
                 )
                 os.replace(so, cached)

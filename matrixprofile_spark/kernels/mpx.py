@@ -96,8 +96,10 @@ def mpx_self_join(
         return finalize_self_join(mp, mpi, w, cross_correlation)
 
     if _native.available():
-        # compiled diagonal scan (kernels/_native.py) — same recurrence
-        # and update order, ~6× the NumPy blocked kernel per core
+        # compiled diagonal-blocked scan (kernels/_native.py): same
+        # recurrence and winners, about 27x the NumPy path below per
+        # core (16,384 points at w=32 on an AVX-512 host: 0.063-0.074 s
+        # against 1.81-1.97 s)
         mu = np.ascontiguousarray(mu)
         sig = np.ascontiguousarray(sig)
         _native.self_diags(ts, mu, sig, df, dg, pl, w, lo, hi, mp, mpi)

@@ -8,6 +8,7 @@ engine's NumPy re-derivations, at the reference's own tolerances.
 from __future__ import annotations
 
 import os
+import shutil
 
 import numpy as np
 import pytest
@@ -488,3 +489,54 @@ def test_native_kernel_matches_numpy(monkeypatch):
     np.testing.assert_allclose(part_n[0], part_p[0], atol=1e-10)
     np.testing.assert_allclose(ab_n[0], ab_p[0], atol=1e-7)
     np.testing.assert_allclose(ab_n[2], ab_p[2], atol=1e-7)
+
+
+def _scan_inputs(kind, n, rng):
+    if kind == "noise":
+        return rng.randn(n)
+    if kind == "walk":
+        return np.cumsum(rng.randn(n))
+    if kind == "periodic":  # exact integer repeats: many exact ties
+        return np.tile(rng.randint(-5, 6, size=7).astype(float), n // 7 + 1)[:n]
+    return rng.randint(0, 3, size=n).astype(float)  # flat windows, ties
+
+
+@pytest.mark.parametrize("kind", ["noise", "walk", "periodic", "alphabet3"])
+def test_native_scan_blocked_equals_one_diagonal_at_a_time(kind):
+    """The compiled scan takes diagonals in vector blocks and resolves
+    ties by rank (corr, then smaller diagonal, then column side). Fed
+    one diagonal per call in ascending order it never forms a block, so
+    it is the plain strictly-greater scan: both must give the same mp
+    bits and pi, on full ranges and on bands whose bounds are not
+    multiples of the block width or are narrower than one block."""
+    import math
+
+    from matrixprofile_spark.kernels import _native
+    from matrixprofile_spark.kernels.mpx import _diffs
+
+    if not _native.available():
+        if shutil.which("cc") and not os.environ.get("MPX_SPARK_NO_NATIVE"):
+            pytest.fail("cc is present but the native scan failed to build "
+                        "or failed its load-time self-test")
+        pytest.skip("no compiler on this host")
+    rng = np.random.RandomState(11)
+    for n, w in ((40, 4), (150, 8), (260, 16), (400, 6), (400, 32)):
+        x = _scan_inputs(kind, n, rng)
+        mu, sig = muinvn(x, w)
+        df, dg = _diffs(x, mu, w)
+        pl = n - w + 1
+        first = int(math.ceil(w / 4.0)) + 1
+        bands = [(first, pl), (first + 13, pl - 5), (first + 3, first + 40),
+                 (pl - 70, pl - 9)]
+        for lo, hi in bands:
+            lo, hi = max(lo, first), min(hi, pl)
+            runs = []
+            for spans in ([(lo, hi)], [(d, d + 1) for d in range(lo, hi)]):
+                mp = np.full(pl, -1.0)
+                mpi = np.full(pl, -1, dtype=np.int64)
+                for a, b in spans:
+                    _native.self_diags(x, mu, sig, df, dg, pl, w, a, b, mp, mpi)
+                runs.append((mp, mpi))
+            (mp_b, pi_b), (mp_1, pi_1) = runs
+            assert np.array_equal(mp_b.view(np.int64), mp_1.view(np.int64)), (n, w, lo, hi)
+            assert np.array_equal(pi_b, pi_1), (n, w, lo, hi)

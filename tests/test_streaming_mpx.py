@@ -9,6 +9,8 @@ asserted directly: the profile must have advanced across >1 update.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -275,3 +277,30 @@ def test_drain_restores_partitions_and_removes_checkpoint(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior)
     assert not glob.glob(f"/dev/shm/ckpt_{name}_*")
+
+
+def test_stream_query_fixtures_removed_after_drain(spark, monkeypatch,
+                                                   tmp_path):
+    """A stream query's source dir is gone once its result is built: the
+    result lives in the memory sink, so the files are dead after the
+    drain. Every mkdtemp call is recorded so the check is not vacuous."""
+    import tempfile
+
+    import __spark_entry__ as E
+
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for build in (E._q_stream_rollup_1m, E._q_stream_mpx_incremental):
+        assert build(spark, "sf0.001").collect()
+    for prefix in ("mp_spark_stream_r1m_", "mp_spark_stampi_"):
+        assert any(os.path.basename(p).startswith(prefix) for p in made)
+    assert not [p for p in made if os.path.exists(p)]
+    assert not list(tmp_path.glob("mp_spark_stream_r1m_*"))
+    assert not list(tmp_path.glob("mp_spark_stampi_*"))
