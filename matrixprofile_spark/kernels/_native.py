@@ -32,8 +32,8 @@ python workers on one host compile at most once (atomic os.replace
 publish — concurrent workers race benignly). Before loading, the cache
 file's ownership is verified (a world-writable shared path would let
 another local user pre-plant a library) and a zero-input self-test
-call checks the ABI and the tie rule; any failure falls back to the
-NumPy kernel.
+call checks the ABI and the tie rule. Any failure falls back to the
+NumPy kernel; its reason is kept in BUILD_ERROR and warned once.
 """
 
 from __future__ import annotations
@@ -43,6 +43,7 @@ import hashlib
 import os
 import subprocess
 import tempfile
+import warnings
 
 import numpy as np
 
@@ -278,47 +279,61 @@ def _self_test(lib) -> bool:
     return bool((mp == 0.0).all() and (mpi == want).all())
 
 
-def _build():
-    if os.environ.get("MPX_SPARK_NO_NATIVE"):
-        return None
-    try:
-        cached = os.path.join(_cache_dir(), f"mpx_native_{_cache_tag()}.so")
-    except Exception:
-        return None
+def _load():
+    """Compile (once per cache tag), verify and load the library; raises
+    with the reason on any failure."""
+    cached = os.path.join(_cache_dir(), f"mpx_native_{_cache_tag()}.so")
     if not os.path.exists(cached):
-        try:
-            with tempfile.TemporaryDirectory() as td:
-                src = os.path.join(td, "mpx_native.c")
-                so = os.path.join(td, "mpx_native.so")
-                with open(src, "w") as f:
-                    f.write(_SRC)
-                subprocess.run(
-                    ["cc", *_CFLAGS, "-o", so, src],
-                    check=True, capture_output=True, timeout=120,
-                )
-                os.replace(so, cached)
-        except Exception:
-            return None
+        with tempfile.TemporaryDirectory() as td:
+            src = os.path.join(td, "mpx_native.c")
+            so = os.path.join(td, "mpx_native.so")
+            with open(src, "w") as f:
+                f.write(_SRC)
+            cc = subprocess.run(["cc", *_CFLAGS, "-o", so, src],
+                                capture_output=True, timeout=120)
+            if cc.returncode != 0:
+                raise RuntimeError(
+                    f"cc exited {cc.returncode}: "
+                    f"{cc.stderr.decode(errors='replace')[-2000:]}")
+            os.replace(so, cached)
+    if os.stat(cached).st_uid != os.getuid():
+        raise RuntimeError(f"{cached} is not owned by this user")
+    lib = ctypes.CDLL(cached)
+    lib.mpx_self_diags.argtypes = [
+        _D, _D, _D, _D, _D,
+        _I64, _I64, _I64, _I64,
+        _D, _L,
+    ]
+    lib.mpx_self_diags.restype = None
+    lib.mpx_ab_diags.argtypes = [
+        _D, _D, _D, _D, _D, _D, _D, _D, _D, _D,
+        _I64, _I64, _I64,
+        _D, _L, _D, _L,
+    ]
+    lib.mpx_ab_diags.restype = None
+    if not _self_test(lib):
+        raise RuntimeError(f"{cached} failed its load-time self-test")
+    return lib
+
+
+# why the library is not loaded (None while it is)
+BUILD_ERROR: str | None = None
+
+
+def _build():
+    """The loaded library, or None. Any failure other than the
+    MPX_SPARK_NO_NATIVE opt-out is kept in BUILD_ERROR and warned once
+    per process: the NumPy fallback is correct but far slower."""
+    global BUILD_ERROR
+    if os.environ.get("MPX_SPARK_NO_NATIVE"):
+        BUILD_ERROR = "MPX_SPARK_NO_NATIVE is set"
+        return None
     try:
-        if os.stat(cached).st_uid != os.getuid():
-            return None
-        lib = ctypes.CDLL(cached)
-        lib.mpx_self_diags.argtypes = [
-            _D, _D, _D, _D, _D,
-            _I64, _I64, _I64, _I64,
-            _D, _L,
-        ]
-        lib.mpx_self_diags.restype = None
-        lib.mpx_ab_diags.argtypes = [
-            _D, _D, _D, _D, _D, _D, _D, _D, _D, _D,
-            _I64, _I64, _I64,
-            _D, _L, _D, _L,
-        ]
-        lib.mpx_ab_diags.restype = None
-        if not _self_test(lib):
-            return None
-        return lib
-    except Exception:
+        return _load()
+    except Exception as exc:
+        BUILD_ERROR = f"{type(exc).__name__}: {exc}"
+        warnings.warn("native MPX kernel not loaded, using the NumPy "
+                      f"kernel: {BUILD_ERROR}", RuntimeWarning, stacklevel=2)
         return None
 
 

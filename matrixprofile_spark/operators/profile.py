@@ -17,6 +17,13 @@ computing anything. The two pair operators (`pairwise_mpdist`,
 `ab_join_pairs`) run per pair row instead and apply the same check to
 both series of every pair.
 
+`_kernel_stage` records each stage it plans (weakly, by output
+DataFrame). `with_discoveries` over a recorded per-series profile
+stage on the same source replaces both stages with one fused stage:
+the profile kernel and discovery run in one task, with no join back to
+the series and no second exchange. Profiles from anywhere else (salted,
+SKIMP worklist, streaming, stored or transformed tables) take the join.
+
 Layout strategy (100 TB scale):
 - `pack_series` first collapses each series to ONE row holding a sorted
   value array (shuffle on (conv_id, metric) — the only raw-data shuffle
@@ -33,6 +40,7 @@ Layout strategy (100 TB scale):
 from __future__ import annotations
 
 import math
+import weakref
 
 import numpy as np
 import pandas as pd
@@ -177,6 +185,12 @@ def _grouped(src: DataFrame, *cols: str, n_groups: int | None = None):
     return src.repartition(_kernel_parts(src, n_groups), *cols).groupBy(*cols)
 
 
+# output DataFrame -> (src, keys, schema, kernel, n_groups) of every
+# _kernel_stage, so with_discoveries can fuse into the stage that made
+# its profiles; weak keys keep no DataFrame alive
+_STAGES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def _kernel_stage(src: DataFrame, keys, schema: str, kernel,
                   n_groups: int | None = None) -> DataFrame:
     """One grouped kernel stage over packed-series rows: ``kernel(key,
@@ -192,7 +206,9 @@ def _kernel_stage(src: DataFrame, keys, schema: str, kernel,
         out = kernel(key, values, pdf)
         return pd.DataFrame() if out is None else out
 
-    return _grouped(src, *keys, n_groups=n_groups).applyInPandas(fn, schema)
+    out = _grouped(src, *keys, n_groups=n_groups).applyInPandas(fn, schema)
+    _STAGES[out] = (src, keys, schema, kernel, n_groups)
+    return out
 
 
 _SERIES = ("conv_id", "metric")
@@ -351,20 +367,37 @@ def with_discoveries(
     motif argmin scans (see kernels.discover.top_k_motifs) so picks on
     exact-duplicate windows are fp-noise-independent.
 
-    Joins profiles back to the packed series (motifs re-query the raw
-    values via MASS, top_k_motifs.py:251) — a broadcast-friendly equi
-    join on the series key, then one grouped kernel per (series, w).
     Engine default ez = ceil(w/4): the reference's own dict reports
     ez=0 for MPX self-joins (mpx.py:91 quirk) which degenerates its
-    motif search; pass ez_override=0 for strict parity."""
-    src = series if packed else pack_series(series)
-    joined = profiles.join(src, ["conv_id", "metric"])
+    motif search; pass ez_override=0 for strict parity.
 
-    def kernel(key, values, pdf):
-        row = pdf.iloc[0]
-        mp = np.asarray(row["mp"], dtype="d")
-        pi = np.asarray(row["pi"], dtype="int64")
-        w = int(row["w"])
+    Fused path: when ``profiles`` is exactly the output of a per-series
+    profile stage (mpx/stomp/scrimp_profiles, or skimp_profiles with
+    windows=None) over this same source — the same packed DataFrame, or
+    ``pack_series`` of the same series (``sameSemantics``) — profile and
+    discovery run as ONE kernel stage grouped like the profile stage:
+    the profile kernel, then one discovery row per profile row, on the
+    values the task already holds (the reference's analyze/compute in
+    one call, kernels/workflows.py). No join, no second exchange.
+
+    Join path: any other profile table (salted, SKIMP worklist,
+    streaming, stored, filtered or ``localCheckpoint``ed profiles) is
+    joined back to the packed series on the series key (motifs re-query
+    the raw values via MASS, top_k_motifs.py:251), then one grouped
+    kernel per (series, w).
+
+    A query that reads the profile table again after discovery
+    (global_top_discords / global_top_motifs) runs the profile kernel in
+    both branches, as the join path did (its plan held the mpx stage
+    twice); the fused plan is one Python stage shorter. Measured faster
+    at sf0.1 and on 8 × 16,384-point series (see global_top_discords).
+    ``localCheckpoint`` the profiles first to run the kernel once."""
+    src = series if packed else pack_series(series)
+
+    def _discover_row(key, values, prof_row) -> dict:
+        mp = np.asarray(prof_row["mp"], dtype="d")
+        pi = np.asarray(prof_row["pi"], dtype="int64")
+        w = int(prof_row["w"])
         ez = ez_override if ez_override is not None else int(np.ceil(w / 4.0))
         disc = D.top_k_discords(mp, w, ez=ez, k=k_discords)
         mot = D.top_k_motifs(values, mp, pi, w, ez=ez, k=k_motifs,
@@ -372,14 +405,34 @@ def with_discoveries(
                              zero_eps=zero_eps)
         cac = D.fluss(pi, w)
         reg = D.extract_regimes(cac, w) if len(cac) > 10 * w else np.array([], dtype="int64")
-        return pd.DataFrame([{
+        return {
             "conv_id": key[0], "metric": key[1], "w": w,
             "discords": disc,
             "motif_pairs": [np.asarray(m["motifs"], dtype="int64") for m in mot],
             "motif_neighbors": [np.asarray(m["neighbors"], dtype="int64") for m in mot],
             "regimes": reg,
-        }])
+        }
 
+    stage = _STAGES.get(profiles)
+    if stage is not None:
+        p_src, p_keys, p_schema, p_kernel, p_groups = stage
+        if (p_keys == _SERIES and p_schema == PROFILE_SCHEMA
+                and (p_src is src or p_src.sameSemantics(src))):
+
+            def fused(key, values, pdf):
+                prof = p_kernel(key, values, pdf)
+                if prof is None:
+                    return None
+                return pd.DataFrame([_discover_row(key, values, r)
+                                     for _, r in prof.iterrows()])
+
+            return _kernel_stage(src, _SERIES, DISCOVERY_SCHEMA, fused,
+                                 p_groups)
+
+    def kernel(key, values, pdf):
+        return pd.DataFrame([_discover_row(key, values, pdf.iloc[0])])
+
+    joined = profiles.join(src, ["conv_id", "metric"])
     return _kernel_stage(joined, (*_SERIES, "w"), DISCOVERY_SCHEMA, kernel,
                          n_groups)
 
@@ -709,7 +762,14 @@ def global_top_motifs(discoveries: DataFrame, profiles: DataFrame,
     and the other side's mp is ≤ it, so greatest(mp[f], mp[s]) recovers
     it without knowing which endpoint won. ``zero_eps`` mirrors
     with_discoveries' near-zero clamp so ordering matches the kernel's
-    motif ranking exactly."""
+    motif ranking exactly.
+
+    When ``discoveries`` came from the fused with_discoveries stage, the
+    profile kernel runs there and again for ``profiles`` here (the join
+    path ran it twice too). bench_extra global_motifs_top10 at sf0.1,
+    min of 6 reps, four interleaved runs: 2.07–2.36 s with the join
+    path, 1.86–2.28 s fused. ``localCheckpoint`` the profiles first to
+    run the kernel once."""
     exploded = discoveries.select(
         "conv_id", "metric", "w", F.explode("motif_pairs").alias("pair")
     ).select(
@@ -736,7 +796,15 @@ def global_top_motifs(discoveries: DataFrame, profiles: DataFrame,
 def global_top_discords(discoveries: DataFrame, profiles: DataFrame, k: int = 10) -> DataFrame:
     """Cross-conversation top-k discords: explode per-series discords,
     look up their distances, TakeOrderedAndProject over the whole table
-    (SURVEY.md §2.6 'global top-k' mapping)."""
+    (SURVEY.md §2.6 'global top-k' mapping).
+
+    When ``discoveries`` came from the fused with_discoveries stage, the
+    profile kernel runs there and again for ``profiles`` here (the join
+    path ran it twice too). Min of 6 reps, interleaved runs, 4-core
+    host: bench_extra global_discords_top10 at sf0.1 2.29–2.41 s with
+    the join path, 2.04–2.15 s fused; 8 × 16,384-point series at w=32,
+    collected, 2.27 / 2.63 s joined, 1.92 / 2.10 s fused.
+    ``localCheckpoint`` the profiles first to run the kernel once."""
     exploded = discoveries.select(
         "conv_id", "metric", "w", F.explode("discords").alias("idx")
     )

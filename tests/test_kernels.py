@@ -464,15 +464,26 @@ def test_pmp_discords_and_motifs(sampledata):
     assert all(len(m["motifs"]) == 2 for m in p["motifs"])
 
 
+def _require_native():
+    """The loaded native module. Skips only where no library is expected
+    (no cc, or the MPX_SPARK_NO_NATIVE opt-out); otherwise a library that
+    failed to build, load or self-test fails the test with its reason."""
+    from matrixprofile_spark.kernels import _native
+
+    if not _native.available():
+        if shutil.which("cc") is None or os.environ.get("MPX_SPARK_NO_NATIVE"):
+            pytest.skip("no compiler on this host, or MPX_SPARK_NO_NATIVE set")
+        pytest.fail(f"native MPX kernel did not load: {_native.BUILD_ERROR}")
+    return _native
+
+
 def test_native_kernel_matches_numpy(monkeypatch):
     """Compiled diagonal scan vs the NumPy blocked kernel: same mp to fp
     rounding of the seed dot product, on self-join, diag_range partials,
     and both AB-join sides."""
-    from matrixprofile_spark.kernels import _native
     from matrixprofile_spark.kernels import mpx as M
 
-    if not _native.available():
-        pytest.skip("no compiler on this host")
+    _require_native()
     rng = np.random.RandomState(7)
     x = np.cumsum(rng.randn(3000))
     y = np.cumsum(rng.randn(2200))
@@ -511,14 +522,9 @@ def test_native_scan_blocked_equals_one_diagonal_at_a_time(kind):
     multiples of the block width or are narrower than one block."""
     import math
 
-    from matrixprofile_spark.kernels import _native
     from matrixprofile_spark.kernels.mpx import _diffs
 
-    if not _native.available():
-        if shutil.which("cc") and not os.environ.get("MPX_SPARK_NO_NATIVE"):
-            pytest.fail("cc is present but the native scan failed to build "
-                        "or failed its load-time self-test")
-        pytest.skip("no compiler on this host")
+    _native = _require_native()
     rng = np.random.RandomState(11)
     for n, w in ((40, 4), (150, 8), (260, 16), (400, 6), (400, 32)):
         x = _scan_inputs(kind, n, rng)

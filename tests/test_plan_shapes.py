@@ -245,3 +245,21 @@ def test_parquet_scan_prunes_and_pushes_down(spark, tmp_path):
     assert names == {"doc_id", "text"}, cols  # lang/extra pruned
     assert "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,100)]" \
         in scan, scan
+
+
+def test_discoveries_fuse_into_the_profile_stage(ser):
+    """with_discoveries over an mpx_profiles stage on the same packed
+    source plans ONE Python stage behind one exchange: profile and
+    discovery run in the same task, with no join back to the series.
+    Profiles with no recorded stage (here localCheckpoint'ed) keep the
+    join."""
+    from matrixprofile_spark.operators import profile as P
+
+    s = P.pack_series(ser).localCheckpoint()
+    prof = P.mpx_profiles(s, 16, packed=True)
+    plan = _plan(P.with_discoveries(prof, s, packed=True))
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan
+    joined = _plan(P.with_discoveries(prof.localCheckpoint(), s, packed=True))
+    assert "Join" in joined, joined

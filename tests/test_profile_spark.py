@@ -252,3 +252,88 @@ def test_global_top_discords(two_series):
     top = P.global_top_discords(disc, profs, k=3).collect()
     assert len(top) == 3
     assert top[0]["distance"] >= top[-1]["distance"]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _fused_and_joined(prof, series, **kw):
+    """with_discoveries over a recorded profile stage (the fused path)
+    and over the same profiles localCheckpoint()ed, which have no
+    recorded stage (the join path)."""
+    fused = P.with_discoveries(prof, series, **kw)
+    joined = P.with_discoveries(prof.localCheckpoint(), series, **kw)
+    assert "Join" not in _plan(fused), _plan(fused)
+    assert "Join" in _plan(joined), _plan(joined)
+    return fused, joined
+
+
+def _assert_same_rows(fused, joined):
+    a, b = sorted(fused.collect()), sorted(joined.collect())
+    assert a, "no discoveries"
+    assert a == b  # int arrays: list equality is exact
+
+
+# profile builders over a packed (packed=True) or raw series table;
+# mpx also runs over raw input, where both sides pack separately
+_FUSABLE = {
+    "mpx": lambda s, pk: P.mpx_profiles(s, 32, packed=pk),
+    "mpx_unpacked": lambda s, pk: P.mpx_profiles(s, 32),
+    "stomp": lambda s, pk: P.stomp_profiles(s, 32, packed=pk),
+    "scrimp": lambda s, pk: P.scrimp_profiles(s, 32, seed=3, packed=pk),
+    "skimp_sweep": lambda s, pk: P.skimp_profiles(s, packed=pk),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_FUSABLE))
+def test_fused_discoveries_equal_join_path(golden_series, two_series, op):
+    """The fused profile→discovery stage gives the join path's rows,
+    including the SKIMP windows=None sweep's several w rows per series
+    (golden only: the uniform-noise series has no sweep window)."""
+    series = golden_series if op == "skimp_sweep" else two_series
+    if op == "mpx_unpacked":
+        src, pk = series, False
+    else:
+        src, pk = P.pack_series(series).localCheckpoint(), True
+    prof = _FUSABLE[op](src, pk)
+    fused, joined = _fused_and_joined(prof, src, packed=pk)
+    _assert_same_rows(fused, joined)
+    if op == "skimp_sweep":
+        assert fused.select("w").distinct().count() > 1
+
+
+@pytest.mark.parametrize("kw", [{"ez_override": 0}, {"zero_eps": 1e-4}],
+                         ids=["ez_override", "zero_eps"])
+def test_fused_discoveries_pass_options(two_series, kw):
+    prof = P.mpx_profiles(two_series, 32)
+    _assert_same_rows(*_fused_and_joined(prof, two_series, **kw))
+
+
+def _walk(spark, nan_at):
+    v = np.cumsum(np.random.RandomState(9).randn(400))
+    v[nan_at] = np.nan
+    pdf = pd.DataFrame({"conv_id": "nan", "metric": "value",
+                        "idx": np.arange(400, dtype="int64"),
+                        "ts_epoch": 60 * np.arange(400, dtype="int64"),
+                        "value": v})
+    return spark.createDataFrame(pdf)
+
+
+def test_fused_discoveries_nan_mid_series(spark):
+    """Known MPX defect (ROADMAP direction 1): a NaN poisons the moving
+    statistics, so part of pi is -1 and the picks are silently wrong.
+    Fusion must neither hide nor change that: both paths agree."""
+    s = _walk(spark, 200)
+    prof = P.mpx_profiles(s, 16)
+    assert -1 in prof.collect()[0]["pi"]
+    _assert_same_rows(*_fused_and_joined(prof, s))
+
+
+def test_fused_discoveries_nan_first_value_raises(spark):
+    """A NaN first value makes discovery raise ValueError on both paths
+    (perfbench's known_failure mpx_null_first_value counts it)."""
+    s = _walk(spark, 0)
+    for df in _fused_and_joined(P.mpx_profiles(s, 16), s):
+        with pytest.raises(PythonException, match="ValueError"):
+            df.collect()
