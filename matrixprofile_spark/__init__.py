@@ -25,7 +25,17 @@ No code is copied from the reference; file:line citations in docstrings
 point at the behavior being matched.
 """
 
+from pyspark import TaskContext
+
 from matrixprofile_spark.session import get_spark  # noqa: F401
 from matrixprofile_spark.plans.compute import analyze, compute  # noqa: F401
 
 __version__ = "0.1.0"
+
+# inside a Python worker (every engine UDF's closure imports the engine):
+# stop each later task on this worker from re-reading every zip archive
+# on its path (see _zipstamp)
+if TaskContext.get() is not None:
+    from matrixprofile_spark import _zipstamp
+
+    _zipstamp.install()

@@ -51,7 +51,11 @@ from matrixprofile_spark.kernels import discover as D
 from matrixprofile_spark.kernels import workflows as W
 from matrixprofile_spark.kernels.mpdist import mpdist
 from matrixprofile_spark.kernels.scrimp import scrimp_plus_plus
-from matrixprofile_spark.kernels.skimp import skimp
+from matrixprofile_spark.kernels.skimp import (
+    NoSolutionPossible,
+    maximum_subsequence,
+    skimp,
+)
 from matrixprofile_spark.kernels.snippets import snippets as snippets_kernel
 from matrixprofile_spark.kernels.stomp import stomp
 
@@ -167,13 +171,17 @@ def _kernel_parts(df: DataFrame, n_groups: int | None = None) -> int:
     Kernel stages are CPU-bound with O(n²) flops per O(n) bytes, so
     AQE's byte-based coalescing would under-partition them; instead the
     operators repartition by the group key with an explicit count
-    (REPARTITION_BY_NUM — AQE honors it), fine-grained enough that
-    multi-wave scheduling packs uneven groups without stragglers.
+    (REPARTITION_BY_NUM — AQE honors it). With many groups per task,
+    multi-wave scheduling evens out uneven groups.
 
     When the caller knows the group count (a chosen fixture, a bounded
     worklist), partitions beyond it are guaranteed-empty tasks; bound
     the count by ``max(cores, n_groups)`` so few-group jobs don't pay
-    8×-cores empty-task scheduling per chained stage."""
+    8×-cores empty-task scheduling per chained stage. With few groups
+    the hash placement itself is uneven and stragglers remain: the 8
+    series keys of the motif_scan benchmark hash into 8 partitions as
+    ``[1, 2, 1, 2, 0, 0, 0, 2]`` (5 busy tasks, 2 waves on 4 cores) and
+    into 4 as ``[1, 2, 1, 4]``."""
     cores = df.sparkSession.sparkContext.defaultParallelism
     if n_groups is not None:
         return min(cores * 8, max(cores, n_groups))
@@ -310,8 +318,11 @@ def skimp_profiles(
     def sweep(key, values, pdf):  # windows=None: in-kernel doubling search
         if len(values) < 16:
             return None
-        prof = W.compute(values, windows=None, threshold=threshold,
-                         sample_pct=sample_pct, seed=seed)
+        try:
+            prof = W.compute(values, windows=None, threshold=threshold,
+                             sample_pct=sample_pct, seed=seed)
+        except NoSolutionPossible:  # no window under threshold: skip
+            return None
         rows = []
         for i, w in enumerate(prof["windows"]):
             mp = prof["pmp"][i]
@@ -596,11 +607,6 @@ def max_subsequence_windows(
     """Per-series maximum_subsequence window search (skimp.py:246-384):
     a driver-free variant — the doubling/refine loop runs inside each
     series' kernel task instead of as a driver loop issuing jobs."""
-    from matrixprofile_spark.kernels.skimp import (
-        NoSolutionPossible,
-        maximum_subsequence,
-    )
-
     src = series if packed else pack_series(series)
 
     def kernel(key, values, pdf):

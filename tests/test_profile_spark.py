@@ -95,6 +95,17 @@ def test_skimp_profiles_window_sweep(two_series, sampledata):
     )
 
 
+def test_skimp_sweep_skips_series_without_window(two_series, golden_series):
+    """windows=None skips a series whose doubling search finds no window
+    under the threshold (NoSolutionPossible) instead of failing the job:
+    the 400-point uniform-noise series has none, the golden one keeps
+    its rows."""
+    rows = P.skimp_profiles(two_series).collect()
+    assert {r["conv_id"] for r in rows} == {"golden"}
+    golden = P.skimp_profiles(golden_series).collect()
+    assert sorted(r["w"] for r in rows) == sorted(r["w"] for r in golden)
+
+
 def test_worklist_short_series_returns_empty(spark):
     """A worklist row whose series is too short for its window must be
     skipped (zero rows), not crash inside a w=4 kernel it was never
@@ -287,15 +298,14 @@ _FUSABLE = {
 
 
 @pytest.mark.parametrize("op", sorted(_FUSABLE))
-def test_fused_discoveries_equal_join_path(golden_series, two_series, op):
+def test_fused_discoveries_equal_join_path(two_series, op):
     """The fused profile→discovery stage gives the join path's rows,
     including the SKIMP windows=None sweep's several w rows per series
-    (golden only: the uniform-noise series has no sweep window)."""
-    series = golden_series if op == "skimp_sweep" else two_series
+    (and its skip of the uniform-noise series, which has no window)."""
     if op == "mpx_unpacked":
-        src, pk = series, False
+        src, pk = two_series, False
     else:
-        src, pk = P.pack_series(series).localCheckpoint(), True
+        src, pk = P.pack_series(two_series).localCheckpoint(), True
     prof = _FUSABLE[op](src, pk)
     fused, joined = _fused_and_joined(prof, src, packed=pk)
     _assert_same_rows(fused, joined)
