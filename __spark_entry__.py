@@ -13,10 +13,13 @@ end-to-end including its input.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import itertools
 import os
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,6 +60,15 @@ def entry(spark: SparkSession) -> DataFrame:
     return rollup.with_derived_stats(tiers["1h"])
 
 
+def _fixture_dir(tag: str) -> str:
+    """A fresh ``mp_spark_<tag>_*`` temp dir for a query's on-disk
+    fixture, removed when the interpreter exits: the query's DataFrame
+    reads it lazily, so it must outlive the builder."""
+    wd = tempfile.mkdtemp(prefix=f"mp_spark_{tag}_")
+    atexit.register(shutil.rmtree, wd, ignore_errors=True)
+    return wd
+
+
 # ----------------------------------------------------------------- queries
 
 
@@ -71,12 +83,10 @@ def _q_transcripts_csv_roundtrip(spark, sf_dir):
     """CSV export → explicit-schema CSV ingestion (sources/ingest,
     datasets.py:48-219 analog) — must reproduce the transcript table
     bit-for-bit, so it shares the generator oracle."""
-    import tempfile
-
     from matrixprofile_spark.sources import ingest
 
     t = _transcripts(spark, sf_dir)
-    wd = tempfile.mkdtemp(prefix="mp_spark_csv_")
+    wd = _fixture_dir("csv")
     ingest.write_transcripts_csv(t, f"{wd}/t")
     back = ingest.read_transcripts_csv(spark, f"{wd}/t")
     return back.select(
@@ -183,10 +193,8 @@ def _q_cascade_fused(spark, sf_dir):
     equal the per-tier batch oracles. This is the physical path the
     scaling probe times, oracle-checked end-to-end through its actual
     write+read."""
-    import tempfile
-
     ser = _series(spark, sf_dir)
-    wd = tempfile.mkdtemp(prefix="mp_spark_cascade_")
+    wd = _fixture_dir("cascade")
     rollup.materialize_cascade(ser, f"{wd}/tiers", files_per_tier=8)
     return (
         spark.read.parquet(f"{wd}/tiers")
@@ -591,8 +599,7 @@ def _q_mass2_w16(spark, sf_dir):
 
     chosen = _chosen_token_series(spark, sf_dir)
 
-    def fn(key, pdf):
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
+    def kernel(key, values, pdf):
         dp = np.real(mass2(values, values[:_MPX_W]))
         return pd.DataFrame({
             "conv_id": key[0],
@@ -600,9 +607,9 @@ def _q_mass2_w16(spark, sf_dir):
             "dist_r2": np.round(np.maximum(dp, 0.0), 2),
         })
 
-    return chosen.groupBy("conv_id", "metric").applyInPandas(
-        fn, "conv_id string, idx bigint, dist_r2 double"
-    )
+    return P._kernel_stage(chosen, P._SERIES,
+                           "conv_id string, idx bigint, dist_r2 double",
+                           kernel, n_groups=5)
 
 
 def _discoveries(chosen, w: int, **kw):
@@ -850,12 +857,10 @@ def _q_skimp_memo(spark, sf_dir):
     store at windows [8,16] ("killed" before 32), then resume widening
     to [8,16,32] — only the missing keys compute. The resumed store must
     equal the from-scratch sweep, so it shares the skimp_pmp oracle."""
-    import tempfile
-
     from matrixprofile_spark.streaming import incremental as INC
 
     chosen = _chosen_token_series(spark, sf_dir)
-    wd = tempfile.mkdtemp(prefix="mp_spark_skimp_memo_")
+    wd = _fixture_dir("skimp_memo")
     INC.run_skimp_memo(spark, chosen, wd, windows=[8, 16], n_groups=10)
     INC.run_skimp_memo(spark, chosen, wd, windows=[8, 16, 32], n_groups=15)
     return _mp_r2(INC.read_skimp_store(spark, wd), "conv_id", "metric", "w")
@@ -1265,8 +1270,6 @@ def _q_profile_json_roundtrip(spark, sf_dir):
     """read_profiles_json(write_profiles_json(mpx profiles)) — the
     reference-JSON io layer must preserve every profile value, so the
     round-tripped table shares the MPX brute-force oracle."""
-    import tempfile
-
     from matrixprofile_spark.io.json_io import (
         read_profiles_json,
         write_profiles_json,
@@ -1274,7 +1277,7 @@ def _q_profile_json_roundtrip(spark, sf_dir):
 
     chosen = _chosen_token_series(spark, sf_dir)
     prof = P.mpx_profiles(chosen, _MPX_W, packed=True, n_groups=5)
-    path = tempfile.mkdtemp(prefix="mp_spark_json_") + "/profiles"
+    path = _fixture_dir("json") + "/profiles"
     write_profiles_json(prof, path)
     back = read_profiles_json(spark, path)
     return _mp_r2(back, "conv_id")
@@ -1286,8 +1289,6 @@ def _q_mpf_roundtrip(spark, sf_dir):
     proto_messages.proto:69-111) must preserve every profile value
     bit-exactly, so the round-tripped table shares the MPX brute-force
     oracle (same pattern as profile_json_roundtrip)."""
-    import tempfile
-
     from matrixprofile_spark.io.mpf import (
         read_profiles_mpf,
         write_profiles_mpf,
@@ -1295,7 +1296,7 @@ def _q_mpf_roundtrip(spark, sf_dir):
 
     chosen = _chosen_token_series(spark, sf_dir)
     prof = P.mpx_profiles(chosen, _MPX_W, packed=True, n_groups=5)
-    path = tempfile.mkdtemp(prefix="mp_spark_mpf_") + "/profiles"
+    path = _fixture_dir("mpf") + "/profiles"
     write_profiles_mpf(prof, path)
     back = read_profiles_mpf(spark, path)
     return _mp_r2(back, "conv_id")
@@ -1312,10 +1313,7 @@ def _stream_fixture(df, tag: str):
     the source is dead once they return. The memory sink registers the
     query name as a session table, so a per-process sequence number
     keeps repeated runs from sharing one."""
-    import shutil
-    import tempfile
-
-    wd = tempfile.mkdtemp(prefix=f"mp_spark_{tag}_")
+    wd = _fixture_dir(tag)
     try:
         src = wd + "/src"
         df.write.mode("overwrite").parquet(src)
@@ -1746,12 +1744,10 @@ def _q_incremental_manifest(spark, sf_dir):
     """Run the resumable rollup end-to-end (kill after 2 days, resume),
     return the manifest; oracle recomputes per-(stage, day) row counts
     in SQL. Proves watermark bookkeeping + no-recompute semantics."""
-    import tempfile
-
     from matrixprofile_spark.streaming import incremental as INC
 
     ser = _series(spark, sf_dir).where(F.col("conv_id") < "conv-00100")
-    wd = tempfile.mkdtemp(prefix="mp_spark_inc_")
+    wd = _fixture_dir("inc")
     INC.write_series_source(ser, wd)
     INC.run_incremental_rollup(spark, wd, max_days_per_stage=2)  # "kill"
     INC.run_incremental_rollup(spark, wd)  # resume
@@ -1767,12 +1763,10 @@ def _q_time_travel_1m(spark, sf_dir):
     first 3 committed day partitions are visible, although every day's
     files are on disk. Oracle restricts the 1m sketch to the 3 earliest
     days (stage order is deterministic: 1m days commit first, sorted)."""
-    import tempfile
-
     from matrixprofile_spark.streaming import incremental as INC
 
     ser = _series(spark, sf_dir).where(F.col("conv_id") < "conv-00100")
-    wd = tempfile.mkdtemp(prefix="mp_spark_tt_")
+    wd = _fixture_dir("tt")
     INC.write_series_source(ser, wd)
     INC.run_incremental_rollup(spark, wd)
     return INC.read_tier_as_of(spark, wd, "1m", snapshot_seq=3)

@@ -8,14 +8,14 @@ reference's OpenMP prange over diagonals (cympx.pyx:78) and its
 multiprocessing pool over row batches (stomp.py:311-328).
 
 Every packed-series operator is one `_kernel_stage(src, keys, schema,
-kernel)`: it repartitions by the group keys with an explicit,
-work-aware count (`_grouped`), checks each series against
-MAX_PACKED_POINTS (read on the driver when the plan is built), and
-calls `kernel(key, values, pdf)`; a kernel returns its output frame,
-or None to skip the series (e.g. too short for its window) without
-computing anything. The two pair operators (`pairwise_mpdist`,
-`ab_join_pairs`) run per pair row instead and apply the same check to
-both series of every pair.
+kernel)`: it places the rows by the group keys with an explicit count
+(`_grouped`: one count-balanced wave when the group count is known),
+checks each series against MAX_PACKED_POINTS (read on the driver when
+the plan is built), and calls `kernel(key, values, pdf)`; a kernel
+returns its output frame, or None to skip the series (e.g. too short
+for its window) without computing anything. The two pair operators
+(`pairwise_mpdist`, `ab_join_pairs`) run per pair row instead and apply
+the same check to both series of every pair.
 
 `_kernel_stage` records each stage it plans (weakly, by output
 DataFrame). `with_discoveries` over a recorded per-series profile
@@ -165,32 +165,58 @@ def _guarded_pair(guard, r):
     return out
 
 
-def _kernel_parts(df: DataFrame, n_groups: int | None = None) -> int:
-    """Task count for grouped-kernel stages: 8× cores, bounded by groups.
-
-    Kernel stages are CPU-bound with O(n²) flops per O(n) bytes, so
-    AQE's byte-based coalescing would under-partition them; instead the
-    operators repartition by the group key with an explicit count
-    (REPARTITION_BY_NUM — AQE honors it). With many groups per task,
-    multi-wave scheduling evens out uneven groups.
-
-    When the caller knows the group count (a chosen fixture, a bounded
-    worklist), partitions beyond it are guaranteed-empty tasks; bound
-    the count by ``max(cores, n_groups)`` so few-group jobs don't pay
-    8×-cores empty-task scheduling per chained stage. With few groups
-    the hash placement itself is uneven and stragglers remain: the 8
-    series keys of the motif_scan benchmark hash into 8 partitions as
-    ``[1, 2, 1, 2, 0, 0, 0, 2]`` (5 busy tasks, 2 waves on 4 cores) and
-    into 4 as ``[1, 2, 1, 4]``."""
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if n_groups is not None:
-        return min(cores * 8, max(cores, n_groups))
-    return cores * 8
+def _runs_python(df: DataFrame) -> bool:
+    """Whether ``df``'s plan runs a Python UDF before its first
+    exchange, i.e. in the map side of any exchange put on top of it."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()  # with the exchanges AQE will cut at
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if "Exchange" in name:
+            continue
+        if any(t in name for t in ("Pandas", "Python", "InArrow")):
+            return True
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return False
 
 
 def _grouped(src: DataFrame, *cols: str, n_groups: int | None = None):
-    """Group for a kernel stage with work-balanced explicit partitioning."""
-    return src.repartition(_kernel_parts(src, n_groups), *cols).groupBy(*cols)
+    """Group for a kernel stage with an explicit task count.
+
+    Kernel stages are CPU-bound with O(n²) flops per O(n) bytes, so
+    AQE's byte-based coalescing would under-partition them; the rows are
+    placed by the group keys with an explicit count instead
+    (REPARTITION_BY_NUM — AQE honors it).
+
+    With a known group count they are range-placed into
+    ``min(cores, n_groups)`` tasks: one wave, and since every task of a
+    Python stage pays a fixed cost that does not shrink with its kernel,
+    fewer tasks is the saving. Spark's range exchange samples the keys
+    in one small job over the input, up to 300 keys per output task;
+    callers pass tens to hundreds of groups, so the sample holds every
+    key and the bounds cut count-balanced partitions (hash placement of
+    8 keys gave ``[1, 2, 1, 2, 0, 0, 0, 2]`` — 2 waves on 4 cores).
+    Range partitioning on the keys satisfies the grouped UDF's
+    clustering, so the stage keeps one exchange.
+
+    That sampling job computes the input once more, so an input whose
+    last stage runs a Python UDF (a chained kernel stage such as
+    salted's merge or ``pmp_discords``) is hash-placed into
+    ``max(cores, n_groups)`` tasks, at most 8× cores. So is an unknown
+    group count, into 8× cores (thousands of series, where multi-wave
+    scheduling evens out uneven sizes)."""
+    cores = src.sparkSession.sparkContext.defaultParallelism
+    if n_groups is None:
+        placed = src.repartition(cores * 8, *cols)
+    elif not _runs_python(src):
+        placed = src.repartitionByRange(max(1, min(cores, n_groups)), *cols)
+    else:
+        placed = src.repartition(min(cores * 8, max(cores, n_groups)), *cols)
+    return placed.groupBy(*cols)
 
 
 # output DataFrame -> (src, keys, schema, kernel, n_groups) of every

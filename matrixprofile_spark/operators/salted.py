@@ -91,15 +91,12 @@ def salted_mpx_profiles(
     memoized bench fixture) — re-checkpointing one would copy its
     blocks on every call.
 
-    ``n_groups`` (optional, an upper bound on the SERIES count) sizes
-    every kernel-stage exchange like mpx_profiles' hint: without it the
-    cold path schedules the full 8×cores explicit partitions even when
-    the cold split is empty, and the partial/merge stages fall back to
-    AQE byte-based coalescing — which under-partitions O(n²)-flop
-    Python stages whose input bytes are tiny (the documented reason
-    _grouped repartitions explicitly). Callers that know the worklist
-    bound (a chosen fixture, a per-batch hot-key list) should pass it;
-    the partial stage scales it by ``bands``."""
+    ``n_groups`` (optional, an upper bound on the SERIES count) places
+    every kernel stage like mpx_profiles' hint (``_grouped``): without it
+    the cold path and both salted stages hash into 8×cores explicit
+    partitions even when the cold split is empty. Callers that know the
+    worklist bound (a chosen fixture, a per-batch hot-key list) should
+    pass it; the partial stage scales it by ``bands``."""
     # localCheckpoint (not cache): blocks are reclaimed by the context
     # cleaner once this DataFrame is unreachable, so repeated calls in a
     # long-lived session don't accumulate storage
@@ -136,25 +133,11 @@ def salted_mpx_profiles(
             "mp": mp, "pi": pi,
         }])
 
-    if n_groups is not None:
-        # Unlike the general kernel stages (_grouped's 8x-cores
-        # multi-wave packing exists for UNEVEN groups), band partials
-        # are EQUAL-WORK by construction — _band_bounds splits at the
-        # quantiles of the triangular diagonal area — so several bands
-        # per task pack without stragglers and wall-clock stays
-        # total-work/cores at any scale. 2x cores keeps one short
-        # balancing wave while cutting the per-task scheduling +
-        # Python-worker round-trips that dominated the fixture (240
-        # one-band tasks 1.48 s -> 64 packed tasks 0.89 s, min of 3,
-        # same session); a worklist smaller than that gets exactly one
-        # partition per band-group.
-        cores = hot_banded.sparkSession.sparkContext.defaultParallelism
-        parts = max(1, min(n_groups * bands, cores * 2))
-        grouped_partials = hot_banded.repartition(
-            parts, "conv_id", "metric", "band"
-        ).groupBy("conv_id", "metric", "band")
-    else:
-        grouped_partials = hot_banded.groupBy("conv_id", "metric", "band")
+    # bands are equal-work by construction (_band_bounds), so _grouped's
+    # count-balanced range placement is work-balanced too
+    grouped_partials = _grouped(
+        hot_banded, "conv_id", "metric", "band",
+        n_groups=None if n_groups is None else n_groups * bands)
     partials = grouped_partials.applyInPandas(partial_fn, _PARTIAL_SCHEMA)
 
     def merge_fn(key, pdf):
@@ -172,10 +155,6 @@ def salted_mpx_profiles(
         }
         return _profile_row(key, prof)
 
-    if n_groups is not None:
-        grouped_merge = _grouped(partials, "conv_id", "metric",
-                                 n_groups=n_groups)
-    else:
-        grouped_merge = partials.groupBy("conv_id", "metric")
+    grouped_merge = _grouped(partials, "conv_id", "metric", n_groups=n_groups)
     hot_profiles = grouped_merge.applyInPandas(merge_fn, PROFILE_SCHEMA)
     return cold_profiles.unionByName(hot_profiles)

@@ -9,6 +9,8 @@ loudly.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -263,3 +265,110 @@ def test_discoveries_fuse_into_the_profile_stage(ser):
     assert "Join" not in plan, plan
     joined = _plan(P.with_discoveries(prof.localCheckpoint(), s, packed=True))
     assert "Join" in joined, joined
+
+
+@pytest.fixture(scope="module")
+def eight_packed(spark):
+    """8 packed 256-point series, materialized (like a chosen fixture)."""
+    from matrixprofile_spark.operators import profile as P
+
+    rng = np.random.default_rng(3)
+    rows = [(f"conv-{k:05d}", "value", 256, rng.standard_normal(256).tolist())
+            for k in range(8)]
+    return spark.createDataFrame(rows, P.PACKED_SCHEMA).localCheckpoint()
+
+
+def _exchanges(df) -> list[str]:
+    return [ln.strip() for ln in _plan(df).splitlines() if "Exchange" in ln]
+
+
+def _rows_per_task(df) -> list[int]:
+    by_task = df.groupBy(F.spark_partition_id().alias("p")).count()
+    return sorted((r["count"] for r in by_task.collect()), reverse=True)
+
+
+@pytest.mark.parametrize("n_series,n_groups,counts",
+                         [(8, 8, [2, 2, 2, 2]), (5, 5, [2, 1, 1, 1])])
+def test_known_group_count_is_range_placed_in_one_wave(
+        eight_packed, n_series, n_groups, counts):
+    """With a known group count, the fused profile→discovery stage is
+    range-placed on the series keys into min(cores, n_groups) = 4 tasks
+    of count-balanced series (one wave on local[4]), behind its one
+    exchange."""
+    from matrixprofile_spark.operators import profile as P
+
+    s = eight_packed.orderBy("conv_id").limit(n_series).localCheckpoint()
+    disc = P.with_discoveries(
+        P.mpx_profiles(s, 16, packed=True, n_groups=n_groups), s,
+        packed=True, n_groups=n_groups)
+    ex = _exchanges(disc)
+    assert len(ex) == 1, ex
+    assert re.search(r"rangepartitioning\(conv_id#\d+ ASC NULLS FIRST, "
+                     r"metric#\d+ ASC NULLS FIRST, 4\)", ex[0]), ex
+    assert _rows_per_task(disc) == counts
+
+
+def test_unknown_group_count_keeps_hash_placement(eight_packed):
+    """Without a group count (thousands of series) the stage keeps the
+    8×cores hash exchange, where multi-wave scheduling evens out
+    uneven series sizes."""
+    from matrixprofile_spark.operators import profile as P
+
+    disc = P.with_discoveries(P.mpx_profiles(eight_packed, 16, packed=True),
+                              eight_packed, packed=True)
+    ex = _exchanges(disc)
+    assert len(ex) == 1, ex
+    assert re.search(r"hashpartitioning\(conv_id#\d+, metric#\d+, 32\)",
+                     ex[0]), ex
+
+
+def test_chained_kernel_stage_runs_its_input_once(spark, eight_packed):
+    """A range exchange samples its input in a job of its own, which
+    would run a Python input stage twice. A kernel stage over another
+    kernel stage's output therefore keeps the hash exchange, and the
+    upstream kernel runs once per series."""
+    from matrixprofile_spark.operators import profile as P
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def first(key, values, pdf):
+        calls.add(1)
+        return pdf
+
+    def second(key, values, pdf):
+        return pdf
+
+    up = P._kernel_stage(eight_packed, P._SERIES, P.PACKED_SCHEMA, first, 8)
+    down = P._kernel_stage(up, P._SERIES, P.PACKED_SCHEMA, second, 8)
+    ex = _exchanges(down)
+    assert len(ex) == 2, ex
+    assert "hashpartitioning" in ex[0] and "rangepartitioning" in ex[1], ex
+    assert down.count() == 8
+    assert calls.value == 8
+
+
+def test_salted_band_partials_are_range_placed(spark, eight_packed):
+    """Salted partials are placed like every kernel stage with a known
+    group count: one range exchange on (series, band) into 4 tasks whose
+    band counts differ by at most 1 (bands are equal-work, so that is
+    work-balanced); the merge over the Python partials keeps a hash
+    exchange."""
+    from matrixprofile_spark.operators import profile as P
+    from matrixprofile_spark.operators.salted import salted_mpx_profiles
+
+    hot = eight_packed.orderBy("conv_id").limit(3).localCheckpoint()
+    prof = salted_mpx_profiles(hot, 16, hot_threshold=100, bands=5,
+                               packed=True, checkpoint=False, n_groups=3)
+    ex = _exchanges(prof)
+    assert any(re.search(r"rangepartitioning\(conv_id#\d+ ASC NULLS FIRST, "
+                         r"metric#\d+ ASC NULLS FIRST, band#\d+ ASC NULLS "
+                         r"FIRST, 4\)", e) for e in ex), ex
+    banded = hot.join(F.broadcast(spark.range(5).selectExpr(
+        "cast(id as int) as band")))
+    placed = P._grouped(banded, "conv_id", "metric", "band",
+                        n_groups=15).applyInPandas(
+        lambda key, pdf: pdf[["conv_id", "metric", "band"]],
+        "conv_id string, metric string, band int")
+    counts = _rows_per_task(placed)
+    assert sum(counts) == 15 and len(counts) == 4, counts
+    assert max(counts) - min(counts) <= 1, counts
