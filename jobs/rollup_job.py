@@ -9,7 +9,8 @@ Modes
 -----
 batch        transcripts → series → fused raw→1m→1h→1d cascade in ONE
              action (operators/rollup.materialize_cascade), metrics to
-             <workdir>/metrics.json
+             <workdir>/metrics.json: rows and parquet bytes per tier,
+             and bytes per non-NULL point
 incremental  resumable day-partitioned rollup with a commit manifest
              (streaming/incremental): kill it at any point, re-submit,
              committed days are never recomputed — per-partition lineage
@@ -67,16 +68,28 @@ def _series_from_args(spark, args):
 
 
 def run_batch(spark, args) -> dict:
+    from pyspark.sql import functions as F
+
     from matrixprofile_spark.operators import rollup
 
     ser = _series_from_args(spark, args)
+    path = os.path.join(args.workdir, "tiers")
     t0 = time.time()
-    tiers = rollup.materialize_cascade(
-        ser, os.path.join(args.workdir, "tiers"),
-        files_per_tier=args.files_per_tier)
-    counts = {t: df.count() for t, df in tiers.items()}
+    rollup.materialize_cascade(ser, path, files_per_tier=args.files_per_tier)
+    # one action gives every tier's rows and Σcnt (the non-NULL points
+    # each tier summarizes); the bytes are file sizes
+    got = {r["tier"]: (r["rows"], r["points"]) for r in spark.read.schema(
+        "tier string, cnt bigint").parquet(path).groupBy("tier").agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum("cnt").alias("points")).collect()}
+    tier_bytes = {t: rollup.parquet_bytes(os.path.join(path, f"tier={t}"))
+                  for t in rollup.TIERS_S}
+    points = got.get("1m", (0, 0))[1]
     return {"mode": "batch", "wall_sec": round(time.time() - t0, 2),
-            "tier_rows": counts}
+            "tier_rows": {t: got.get(t, (0, 0))[0] for t in rollup.TIERS_S},
+            "tier_bytes": tier_bytes,
+            "bytes_per_point": (round(sum(tier_bytes.values()) / points, 3)
+                                if points else None)}
 
 
 def run_incremental(spark, args) -> dict:
@@ -108,13 +121,12 @@ def run_refresh(spark, args) -> dict:
     is_late = (F.abs(F.hash("conv_id", "idx")) % 10) == 0
     on_time, late = ser.where(~is_late), ser.where(is_late)
     base_path = os.path.join(args.workdir, "rollup_1m_base")
-    rollup.rollup_from_raw(on_time, 60).write.mode("overwrite").parquet(
-        base_path)
+    rollup._write_table(rollup.rollup_from_raw(on_time, 60), base_path)
     base = spark.read.parquet(base_path)
     t0 = time.time()
     refreshed = rollup.refresh_rollup(base, on_time, late, 60)
     out_path = os.path.join(args.workdir, "rollup_1m")
-    refreshed.write.mode("overwrite").parquet(out_path)
+    rollup._write_table(refreshed, out_path)
     wall = time.time() - t0
     n = spark.read.parquet(out_path).count()
     n_invalid = rollup.invalidated_keys(late, 60).count()

@@ -23,6 +23,8 @@ stage because the bucket component splits them across reducers.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -105,6 +107,69 @@ def cascade_union(series: DataFrame) -> DataFrame:
         "tier", "conv_id", "metric", "bucket_epoch")
 
 
+def parquet_bytes(path: str) -> int:
+    """Bytes in the parquet data files under ``path``. Hadoop's ``.crc``
+    side files and ``_SUCCESS`` markers are not data."""
+    total = 0
+    for root, _, files in os.walk(path):
+        total += sum(os.path.getsize(os.path.join(root, f))
+                     for f in files if f.endswith(".parquet"))
+    return total
+
+
+def _write_table(df: DataFrame, path: str, part_col: str | None = None,
+                 time_cols: tuple[str, ...] = ("bucket_epoch",)) -> None:
+    """Overwrite ``path`` with ``df`` as parquet: the one writer for every
+    point and tier table the engine keeps.
+
+    Rows are sorted within each task by (``part_col``, conv_id, metric,
+    ``time_cols``), so each file holds conv_id/metric runs with rising
+    times. Files are zstd with v2 pages, and the dictionary is off only
+    for the sorted time columns: inside a run a time column rises in
+    small regular steps, which DELTA_BINARY_PACKED stores in a few bits
+    a value, while a dictionary spends an index into all of the file's
+    distinct times on every value (and the raw ``ts_epoch``, near-unique,
+    overflows it into plain). The double sketch columns repeat values
+    across buckets and keep their dictionaries; with every dictionary
+    off the tiers grow back to 4.18 B/point. The options are per write,
+    so writes the engine does not own keep Spark's defaults.
+
+    tier_cascade's tiers (315,720 points, 111,812 tier rows), bytes per
+    point by column with Spark's defaults (snappy, v1, dictionary):
+
+    =============  =======
+    column         B/point
+    =============  =======
+    sum_sq         1.274
+    bucket_epoch   0.768
+    vsum           0.678
+    vlast          0.321
+    vmin           0.295
+    vfirst         0.285
+    vmax           0.266
+    cnt            0.234
+    conv_id        0.051
+    metric         0.015
+    footers        0.041
+    total          4.24
+    =============  =======
+
+    zstd alone gives 3.32; zstd, v2 and a delta-coded ``bucket_epoch``
+    (0.768 → 0.248) give 3.01. Level 9 buys only 3.28 over 3.32, and
+    v2 alone nothing. The raw day table falls from 5.79 to 2.13 B/point
+    with delta-coded ``idx`` and ``ts_epoch``."""
+    keys = ([part_col] if part_col else []) + ["conv_id", "metric",
+                                               *time_cols]
+    w = (df.sortWithinPartitions(*keys).write.mode("overwrite")
+         .option("compression", "zstd")
+         .option("parquet.writer.version", "v2"))
+    for c in time_cols:
+        w = w.option(f"parquet.enable.dictionary#{c}", "false")
+    if part_col:
+        w = w.partitionBy(part_col)
+    w.parquet(path)
+
+
 def materialize_cascade(
     series: DataFrame, path: str, files_per_tier: int | None = None,
 ) -> dict[str, DataFrame]:
@@ -124,10 +189,8 @@ def materialize_cascade(
         # dir it holds rows for, so the commit fan-in is bounded at
         # ~3·N files without serializing any single tier into one task
         out = out.repartition(files_per_tier)
-    # the writer's own sort is by `tier` alone; the full key lays each
-    # file out in conv_id/metric runs, which parquet encodes smaller
-    out = out.sortWithinPartitions("tier", "conv_id", "metric", "bucket_epoch")
-    out.write.mode("overwrite").partitionBy("tier").parquet(path)
+    # sorted and encoded by the one table writer (`_write_table`)
+    _write_table(out, path, part_col="tier")
     spark = series.sparkSession
     # explicit schema: an all-empty input writes zero part files and
     # schema inference would throw; the schema is statically known here

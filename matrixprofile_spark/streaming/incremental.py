@@ -87,26 +87,17 @@ def manifest_df(spark: SparkSession, workdir: str) -> DataFrame:
 
 def write_series_source(series: DataFrame, workdir: str) -> str:
     """Materialize the raw series partitioned by day (the 10^12-turn
-    source table stand-in)."""
+    source table stand-in), with ``ts_epoch`` and ``idx`` as its sorted,
+    delta-coded time columns."""
     path = os.path.join(workdir, "raw")
-    (
-        series.withColumn("day", F.floor(F.col("ts_epoch") / DAY_S).cast("long"))
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(path)
-    )
+    R._write_table(
+        series.withColumn("day", F.floor(F.col("ts_epoch") / DAY_S).cast("long")),
+        path, part_col="day", time_cols=("ts_epoch", "idx"))
     return path
 
 
 def _table_path(workdir: str, stage: str) -> str:
     return os.path.join(workdir, f"rollup_{stage}")
-
-
-def _dir_size(path: str) -> int:
-    total = 0
-    for root, _, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
 
 
 def _commit_days(
@@ -126,22 +117,15 @@ def _commit_days(
     table = _table_path(workdir, stage)
     os.makedirs(table, exist_ok=True)
     staging = os.path.join(workdir, f"_staging_{stage}")
-    (
+    R._write_table(
         out.withColumn(
             "day", F.floor(F.col("bucket_epoch") / DAY_S).cast("long")
-        )
-        .repartition(max(len(todo), 1), "day")
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(staging)
-    )
+        ).repartition(max(len(todo), 1), "day"),
+        staging, part_col="day")
     # an all-NULL-day batch writes no data files at all; reading an empty
     # staging dir would fail schema inference, so detect it and fall back
     # to zero counts (the manifest rows still record the days as done)
-    has_part_files = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(staging) for f in files
-    )
+    has_part_files = R.parquet_bytes(staging) > 0
     counts = {
         int(r["day"]): int(r["cnt"])
         for r in spark.read.parquet(staging)
@@ -163,7 +147,7 @@ def _commit_days(
             "partition_key": str(day),
             "watermark_epoch": (day + 1) * DAY_S,
             "rows": rows,
-            "bytes": _dir_size(final),
+            "bytes": R.parquet_bytes(final),
             "snapshot_id": f"{stage}-{day}-{rows}",
         }
         _append_manifest(workdir, entry)

@@ -141,6 +141,23 @@ def test_materialize_cascade_default_path_matches_chained(transcripts,
     _assert_tiers_equal(got, rollup.build_cascade(ser))
 
 
+def test_materialize_cascade_stored_layout(spark, transcripts, tmp_path,
+                                           assert_stored_layout,
+                                           assert_bit_equal):
+    """Each tier file is zstd, its bucket_epoch delta-coded and its rows
+    in (conv_id, metric, bucket_epoch) order; the rows read back equal a
+    default-options write of the same one-pass tier DataFrame."""
+    ser = S.project_series(transcripts)
+    rollup.materialize_cascade(ser, str(tmp_path / "tiers"))
+    for tier in ("1m", "1h", "1d"):
+        assert_stored_layout(str(tmp_path / "tiers" / f"tier={tier}"))
+    rollup.cascade_union(ser).write.partitionBy("tier").parquet(
+        str(tmp_path / "default"))
+    assert_bit_equal(spark.read.parquet(str(tmp_path / "tiers")),
+                     spark.read.parquet(str(tmp_path / "default")),
+                     ["tier", "conv_id", "metric", "bucket_epoch"])
+
+
 @pytest.mark.parametrize("case", ["all_null", "empty"])
 def test_materialize_cascade_no_points_gives_empty_tiers(transcripts,
                                                          tmp_path, case):

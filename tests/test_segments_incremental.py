@@ -177,6 +177,50 @@ def test_incremental_matches_batch_cascade(spark, transcripts, tmp_path):
     pd.testing.assert_frame_equal(got.reset_index(drop=True), want.reset_index(drop=True))
 
 
+def test_raw_source_stored_layout(spark, transcripts, tmp_path,
+                                  assert_stored_layout, assert_bit_equal):
+    """The raw day table is zstd, delta-codes ts_epoch and idx, orders
+    each file by (conv_id, metric, ts_epoch, idx), and reads back the
+    rows of a default-options write."""
+    from pyspark.sql import functions as F
+
+    ser = S.project_series(transcripts)
+    path = INC.write_series_source(ser, str(tmp_path / "wd"))
+    assert_stored_layout(path, ("ts_epoch", "idx"))
+    ser.withColumn("day", F.floor(F.col("ts_epoch") / INC.DAY_S)
+                   .cast("long")).write.partitionBy("day").parquet(
+        str(tmp_path / "default"))
+    assert_bit_equal(spark.read.parquet(path),
+                     spark.read.parquet(str(tmp_path / "default")),
+                     ["conv_id", "metric", "idx"])
+
+
+def test_incremental_tiers_stored_layout(spark, transcripts, tmp_path,
+                                         assert_stored_layout,
+                                         assert_bit_equal):
+    """Every committed tier day is zstd with a delta-coded,
+    per-file-sorted bucket_epoch, and holds the rows a default-options
+    write of the stage's rollup holds; each manifest `bytes` is the
+    size of its day's parquet files alone (no .crc side files)."""
+    ser = S.project_series(transcripts)
+    wd = str(tmp_path / "wd")
+    INC.write_series_source(ser, wd)
+    INC.run_incremental_rollup(spark, wd)
+    raw = spark.read.parquet(str(tmp_path / "wd" / "raw")).drop("day")
+    rollup.rollup_from_raw(raw, 60).write.parquet(str(tmp_path / "default"))
+    assert_bit_equal(INC.read_tier(spark, wd, "1m"),
+                     spark.read.parquet(str(tmp_path / "default")),
+                     ["conv_id", "metric", "bucket_epoch"])
+    entries = INC.load_manifest(wd)
+    assert len(entries) > 3
+    for e in entries:
+        day = tmp_path / "wd" / f"rollup_{e['stage']}" / \
+            f"day={e['partition_key']}"
+        assert_stored_layout(str(day))
+        assert e["bytes"] == sum(f.stat().st_size
+                                 for f in day.glob("*.parquet")), e
+
+
 def test_retention_drops_only_expired(spark, transcripts, tmp_path):
     ser = S.project_series(transcripts)
     wd = str(tmp_path / "ret")

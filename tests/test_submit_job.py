@@ -50,6 +50,13 @@ def test_spark_submit_batch_job(tmp_path):
     metrics = json.load(open(os.path.join(wd, "metrics.json")))
     assert metrics["mode"] == "batch"
     assert metrics["tier_rows"]["1m"] > metrics["tier_rows"]["1h"] > 0
+    # stored bytes are the tiers' parquet files, .crc side files excluded
+    for tier in ("1m", "1h", "1d"):
+        tier_dir = os.path.join(wd, "tiers", f"tier={tier}")
+        assert metrics["tier_bytes"][tier] == sum(
+            os.path.getsize(os.path.join(tier_dir, f))
+            for f in os.listdir(tier_dir) if f.endswith(".parquet")) > 0
+    assert 0 < metrics["bytes_per_point"] < 10
 
 
 @pytest.mark.skipif(not os.path.exists(SUBMIT), reason="no spark-submit")
