@@ -1074,10 +1074,7 @@ def _q_max_subsequence(spark, sf_dir):
         fin = mp[~np.isinf(mp)]
         return float(np.max(fin)) if len(fin) else float("-inf")
 
-    def fn(key, pdf):
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
-        cols = ["conv_id", "metric", "in_refine_grid",
-                "stopped_below_threshold_or_cap", "prev_window_above_threshold"]
+    def kernel(key, values, pdf):
         from matrixprofile_spark.kernels.skimp import (
             NoSolutionPossible,
             maximum_subsequence,
@@ -1086,7 +1083,7 @@ def _q_max_subsequence(spark, sf_dir):
         try:
             uw = int(maximum_subsequence(values, threshold=threshold))
         except NoSolutionPossible:
-            return pd.DataFrame(columns=cols).iloc[0:0]
+            return None
         # independent replay of the doubling phase to recover the base
         n = len(values)
         max_w, w, base = n // 2, 8, None
@@ -1112,14 +1109,14 @@ def _q_max_subsequence(spark, sf_dir):
             "in_refine_grid": bool(in_grid),
             "stopped_below_threshold_or_cap": bool(stop_ok),
             "prev_window_above_threshold": bool(prev_ok),
-        }])[cols]
+        }])
 
-    return chosen.groupBy("conv_id", "metric").applyInPandas(
-        fn,
+    return P._kernel_stage(
+        chosen, P._SERIES,
         "conv_id string, metric string, in_refine_grid boolean, "
         "stopped_below_threshold_or_cap boolean, "
         "prev_window_above_threshold boolean",
-    )
+        kernel, n_groups=5)
 
 
 def _q_hcluster_assign(spark, sf_dir):
@@ -1203,8 +1200,7 @@ def _q_mstomp_w16(spark, sf_dir):
 
     chosen = _chosen_token_series(spark, sf_dir)
 
-    def fn(key, pdf):
-        v = np.asarray(pdf["values"].iloc[0], dtype="d")
+    def kernel(key, v, pdf):
         X = np.vstack([v, v[::-1]])
         prof = mstomp(X, _MPX_W)
         rows = []
@@ -1216,9 +1212,9 @@ def _q_mstomp_w16(spark, sf_dir):
                                  "dist_r2": r2})
         return pd.DataFrame(rows, columns=["conv_id", "dim", "idx", "dist_r2"])
 
-    return chosen.groupBy("conv_id", "metric").applyInPandas(
-        fn, "conv_id string, dim int, idx bigint, dist_r2 double"
-    )
+    return P._kernel_stage(chosen, P._SERIES,
+                           "conv_id string, dim int, idx bigint, dist_r2 double",
+                           kernel, n_groups=5)
 
 
 def _q_prescrimp_w16(spark, sf_dir):
@@ -1240,8 +1236,7 @@ def _q_prescrimp_w16(spark, sf_dir):
     tol = 1e-4  # FFT-MASS vs cumsum-kernel float paths, both ~1e-9;
     # headroom for the neighbor-diagonal dot-product drift
 
-    def fn(key, pdf):
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
+    def kernel(key, values, pdf):
         prof = prescrimp(values, _MPX_W, sample_pct=0.5)
         pre = np.asarray(prof["mp"], dtype="d")
         exact, _ = mpx_self_join(values, _MPX_W)
@@ -1259,11 +1254,11 @@ def _q_prescrimp_w16(spark, sf_dir):
             "anchor_ok": anchor_ok[fin],
         })
 
-    return chosen.groupBy("conv_id", "metric").applyInPandas(
-        fn,
+    return P._kernel_stage(
+        chosen, P._SERIES,
         "conv_id string, idx bigint, dist_r2 double, "
         "anytime_ok boolean, anchor_ok boolean",
-    )
+        kernel, n_groups=5)
 
 
 def _q_profile_json_roundtrip(spark, sf_dir):

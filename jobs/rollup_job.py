@@ -128,7 +128,7 @@ def run_refresh(spark, args) -> dict:
     out_path = os.path.join(args.workdir, "rollup_1m")
     rollup._write_table(refreshed, out_path)
     wall = time.time() - t0
-    n = spark.read.parquet(out_path).count()
+    n = rollup.parquet_rows(out_path)
     n_invalid = rollup.invalidated_keys(late, 60).count()
     return {"mode": "refresh", "wall_sec": round(wall, 2),
             "rollup_1m_rows": n, "invalidated_buckets": n_invalid}

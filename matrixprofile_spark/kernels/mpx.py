@@ -49,13 +49,6 @@ def _diffs(ts: np.ndarray, mu: np.ndarray, w: int) -> tuple[np.ndarray, np.ndarr
     return df, dg
 
 
-def _shifted_view(a: np.ndarray, d0: int, rows: int, width: int) -> np.ndarray:
-    """rows×width view where row r = a[d0+r : d0+r+width] (a must be padded)."""
-    return as_strided(
-        a[d0:], shape=(rows, width), strides=(a.strides[0], a.strides[0])
-    )
-
-
 def mpx_self_join(
     ts: np.ndarray,
     w: int,

@@ -7,16 +7,14 @@ self-joins; exclusion zone ceil(w/2) (0 for AB-joins); NaN/Inf windows
 skipped via the skip mask (core.py:141-167) after zero-cleaning
 (core.py:170-192).
 
-The (batch_start, batch_end) interface reproduces the reference's
-multiprocessing batch plan (core.py:545-577 + stomp.py:311-357): each
-batch re-seeds its own sliding product with one FFT and the partial
-profiles merge by element-wise min — exactly the decomposition
-operators/salted.py uses to split one huge series across Spark tasks.
+The reference splits the query rows into batches for a multiprocessing
+pool (core.py:545-577 + stomp.py:311-357). Here one series' profile
+runs in one Spark task, so `stomp` makes one pass over every query row;
+parallelism comes from series across tasks, and a hot series is split
+by MPX diagonal bands instead (operators/salted.py).
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 
@@ -41,120 +39,7 @@ def clean_nan_inf(ts: np.ndarray) -> np.ndarray:
     return ts
 
 
-def stomp_batch(
-    batch_start: int,
-    batch_end: int,
-    ts: np.ndarray,
-    query: np.ndarray,
-    w: int,
-    exclusion_zone: int,
-    is_join: bool,
-    data_mu: np.ndarray,
-    data_sig: np.ndarray,
-    first_product: np.ndarray,
-    skip_locs: np.ndarray,
-) -> dict:
-    """One contiguous row-range of the profile (stomp.py:19-193 parity)."""
-    n = len(ts)
-    pl = n - w + 1
-    mp = np.full(pl, np.inf)
-    pi = np.zeros(pl, dtype=np.int64)
-    lmp = rmp = lpi = rpi = None
-    if not is_join:
-        lmp = np.full(pl, np.inf)
-        rmp = np.full(pl, np.inf)
-        lpi = np.zeros(pl, dtype=np.int64)
-        rpi = np.zeros(pl, dtype=np.int64)
-
-    if batch_start == 0:
-        first_window = query[:w]
-        last_product = first_product.copy()
-    else:
-        first_window = query[batch_start - 1 : batch_start + w - 1]
-        last_product = M.fft_convolve(ts, first_window)
-
-    q_sum = np.sum(first_window)
-    q_2sum = np.sum(first_window**2)
-    q_mu, q_sig = moving_avg_std(first_window, w)
-    drop = first_window[0]
-
-    if batch_start == 0:
-        dp = M.distance_profile(last_product, w, data_mu, data_sig, q_mu, q_sig)
-        dp = M.apply_exclusion_zone(exclusion_zone, is_join, w, n, 0, dp)
-        upd = dp < mp
-        mp[upd] = dp[upd]
-        pi[upd] = 0
-        if not is_join:
-            lmp[upd] = dp[upd]
-            lpi[upd] = 0
-        batch_start += 1
-
-    if batch_end < pl:
-        batch_end += 1
-
-    for i in range(batch_start, batch_end):
-        if skip_locs[i]:
-            continue
-        qw = query[i : i + w]
-        q_sum = q_sum - drop + qw[-1]
-        q_2sum = q_2sum - drop**2 + qw[-1] ** 2
-        q_mu = q_sum / w
-        with np.errstate(invalid="ignore"):
-            q_sig = np.sqrt(q_2sum / w - q_mu**2)
-        last_product[1:] = (
-            last_product[: n - w] - ts[: n - w] * drop + ts[w:] * qw[-1]
-        )
-        last_product[0] = first_product[i]
-        drop = qw[0]
-
-        dp = M.distance_profile(last_product, w, data_mu, data_sig, q_mu, q_sig)
-        dp = M.apply_exclusion_zone(exclusion_zone, is_join, w, n, i, dp)
-
-        upd = dp < mp
-        mp[upd] = dp[upd]
-        pi[upd] = i
-        if not is_join:
-            updl = np.zeros(pl, dtype=bool)
-            updl[i:] = dp[i:] < lmp[i:]
-            lmp[updl] = dp[updl]
-            lpi[updl] = i
-            updr = np.zeros(pl, dtype=bool)
-            updr[:i] = dp[:i] < rmp[:i]
-            rmp[updr] = dp[updr]
-            rpi[updr] = i
-
-    return {"mp": mp, "pi": pi, "rmp": rmp, "rpi": rpi, "lmp": lmp, "lpi": lpi}
-
-
-def generate_batch_jobs(num_queries: int, n_jobs: int):
-    """Contiguous row ranges, one per worker (core.py:545-577 contract)."""
-    n_jobs = max(1, min(n_jobs, num_queries))
-    size = int(math.ceil(num_queries / n_jobs))
-    for s in range(0, num_queries, size):
-        yield (s, min(s + size, num_queries))
-
-
-def merge_batches(results: list[dict], is_join: bool) -> dict:
-    """Element-wise min merge with index carry (stomp.py:339-357)."""
-    out = results[0]
-    if len(results) == 1:
-        return out
-    out = {k: (v.copy() if v is not None else None) for k, v in out.items()}
-    for r in results[1:]:
-        upd = r["mp"] < out["mp"]
-        out["mp"][upd] = r["mp"][upd]
-        out["pi"][upd] = r["pi"][upd]
-        if not is_join:
-            for a, b in (("lmp", "lpi"), ("rmp", "rpi")):
-                u = r[a] < out[a]
-                out[a][u] = r[a][u]
-                out[b][u] = r[b][u]
-    return out
-
-
-def stomp(
-    ts: np.ndarray, w: int, query: np.ndarray | None = None, n_jobs: int = 1
-) -> dict:
+def stomp(ts: np.ndarray, w: int, query: np.ndarray | None = None) -> dict:
     """Exact matrix profile via STOMP (stomp.py:196-377 contract).
 
     Returns the reference's MatrixProfile dict shape (mp/pi/lmp/lpi/rmp/
@@ -171,7 +56,8 @@ def stomp(
     if w > len(query) / 2:
         raise ValueError("Time series is too short relative to desired window size")
 
-    pl = len(ts) - w + 1
+    n = len(ts)
+    pl = n - w + 1
     num_queries = len(query) - w + 1
     ez = 0 if is_join else int(np.ceil(w / 2.0))
 
@@ -182,22 +68,74 @@ def stomp(
     data_mu, data_sig = moving_avg_std(ts, w)
     first_product = M.fft_convolve(ts, query[:w])
 
-    results = [
-        stomp_batch(s, e, ts, query, w, ez, is_join, data_mu, data_sig,
-                    first_product, skip_locs)
-        for s, e in generate_batch_jobs(num_queries, max(1, n_jobs))
-    ]
-    merged = merge_batches(results, is_join)
-    merged.update(
-        {
-            "metric": "euclidean",
-            "w": w,
-            "ez": ez,
-            "join": is_join,
-            "sample_pct": 1,
-            "data": {"ts": ts, "query": query if is_join else None},
-            "class": "MatrixProfile",
-            "algorithm": "stomp",
-        }
-    )
-    return merged
+    mp = np.full(pl, np.inf)
+    pi = np.zeros(pl, dtype=np.int64)
+    lmp = rmp = lpi = rpi = None
+    if not is_join:
+        lmp = np.full(pl, np.inf)
+        rmp = np.full(pl, np.inf)
+        lpi = np.zeros(pl, dtype=np.int64)
+        rpi = np.zeros(pl, dtype=np.int64)
+
+    first_window = query[:w]
+    last_product = first_product.copy()
+    q_sum = np.sum(first_window)
+    q_2sum = np.sum(first_window**2)
+    q_mu, q_sig = moving_avg_std(first_window, w)
+    drop = first_window[0]
+
+    dp = M.distance_profile(last_product, w, data_mu, data_sig, q_mu, q_sig)
+    dp = M.apply_exclusion_zone(ez, is_join, w, n, 0, dp)
+    upd = dp < mp
+    mp[upd] = dp[upd]
+    pi[upd] = 0
+    if not is_join:
+        lmp[upd] = dp[upd]
+        lpi[upd] = 0
+
+    # the reference's batch loop runs one row past its end while that end
+    # is short of the profile length: only an AB-join with a shorter
+    # query gets there, and its profile keeps that extra row
+    end = num_queries + 1 if num_queries < pl else num_queries
+    for i in range(1, end):
+        if skip_locs[i]:
+            continue
+        qw = query[i : i + w]
+        q_sum = q_sum - drop + qw[-1]
+        q_2sum = q_2sum - drop**2 + qw[-1] ** 2
+        q_mu = q_sum / w
+        with np.errstate(invalid="ignore"):
+            q_sig = np.sqrt(q_2sum / w - q_mu**2)
+        last_product[1:] = (
+            last_product[: n - w] - ts[: n - w] * drop + ts[w:] * qw[-1]
+        )
+        last_product[0] = first_product[i]
+        drop = qw[0]
+
+        dp = M.distance_profile(last_product, w, data_mu, data_sig, q_mu, q_sig)
+        dp = M.apply_exclusion_zone(ez, is_join, w, n, i, dp)
+
+        upd = dp < mp
+        mp[upd] = dp[upd]
+        pi[upd] = i
+        if not is_join:
+            updl = np.zeros(pl, dtype=bool)
+            updl[i:] = dp[i:] < lmp[i:]
+            lmp[updl] = dp[updl]
+            lpi[updl] = i
+            updr = np.zeros(pl, dtype=bool)
+            updr[:i] = dp[:i] < rmp[:i]
+            rmp[updr] = dp[updr]
+            rpi[updr] = i
+
+    return {
+        "mp": mp, "pi": pi, "rmp": rmp, "rpi": rpi, "lmp": lmp, "lpi": lpi,
+        "metric": "euclidean",
+        "w": w,
+        "ez": ez,
+        "join": is_join,
+        "sample_pct": 1,
+        "data": {"ts": ts, "query": query if is_join else None},
+        "class": "MatrixProfile",
+        "algorithm": "stomp",
+    }

@@ -61,6 +61,41 @@ def _by_series(series: DataFrame) -> DataFrame:
     return series.repartition("conv_id")
 
 
+def _bucketed(series: DataFrame, step_s: int) -> DataFrame:
+    """(conv_id, metric, ts_epoch, value): the mean of each series'
+    non-NULL points per grid bucket (deterministic: integer sums)."""
+    return (
+        _by_series(series).where(F.col("value").isNotNull())
+        .groupBy("conv_id", "metric", _bucket(step_s).alias("ts_epoch"))
+        .agg((F.sum("value") / F.count("value")).alias("value"))
+    )
+
+
+def _gap_rows(series: DataFrame, step_s: int) -> DataFrame:
+    """One row per grid point from each observed bucket back to the one
+    after the previous observed bucket: ``ts_epoch`` plus the bucket
+    (``_t1``, ``_v1``) and the previous observed bucket (``_t0``,
+    ``_v0``, NULL for a series' first). One window pass over the
+    bucketed rows lags the previous observation, and each row generates
+    its own gap inline, so the fused fillers need no grid join."""
+    w = Window.partitionBy("conv_id", "metric").orderBy("ts_epoch")
+    lagged = _bucketed(series, step_s).select(
+        "conv_id", "metric",
+        F.col("ts_epoch").alias("_t1"), F.col("value").alias("_v1"),
+        F.lag("ts_epoch").over(w).alias("_t0"),
+        F.lag("value").over(w).alias("_v0"),
+    )
+    return lagged.select(
+        "conv_id", "metric", "_t0", "_t1", "_v0", "_v1",
+        F.explode(
+            F.sequence(
+                F.coalesce(F.col("_t0") + step_s, F.col("_t1")),
+                F.col("_t1"),
+                F.lit(int(step_s)),
+            )
+        ).alias("ts_epoch"),
+    )
+
 
 def to_grid(series: DataFrame, step_s: int = 60) -> DataFrame:
     """Densify to a step_s-spaced grid per (conv_id, metric).
@@ -70,12 +105,7 @@ def to_grid(series: DataFrame, step_s: int = 60) -> DataFrame:
     floor(ts/step): if several raw points share a bucket the mean is
     taken (deterministic: integer sums).
     """
-    bucket = _bucket(step_s)
-    bucketed = (
-        _by_series(series).where(F.col("value").isNotNull())
-        .groupBy("conv_id", "metric", bucket.alias("ts_epoch"))
-        .agg((F.sum("value") / F.count("value")).alias("value"))
-    )
+    bucketed = _bucketed(series, step_s)
     spans = bucketed.groupBy("conv_id", "metric").agg(
         F.min("ts_epoch").alias("t0"), F.max("ts_epoch").alias("t1")
     )
@@ -100,29 +130,7 @@ def gapfill_locf(
     each row *generates its own gap* inline (sequence over the missing
     buckets carries the lagged value forward / this value backward).
     Two exchanges total, no join, nothing scans raw twice."""
-    bucket = _bucket(step_s)
-    bucketed = (
-        _by_series(series).where(F.col("value").isNotNull())
-        .groupBy("conv_id", "metric", bucket.alias("ts_epoch"))
-        .agg((F.sum("value") / F.count("value")).alias("value"))
-    )
-    w = Window.partitionBy("conv_id", "metric").orderBy("ts_epoch")
-    lagged = bucketed.select(
-        "conv_id", "metric",
-        F.col("ts_epoch").alias("_t1"), F.col("value").alias("_v1"),
-        F.lag("ts_epoch").over(w).alias("_t0"),
-        F.lag("value").over(w).alias("_v0"),
-    )
-    exploded = lagged.select(
-        "conv_id", "metric", "_t1", "_v1", "_v0",
-        F.explode(
-            F.sequence(
-                F.coalesce(F.col("_t0") + step_s, F.col("_t1")),
-                F.col("_t1"),
-                F.lit(int(step_s)),
-            )
-        ).alias("ts_epoch"),
-    )
+    exploded = _gap_rows(series, step_s)
     if direction == "forward":
         value = F.when(F.col("ts_epoch") == F.col("_t1"), F.col("_v1")).otherwise(
             F.col("_v0")
@@ -263,29 +271,7 @@ def gapfill_interp(series: DataFrame, step_s: int = 60) -> DataFrame:
     endpoints are observed buckets by construction, so fill_interp's
     one-sided fallbacks never trigger here.
     """
-    bucket = _bucket(step_s)
-    bucketed = (
-        _by_series(series).where(F.col("value").isNotNull())
-        .groupBy("conv_id", "metric", bucket.alias("ts_epoch"))
-        .agg((F.sum("value") / F.count("value")).alias("value"))
-    )
-    w = Window.partitionBy("conv_id", "metric").orderBy("ts_epoch")
-    lagged = bucketed.select(
-        "conv_id", "metric",
-        F.col("ts_epoch").alias("_t1"), F.col("value").alias("_v1"),
-        F.lag("ts_epoch").over(w).alias("_t0"),
-        F.lag("value").over(w).alias("_v0"),
-    )
-    exploded = lagged.select(
-        "conv_id", "metric", "_t0", "_t1", "_v0", "_v1",
-        F.explode(
-            F.sequence(
-                F.coalesce(F.col("_t0") + step_s, F.col("_t1")),
-                F.col("_t1"),
-                F.lit(int(step_s)),
-            )
-        ).alias("ts_epoch"),
-    )
+    exploded = _gap_rows(series, step_s)
     t = F.col("ts_epoch")
     value = F.when(t == F.col("_t1"), F.col("_v1")).otherwise(
         F.col("_v0")

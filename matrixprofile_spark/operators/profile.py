@@ -3,9 +3,11 @@
 Every numeric kernel from matrixprofile_spark.kernels runs here per
 (conv_id, metric[, w]) group through applyInPandas — Arrow-batched,
 zero per-row Python (BASELINE.json input_hint requirement). Parallelism
-comes from Spark partitioning across groups, the analog of the
-reference's OpenMP prange over diagonals (cympx.pyx:78) and its
-multiprocessing pool over row batches (stomp.py:311-328).
+comes from Spark partitioning across series and series pairs. It stands
+in for both of the reference's parallel plans: the OpenMP prange over
+diagonals (cympx.pyx:78) and the multiprocessing pool over STOMP row
+batches (stomp.py:311-328). One series' profile runs in one task; a hot
+series splits by diagonal bands instead (operators/salted.py).
 
 Every packed-series operator is one `_kernel_stage(src, keys, schema,
 kernel)`: it places the rows by the group keys with an explicit count
@@ -14,8 +16,10 @@ checks each series against MAX_PACKED_POINTS (read on the driver when
 the plan is built), and calls `kernel(key, values, pdf)`; a kernel
 returns its output frame, or None to skip the series (e.g. too short
 for its window) without computing anything. The two pair operators
-(`pairwise_mpdist`, `ab_join_pairs`) run per pair row instead and apply
-the same check to both series of every pair.
+(`pairwise_mpdist`, `ab_join_pairs`) are one `_pair_stage(pairs, w,
+schema, kernel)` each: it runs per pair row, applies the same check to
+both series of every pair and skips a pair with a series shorter
+than 2w.
 
 `_kernel_stage` records each stage it plans (weakly, by output
 DataFrame). `with_discoveries` over a recorded per-series profile
@@ -154,17 +158,6 @@ def _packed_guard():
     return guard
 
 
-def _guarded_pair(guard, r):
-    """Both packed series of one pair row (``values_a``/``values_b``),
-    each size-checked by ``guard`` before a kernel sees it."""
-    out = []
-    for side in ("a", "b"):
-        values = np.asarray(r[f"values_{side}"], dtype="d")
-        guard(values, (r[f"conv_id_{side}"], r["metric"]))
-        out.append(values)
-    return out
-
-
 def _runs_python(df: DataFrame) -> bool:
     """Whether ``df``'s plan runs a Python UDF before its first
     exchange, i.e. in the map side of any exchange put on top of it."""
@@ -243,6 +236,28 @@ def _kernel_stage(src: DataFrame, keys, schema: str, kernel,
     out = _grouped(src, *keys, n_groups=n_groups).applyInPandas(fn, schema)
     _STAGES[out] = (src, keys, schema, kernel, n_groups)
     return out
+
+
+def _pair_stage(pairs: DataFrame, w: int, schema: str, kernel) -> DataFrame:
+    """One pair-row kernel stage: ``kernel(r, va, vb)`` runs once per
+    pair row ``r`` (``conv_id_a``, ``conv_id_b``, ``metric``,
+    ``values_a``, ``values_b``) on both unpacked series, each checked
+    against MAX_PACKED_POINTS, and returns its frame. A pair with a
+    series shorter than 2w is skipped without computing anything; a
+    batch with no frame yields a column-less empty frame (zero rows)."""
+    guard = _packed_guard()
+
+    def fn(pdf):
+        frames = []
+        for _, r in pdf.iterrows():  # one iteration per PAIR, not per point
+            va, vb = (np.asarray(r[f"values_{s}"], dtype="d") for s in "ab")
+            guard(va, (r["conv_id_a"], r["metric"]))
+            guard(vb, (r["conv_id_b"], r["metric"]))
+            if len(va) >= 2 * w and len(vb) >= 2 * w:
+                frames.append(kernel(r, va, vb))
+        return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame()
+
+    return pairs.mapInPandas(lambda it: (fn(pdf) for pdf in it), schema)
 
 
 _SERIES = ("conv_id", "metric")
@@ -537,24 +552,16 @@ def pairwise_mpdist(
     )
     pairs = a.join(b, (F.col("conv_id_a") < F.col("conv_id_b"))
                    & (F.col("metric") == F.col("metric_b")))
-    guard = _packed_guard()
 
-    def fn(pdf):
-        rows = []
-        for _, r in pdf.iterrows():
-            va, vb = _guarded_pair(guard, r)
-            if len(va) < 2 * w or len(vb) < 2 * w:
-                continue
-            d = mpdist(va, vb, w, threshold=threshold) if len(va) >= len(vb) \
-                else mpdist(vb, va, w, threshold=threshold)
-            rows.append({
-                "conv_id_a": r["conv_id_a"], "conv_id_b": r["conv_id_b"],
-                "metric": r["metric"], "w": w, "mpdist": float(d),
-            })
-        return pd.DataFrame(rows, columns=[
-            "conv_id_a", "conv_id_b", "metric", "w", "mpdist"])
+    def kernel(r, va, vb):
+        d = mpdist(va, vb, w, threshold=threshold) if len(va) >= len(vb) \
+            else mpdist(vb, va, w, threshold=threshold)
+        return pd.DataFrame([{
+            "conv_id_a": r["conv_id_a"], "conv_id_b": r["conv_id_b"],
+            "metric": r["metric"], "w": w, "mpdist": float(d),
+        }])
 
-    return pairs.mapInPandas(lambda it: (fn(pdf) for pdf in it), MPDIST_SCHEMA)
+    return _pair_stage(pairs, w, MPDIST_SCHEMA, kernel)
 
 
 AB_SCHEMA = (
@@ -577,30 +584,21 @@ def ab_join_pairs(pairs: DataFrame, w: int) -> DataFrame:
     the reference and are dropped here (cympx.pyx:260-274 sentinel)."""
     from matrixprofile_spark.kernels.mpx import mpx_ab_join
 
-    guard = _packed_guard()
+    def kernel(r, va, vb):
+        mp, _, mpb, _ = mpx_ab_join(va, vb, w)
+        sides = []
+        for side, prof in (("a", mp), ("b", mpb)):
+            fin = np.isfinite(prof)
+            sides.append(pd.DataFrame({
+                "conv_id_a": r["conv_id_a"],
+                "conv_id_b": r["conv_id_b"],
+                "metric": r["metric"], "w": w, "side": side,
+                "idx": np.arange(len(prof), dtype="int64")[fin],
+                "dist": prof[fin],
+            }))
+        return pd.concat(sides, ignore_index=True)
 
-    def fn(pdf):
-        frames = []
-        for _, r in pdf.iterrows():  # one iteration per PAIR, not per point
-            va, vb = _guarded_pair(guard, r)
-            if len(va) < 2 * w or len(vb) < 2 * w:
-                continue
-            mp, _, mpb, _ = mpx_ab_join(va, vb, w)
-            for side, prof in (("a", mp), ("b", mpb)):
-                fin = np.isfinite(prof)
-                frames.append(pd.DataFrame({
-                    "conv_id_a": r["conv_id_a"],
-                    "conv_id_b": r["conv_id_b"],
-                    "metric": r["metric"], "w": w, "side": side,
-                    "idx": np.arange(len(prof), dtype="int64")[fin],
-                    "dist": prof[fin],
-                }))
-        cols = ["conv_id_a", "conv_id_b", "metric", "w", "side", "idx", "dist"]
-        if not frames:
-            return pd.DataFrame(columns=cols)
-        return pd.concat(frames, ignore_index=True)[cols]
-
-    return pairs.mapInPandas(lambda it: (fn(pdf) for pdf in it), AB_SCHEMA)
+    return _pair_stage(pairs, w, AB_SCHEMA, kernel)
 
 
 def cmp_profiles(

@@ -107,14 +107,25 @@ def cascade_union(series: DataFrame) -> DataFrame:
         "tier", "conv_id", "metric", "bucket_epoch")
 
 
-def parquet_bytes(path: str) -> int:
-    """Bytes in the parquet data files under ``path``. Hadoop's ``.crc``
-    side files and ``_SUCCESS`` markers are not data."""
-    total = 0
+def _parquet_files(path: str):
+    """The parquet data files under ``path``. Hadoop's ``.crc`` side
+    files and ``_SUCCESS`` markers are not data."""
     for root, _, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f))
-                     for f in files if f.endswith(".parquet"))
-    return total
+        yield from (os.path.join(root, f) for f in files
+                    if f.endswith(".parquet"))
+
+
+def parquet_bytes(path: str) -> int:
+    """Bytes in the parquet data files under ``path``."""
+    return sum(os.path.getsize(f) for f in _parquet_files(path))
+
+
+def parquet_rows(path: str) -> int:
+    """Rows in the parquet data files under ``path``, summed from their
+    footers: no Spark job, and an empty directory sums to 0."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
 
 
 def _write_table(df: DataFrame, path: str, part_col: str | None = None,

@@ -3,10 +3,8 @@
 The north_rule requires explicit skew handling for hot conversations
 (e.g. a 10^5-turn agent transcript while the median is ~250 turns). A
 grouped kernel puts the whole series in ONE task — the hot key becomes
-the straggler. This operator reproduces the reference's parallel
-decomposition (per-thread diagonal ranges, cympx.pyx:82 prange; batch
-row ranges + min-merge, core.py:545-577 + stomp.py:339-357) as a
-two-phase Spark plan:
+the straggler. This operator reproduces the reference's per-thread
+diagonal ranges (cympx.pyx:82 prange) as a two-phase Spark plan:
 
   1. explode each hot series into `bands` diagonal ranges → one task per
      (series, band) computes a PARTIAL profile in correlation space
@@ -35,7 +33,7 @@ from matrixprofile_spark.kernels.mpx import (
 from matrixprofile_spark.operators.profile import (
     PROFILE_SCHEMA,
     _grouped,
-    _packed_guard,
+    _kernel_stage,
     _profile_row,
     mpx_profiles,
     pack_series,
@@ -114,31 +112,24 @@ def salted_mpx_profiles(
     )
     hot_banded = hot.join(F.broadcast(band_ids))
 
-    n_bands = bands
-    # every band task holds the whole hot series: the same size check as
-    # the one-task kernel stages, with the limit read here on the driver
-    guard = _packed_guard()
-
-    def partial_fn(key, pdf):
-        values = np.asarray(pdf["values"].iloc[0], dtype="d")
-        guard(values, key[:2])
+    def partial(key, values, pdf):
         band = int(key[2])
-        pl = len(values) - w + 1
-        bounds = _band_bounds(pl, minlag, n_bands)
+        bounds = _band_bounds(len(values) - w + 1, minlag, bands)
         if band >= len(bounds):
-            return pd.DataFrame()
+            return None
         mp, pi = mpx_self_join(values, w, diag_range=bounds[band])
         return pd.DataFrame([{
             "conv_id": key[0], "metric": key[1], "band": band,
             "mp": mp, "pi": pi,
         }])
 
-    # bands are equal-work by construction (_band_bounds), so _grouped's
-    # count-balanced range placement is work-balanced too
-    grouped_partials = _grouped(
-        hot_banded, "conv_id", "metric", "band",
-        n_groups=None if n_groups is None else n_groups * bands)
-    partials = grouped_partials.applyInPandas(partial_fn, _PARTIAL_SCHEMA)
+    # every band task holds the whole hot series, so it is a kernel stage
+    # with the one-task stages' size check; bands are equal-work by
+    # construction (_band_bounds), so its count-balanced range placement
+    # is work-balanced too
+    partials = _kernel_stage(
+        hot_banded, ("conv_id", "metric", "band"), _PARTIAL_SCHEMA, partial,
+        None if n_groups is None else n_groups * bands)
 
     def merge_fn(key, pdf):
         pdf = pdf.sort_values("band")  # ascending-diagonal tie order

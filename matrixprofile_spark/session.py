@@ -14,6 +14,38 @@ import os
 from pyspark.sql import SparkSession
 
 
+# engine-semantics configs that must hold on ANY deployment (batch test
+# session or spark-submit cluster job); deployment-shape knobs (master,
+# memory, shuffle partitions) deliberately NOT included — those belong
+# to the submit command / cluster manager
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    # AQE right-sizes aggregation shuffles (byte-based). Grouped-KERNEL
+    # stages have O(n²) flops per O(n) bytes, so byte-based coalescing
+    # would fold them into one wave of uneven tasks — those operators
+    # therefore use an explicit repartition-by-num on the group key
+    # (operators/profile.py), which AQE leaves alone.
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # measured, not assumed: this flag only affects
+    # TypedImperativeAggregates, which in this engine means the
+    # collect_list packing paths (pack_series, segment encode) —
+    # min_by/max_by compile to declarative HashAggregate in Spark 4
+    # either way (plan-verified). pack_series over 16.7M rows:
+    # 1.8 s sort-based vs 6.8 s object-hash at 16 cores, and the
+    # object path is SLOWER at 16 cores than at 4 (per-group array
+    # buffers in a hash map; GC churn grows with core count). Input
+    # clustering by (conv, ts) — the table's native layout at
+    # 100 TB — makes the partial sort nearly free.
+    "spark.sql.execution.useObjectHashAggregateExec": "false",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # grouped-map Arrow batches: large enough to amortize IPC, small
+    # enough to never blow a python worker at 100 TB partition sizes
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+}
+
+
 def get_spark(
     app: str = "matrixprofile_spark",
     cores: int | None = None,
@@ -34,66 +66,27 @@ def get_spark(
         master = f"local[{cores}]"
         n = cores
     sp = int(shuffle_partitions or max(16, n * 4))
-    b = (
-        SparkSession.builder.master(master)
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(sp))
-        .config("spark.default.parallelism", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        # AQE right-sizes aggregation shuffles (byte-based). Grouped-KERNEL
-        # stages have O(n²) flops per O(n) bytes, so byte-based coalescing
-        # would fold them into one wave of uneven tasks — those operators
-        # therefore use an explicit repartition-by-num on the group key
-        # (operators/profile.py), which AQE leaves alone.
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # measured, not assumed: this flag only affects
-        # TypedImperativeAggregates, which in this engine means the
-        # collect_list packing paths (pack_series, segment encode) —
-        # min_by/max_by compile to declarative HashAggregate in Spark 4
-        # either way (plan-verified). pack_series over 16.7M rows:
-        # 1.8 s sort-based vs 6.8 s object-hash at 16 cores, and the
-        # object path is SLOWER at 16 cores than at 4 (per-group array
-        # buffers in a hash map; GC churn grows with core count). Input
-        # clustering by (conv, ts) — the table's native layout at
-        # 100 TB — makes the partial sort nearly free.
-        .config("spark.sql.execution.useObjectHashAggregateExec", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # grouped-map Arrow batches: large enough to amortize IPC, small
-        # enough to never blow a python worker at 100 TB partition sizes
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+    conf = {
+        "spark.sql.shuffle.partitions": str(sp),
+        "spark.default.parallelism": str(n),
+        **ENGINE_CONF,
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "48g"),
         # single-disk sandbox: concurrent shuffle/spill writers serialize
         # on /tmp; RAM-backed local dirs restore write parallelism (a real
         # cluster uses per-executor local NVMe for the same reason)
-        .config("spark.local.dir",
-                os.environ.get("SPARK_LOCAL_DIRS",
-                               "/dev/shm/spark-local"
-                               if os.path.isdir("/dev/shm") else "/tmp"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.local.dir": os.environ.get(
+            "SPARK_LOCAL_DIRS",
+            "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else "/tmp"),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        **(extra_conf or {}),
+    }
+    b = SparkSession.builder.master(master).appName(app)
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-# engine-semantics configs that must hold on ANY deployment (batch test
-# session or spark-submit cluster job); deployment-shape knobs (master,
-# memory, shuffle partitions) deliberately NOT included — those belong
-# to the submit command / cluster manager
-ENGINE_CONF = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.execution.useObjectHashAggregateExec": "false",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
-}
 
 
 def get_submit_spark(app: str = "matrixprofile_spark_job") -> SparkSession:

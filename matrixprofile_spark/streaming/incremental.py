@@ -100,10 +100,8 @@ def _table_path(workdir: str, stage: str) -> str:
     return os.path.join(workdir, f"rollup_{stage}")
 
 
-def _commit_days(
-    spark: SparkSession, out: DataFrame, workdir: str, stage: str,
-    todo: list[int],
-) -> list[dict]:
+def _commit_days(out: DataFrame, workdir: str, stage: str,
+                 todo: list[int]) -> list[dict]:
     """Write ALL of a stage's uncommitted days in one partitioned job,
     then promote each day dir with an atomic rename + manifest append.
 
@@ -112,8 +110,7 @@ def _commit_days(
     granularity is unchanged: a crash mid-promotion leaves later days
     as staging orphans only — they are recomputed on resume, while every
     day whose manifest row landed is never reread. Row counts come from
-    the staged parquet footers (metadata-only), not a second execution
-    of the rollup lineage."""
+    each day's parquet footers (metadata-only), not a Spark job."""
     table = _table_path(workdir, stage)
     os.makedirs(table, exist_ok=True)
     staging = os.path.join(workdir, f"_staging_{stage}")
@@ -122,15 +119,6 @@ def _commit_days(
             "day", F.floor(F.col("bucket_epoch") / DAY_S).cast("long")
         ).repartition(max(len(todo), 1), "day"),
         staging, part_col="day")
-    # an all-NULL-day batch writes no data files at all; reading an empty
-    # staging dir would fail schema inference, so detect it and fall back
-    # to zero counts (the manifest rows still record the days as done)
-    has_part_files = R.parquet_bytes(staging) > 0
-    counts = {
-        int(r["day"]): int(r["cnt"])
-        for r in spark.read.parquet(staging)
-        .groupBy("day").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    } if has_part_files else {}
     entries = []
     for day in todo:
         src_dir = os.path.join(staging, f"day={day}")
@@ -141,7 +129,7 @@ def _commit_days(
             os.replace(src_dir, final)
         else:  # a day whose rows were all NULL-valued: empty partition
             os.makedirs(final, exist_ok=True)
-        rows = counts.get(day, 0)
+        rows = R.parquet_rows(final)
         entry = {
             "stage": stage,
             "partition_key": str(day),
@@ -209,7 +197,7 @@ def run_incremental_rollup(
                 out = R.rollup_from_raw(part.drop("day"), tier_s)
             else:
                 out = R.rollup_cascade(part.drop("day"), tier_s)
-            _commit_days(spark, out, workdir, stage, todo)
+            _commit_days(out, workdir, stage, todo)
     return processed
 
 

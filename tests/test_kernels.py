@@ -175,13 +175,6 @@ def test_stomp_micro():
     np.testing.assert_array_equal(p["rpi"], [4, 5, 6, 7, 8, 8, 0, 0, 0])
 
 
-def test_stomp_batch_parity(sampledata):
-    p1 = stomp(sampledata, 32, n_jobs=1)
-    p4 = stomp(sampledata, 32, n_jobs=4)
-    for k in ("mp", "pi", "lmp", "lpi", "rmp", "rpi"):
-        np.testing.assert_allclose(p1[k], p4[k])
-
-
 def test_stomp_errors():
     with pytest.raises(ValueError):
         stomp(np.arange(8, dtype="d"), 2)

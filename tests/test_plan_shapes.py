@@ -372,3 +372,78 @@ def test_salted_band_partials_are_range_placed(spark, eight_packed):
     counts = _rows_per_task(placed)
     assert sum(counts) == 15 and len(counts) == 4, counts
     assert max(counts) - min(counts) <= 1, counts
+
+
+# every applyInPandas/mapInPandas call site, by (file, enclosing function):
+# the two kernel-stage primitives, the row-grouped stages that need a
+# row-count guard instead of a packed-series one, and the row-local codecs
+_PYTHON_STAGES = sorted([
+    ("matrixprofile_spark/io/mpf.py", "read_profiles_mpf"),
+    ("matrixprofile_spark/io/mpf.py", "write_profiles_mpf"),
+    ("matrixprofile_spark/operators/downsample.py", "lttb_downsample"),
+    ("matrixprofile_spark/operators/gapfill.py", "fill_sequential"),
+    ("matrixprofile_spark/operators/multimodal.py", "media_features"),
+    ("matrixprofile_spark/operators/multimodal.py", "resize_images"),
+    ("matrixprofile_spark/operators/profile.py", "_kernel_stage"),
+    ("matrixprofile_spark/operators/profile.py", "_pair_stage"),
+    ("matrixprofile_spark/operators/profile.py", "pmp_discords"),
+    ("matrixprofile_spark/operators/salted.py", "salted_mpx_profiles"),
+    ("matrixprofile_spark/operators/segments.py", "decode_segments"),
+    ("matrixprofile_spark/operators/segments.py",
+     "decode_transcript_segments"),
+    ("matrixprofile_spark/operators/segments.py", "encode_segments"),
+    ("matrixprofile_spark/operators/segments.py",
+     "encode_transcript_segments"),
+])
+
+
+def _python_stage_sites(root: str) -> list[tuple[str, str]]:
+    import ast
+    import os
+
+    paths = [os.path.join(root, "__spark_entry__.py")]
+    for d, _, files in os.walk(os.path.join(root, "matrixprofile_spark")):
+        paths += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    sites = []
+
+    def visit(node, rel, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("applyInPandas", "mapInPandas")):
+            sites.append((rel, fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn)
+
+    for p in paths:
+        with open(p) as f:
+            visit(ast.parse(f.read()), os.path.relpath(p, root), None)
+    return sorted(sites)
+
+
+def test_python_stages_use_the_primitives():
+    """Every stage that hands whole packed series to a Python kernel goes
+    through _kernel_stage (its size guard and placement), and every
+    pair-row kernel through _pair_stage: no other applyInPandas or
+    mapInPandas call site exists outside the allowlist."""
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    assert _python_stage_sites(root) == _PYTHON_STAGES
+
+
+@pytest.mark.parametrize("name",
+                         ["mstomp_w16", "prescrimp_w16", "max_subsequence"])
+def test_entry_kernel_builders_are_kernel_stages(spark, name):
+    """The query builders that run a kernel per chosen series are kernel
+    stages: recorded, guarded, and range-placed into min(cores, 5) = 4
+    tasks."""
+    import __spark_entry__ as E
+    from matrixprofile_spark.operators import profile as P
+
+    df = E.queries()[name](spark, "sf0.001")
+    assert df in P._STAGES
+    ex = _exchanges(df)
+    assert len(ex) == 1, ex
+    assert re.search(r"rangepartitioning\(conv_id#\d+ ASC NULLS FIRST, "
+                     r"metric#\d+ ASC NULLS FIRST, 4\)", ex[0]), ex

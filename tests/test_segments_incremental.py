@@ -201,7 +201,8 @@ def test_incremental_tiers_stored_layout(spark, transcripts, tmp_path,
     """Every committed tier day is zstd with a delta-coded,
     per-file-sorted bucket_epoch, and holds the rows a default-options
     write of the stage's rollup holds; each manifest `bytes` is the
-    size of its day's parquet files alone (no .crc side files)."""
+    size of its day's parquet files alone (no .crc side files), and
+    each manifest `rows` is the row count Spark reads from the day."""
     ser = S.project_series(transcripts)
     wd = str(tmp_path / "wd")
     INC.write_series_source(ser, wd)
@@ -219,6 +220,7 @@ def test_incremental_tiers_stored_layout(spark, transcripts, tmp_path,
         assert_stored_layout(str(day))
         assert e["bytes"] == sum(f.stat().st_size
                                  for f in day.glob("*.parquet")), e
+        assert e["rows"] == spark.read.parquet(str(day)).count(), e
 
 
 def test_retention_drops_only_expired(spark, transcripts, tmp_path):

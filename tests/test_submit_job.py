@@ -31,6 +31,15 @@ def test_pyfiles_zip_contents(tmp_path):
     assert not any(n.endswith((".pyc", ".so")) for n in names)
 
 
+def test_engine_conf_is_set_in_the_session(spark):
+    """get_spark applies every engine-semantics conf that spark-submit
+    jobs pin through get_submit_spark."""
+    from matrixprofile_spark.session import ENGINE_CONF
+
+    conf = dict(spark.sparkContext.getConf().getAll())
+    assert {k: conf.get(k) for k in ENGINE_CONF} == ENGINE_CONF
+
+
 @pytest.mark.skipif(not os.path.exists(SUBMIT), reason="no spark-submit")
 def test_spark_submit_batch_job(tmp_path):
     sys.path.insert(0, HERE)
@@ -60,7 +69,7 @@ def test_spark_submit_batch_job(tmp_path):
 
 
 @pytest.mark.skipif(not os.path.exists(SUBMIT), reason="no spark-submit")
-def test_spark_submit_refresh_job(tmp_path):
+def test_spark_submit_refresh_job(spark, tmp_path):
     sys.path.insert(0, HERE)
     from tools.make_pyfiles import build
 
@@ -79,3 +88,5 @@ def test_spark_submit_refresh_job(tmp_path):
     assert metrics["mode"] == "refresh"
     assert metrics["invalidated_buckets"] > 0
     assert metrics["rollup_1m_rows"] > metrics["invalidated_buckets"]
+    assert metrics["rollup_1m_rows"] == spark.read.parquet(
+        os.path.join(wd, "rollup_1m")).count()
