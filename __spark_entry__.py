@@ -240,9 +240,13 @@ def _q_gapfill_window_mean(spark, sf_dir):
 
 def _q_gap_report(spark, sf_dir):
     """The gap fillers' audit twin: per-series grid coverage BEFORE any
-    fill (observed buckets, missing holes, longest run, coverage)."""
+    fill (observed buckets, missing holes, longest run, coverage).
+    n_missing is cast to double because its oracle, coalesce(sum(hole),
+    0) over BIGINT holes, is a DuckDB HUGEINT, which arrives in pandas
+    as float64."""
     tok = S.token_count_series(_transcripts(spark, sf_dir))
-    return gapfill.gap_report(tok, 60)
+    return gapfill.gap_report(tok, 60).withColumn(
+        "n_missing", F.col("n_missing").cast("double"))
 
 
 def _q_gapfill_interp(spark, sf_dir):
@@ -833,10 +837,15 @@ def _q_snippets(spark, sf_dir):
     )
 
 
-def _q_skimp_pmp(spark, sf_dir):
+def _chosen_pmp(spark, sf_dir):
+    """The chosen series and their pan-profile at w ∈ {8, 16, 32}."""
     chosen = _chosen_token_series(spark, sf_dir)
-    prof = P.skimp_profiles(chosen, windows=[8, 16, 32], packed=True, n_groups=5)
-    return _mp_r2(prof, "conv_id", "metric", "w")
+    return chosen, P.skimp_profiles(chosen, windows=[8, 16, 32], packed=True,
+                                    n_groups=5)
+
+
+def _q_skimp_pmp(spark, sf_dir):
+    return _mp_r2(_chosen_pmp(spark, sf_dir)[1], "conv_id", "metric", "w")
 
 
 def _q_skimp_sampled(spark, sf_dir):
@@ -870,9 +879,7 @@ def _q_pmp_discords(spark, sf_dir):
     """Top-3 discords over the PMP (w ∈ {8,16,32}) — the reference's
     2-D dispatch (top_k_discords.py:16-91); oracle = chained-CTE argmax
     with per-row exclusion ez = floor(w/2)."""
-    chosen = _chosen_token_series(spark, sf_dir)
-    prof = P.skimp_profiles(chosen, windows=[8, 16, 32], packed=True, n_groups=5)
-    out = P.pmp_discords(prof, k=3, n_groups=5)
+    out = P.pmp_discords(_chosen_pmp(spark, sf_dir)[1], k=3, n_groups=5)
     return out.select(
         "conv_id", "metric", F.col("rank").cast("bigint").alias("rank"),
         "w", F.col("idx").cast("bigint").alias("idx"),
@@ -886,8 +893,7 @@ def _q_pmp_motifs(spark, sf_dir):
     true-zero distances in both the profile cells and the MASS picks, so
     cross-engine argmin ties break deterministically — the same mandate
     that made the 1-D motifs_top3 oracle possible."""
-    chosen = _chosen_token_series(spark, sf_dir)
-    prof = P.skimp_profiles(chosen, windows=[8, 16, 32], packed=True, n_groups=5)
+    chosen, prof = _chosen_pmp(spark, sf_dir)
     out = P.pmp_motifs(prof, chosen, k=3, packed=True, zero_eps=1e-4, n_groups=5)
     return out.select(
         "conv_id", "metric", F.col("rank").cast("bigint").alias("rank"),
@@ -1974,6 +1980,9 @@ series AS (
 """.strip()
 
 
+_TIERS = (("1m", 60), ("1h", 3600), ("1d", 86400))
+
+
 def _rollup_oracle(tier_s: int) -> str:
     return f"""
 WITH {_SERIES_CTE}
@@ -1987,13 +1996,8 @@ GROUP BY 1, 2, 3
 """.strip()
 
 
-# just the 5-conversation chosen set (no window stats): the base for
-# the r6 invariant oracles (snippets / max_subsequence / hcluster)
-_CHOSEN_ONLY_CTE = f"""
-transcripts AS ({_T}),
-tok AS (
-  SELECT conv_id, CAST(length(text) AS DOUBLE) AS value FROM transcripts
-),
+# the 5 chosen conversations (64 to 400 turns) of a `tok` CTE
+_CHOSEN_SET = """
 sizes AS (SELECT conv_id, count(*) AS n FROM tok GROUP BY 1),
 chosen AS (
   SELECT conv_id FROM sizes WHERE n BETWEEN 64 AND 400
@@ -2001,18 +2005,78 @@ chosen AS (
 )
 """.strip()
 
-
-_CHOSEN_CTE = f"""
+# token_count per turn
+_TOK_CTE = f"""
 transcripts AS ({_T}),
 tok AS (
   SELECT conv_id, turn_idx AS idx, CAST(length(text) AS DOUBLE) AS value
   FROM transcripts
+)
+""".strip()
+
+# token_count per timestamp, as the gap fillers read it
+_TOK_TS_CTE = f"""
+transcripts AS ({_T}),
+tok AS (
+  SELECT conv_id, 'token_count' AS metric, ts_epoch,
+         CAST(length(text) AS DOUBLE) AS value
+  FROM transcripts
+)
+""".strip()
+
+# the 60 s grid over each series' observed buckets `b`, LEFT JOINed to them
+_GRID_CTE = """
+spans AS (
+  SELECT conv_id, metric, min(ts_epoch) AS t0, max(ts_epoch) AS t1
+  FROM b GROUP BY 1, 2
 ),
-sizes AS (SELECT conv_id, count(*) AS n FROM tok GROUP BY 1),
-chosen AS (
-  SELECT conv_id FROM sizes WHERE n BETWEEN 64 AND 400
-  ORDER BY conv_id LIMIT 5
+grid AS (
+  SELECT conv_id, metric,
+         unnest(generate_series(t0, t1, 60)) AS ts_epoch
+  FROM spans
 ),
+j AS (
+  SELECT g.conv_id, g.metric, g.ts_epoch, b.value
+  FROM grid g LEFT JOIN b USING (conv_id, metric, ts_epoch)
+)
+""".strip()
+
+# the observed 60 s bucket means `b` of every token series, and their grid
+_GAPFILL_CTE = f"""
+{_TOK_TS_CTE},
+b AS (
+  SELECT conv_id, metric, CAST(FLOOR(ts_epoch / 60.0) * 60 AS BIGINT) AS ts_epoch,
+         sum(value) / count(value) AS value
+  FROM tok GROUP BY 1, 2, 3
+),
+{_GRID_CTE}
+""".strip()
+
+# just the 5-conversation chosen set (no window stats): the base for
+# the r6 invariant oracles (snippets / max_subsequence / hcluster)
+_CHOSEN_ONLY_CTE = f"""
+transcripts AS ({_T}),
+tok AS (
+  SELECT conv_id, CAST(length(text) AS DOUBLE) AS value FROM transcripts
+),
+{_CHOSEN_SET}
+""".strip()
+
+# the chosen series as lists, for the recursive step-by-step replays
+_CHOSEN_LISTS_CTE = f"""
+{_TOK_CTE},
+{_CHOSEN_SET},
+q AS (
+  SELECT t.conv_id, list(idx ORDER BY idx) AS ids,
+         list(value ORDER BY idx) AS vs, count(*) AS n
+  FROM tok t JOIN chosen c USING (conv_id) GROUP BY 1
+)
+""".strip()
+
+
+_CHOSEN_CTE = f"""
+{_TOK_CTE},
+{_CHOSEN_SET},
 r AS (
   SELECT t.conv_id,
          CAST(row_number() OVER (PARTITION BY t.conv_id ORDER BY idx) - 1
@@ -2086,42 +2150,7 @@ def _tier_discords_oracle_sql(bucket_s: int, label: str, n_lo: int,
     return f"""
 WITH {_tier_cte(8, "st8t", bucket_s=bucket_s, n_lo=n_lo, n_hi=n_hi,
                 stretch=stretch)},
-{_mpx_block_sql(8, "st8t", "t1")},
-mp AS MATERIALIZED (
-  SELECT conv_id, i AS idx, sqrt(2 * 8 * (1 - least(max(c), 1.0))) AS dist
-  FROM ct1 GROUP BY 1, 2
-),
-p1 AS (
-  SELECT conv_id, idx FROM (
-    SELECT conv_id, idx, row_number() OVER
-      (PARTITION BY conv_id ORDER BY dist DESC, idx DESC) AS rn FROM mp
-  ) WHERE rn = 1
-),
-m2 AS (
-  SELECT mp.* FROM mp JOIN p1 USING (conv_id)
-  WHERE NOT (mp.idx >= p1.idx - 2 AND mp.idx < p1.idx + 2)
-),
-p2 AS (
-  SELECT conv_id, idx FROM (
-    SELECT conv_id, idx, row_number() OVER
-      (PARTITION BY conv_id ORDER BY dist DESC, idx DESC) AS rn FROM m2
-  ) WHERE rn = 1
-),
-m3 AS (
-  SELECT m2.* FROM m2 JOIN p2 USING (conv_id)
-  WHERE NOT (m2.idx >= p2.idx - 2 AND m2.idx < p2.idx + 2)
-),
-p3 AS (
-  SELECT conv_id, idx FROM (
-    SELECT conv_id, idx, row_number() OVER
-      (PARTITION BY conv_id ORDER BY dist DESC, idx DESC) AS rn FROM m3
-  ) WHERE rn = 1
-)
-SELECT conv_id, '{label}' AS metric, CAST(0 AS BIGINT) AS rank, idx FROM p1
-UNION ALL
-SELECT conv_id, '{label}' AS metric, CAST(1 AS BIGINT) AS rank, idx FROM p2
-UNION ALL
-SELECT conv_id, '{label}' AS metric, CAST(2 AS BIGINT) AS rank, idx FROM p3
+{_discords_sql(8, "st8t", "t1", label)}
 """.strip()
 
 
@@ -2147,6 +2176,130 @@ _COS_FOLD = (
     "sqrt(list_aggregate(list_transform(range(1, 65), i -> "
     "CAST({b}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), 'sum')))"
 )
+
+
+# per-user event sessions, a new one after a gap of more than 12 h
+_EVENT_SESSIONS_CTE = """
+e AS (
+  SELECT CAST(user_id AS VARCHAR) AS user_id,
+         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
+           AS turn_idx,
+         epoch_us(ts) // 1000000 AS ts_epoch
+  FROM events
+),
+f AS (
+  SELECT user_id, turn_idx, ts_epoch,
+    CASE WHEN ts_epoch - lag(ts_epoch) OVER
+           (PARTITION BY user_id ORDER BY turn_idx) > 43200
+         THEN 1 ELSE 0 END AS newf
+  FROM e
+),
+s AS (
+  SELECT user_id, ts_epoch,
+    CAST(sum(newf) OVER (PARTITION BY user_id ORDER BY turn_idx
+      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+      AS session_idx
+  FROM f
+)
+""".strip()
+
+# per-document stopword hits of five languages over `t`, and the best one
+_LANG_CTE = """
+long AS (
+  SELECT id, 'de' AS lang, len(list_filter(toks, x -> list_contains(['der','die','das','und','ein'], x))) AS hits FROM t
+  UNION ALL
+  SELECT id, 'en', len(list_filter(toks, x -> list_contains(['the','a','of','and','to'], x))) FROM t
+  UNION ALL
+  SELECT id, 'es', len(list_filter(toks, x -> list_contains(['el','la','de','los','que'], x))) FROM t
+  UNION ALL
+  SELECT id, 'fr', len(list_filter(toks, x -> list_contains(['le','la','les','des','une'], x))) FROM t
+  UNION ALL
+  SELECT id, 'zh', len(list_filter(toks, x -> list_contains(['de','shi','le','zai','he'], x))) FROM t
+),
+best AS (
+  SELECT id, lang, hits,
+         row_number() OVER (PARTITION BY id ORDER BY hits DESC, lang DESC) AS rn
+  FROM long
+)
+""".strip()
+
+# distinct word 2-gram shingles of every corpus document
+_SHINGLES_CTE = """
+toks AS (SELECT doc_id AS id, string_split(trim(text), ' ') AS t FROM corpus),
+sh AS (
+  SELECT DISTINCT id,
+    unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
+                          i -> array_to_string(t[i:i+2], ' '))) AS shingle
+  FROM toks
+)
+""".strip()
+
+# exact shingle Jaccard of the candidate `pairs`
+_JACCARD_SQL = """
+sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY 1),
+inter AS (
+  SELECT p.id_a, p.id_b, count(*) AS n_inter
+  FROM pairs p
+  JOIN sh a ON a.id = p.id_a
+  JOIN sh b ON b.id = p.id_b AND b.shingle = a.shingle
+  GROUP BY 1, 2
+)
+SELECT i.id_a, i.id_b,
+       CAST(n_inter AS BIGINT) AS n_intersect,
+       CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT) AS n_union,
+       CAST((n_inter * 1000000) // (sa.n_sh + sb.n_sh - n_inter)
+            AS BIGINT) AS jaccard_ppm
+FROM inter i
+JOIN sizes sa ON sa.id = i.id_a
+JOIN sizes sb ON sb.id = i.id_b
+""".strip()
+
+_ANN_Q_CTE = """
+q AS (
+  SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 10
+)
+""".strip()
+
+# route each query to its 2 most similar `centl` cells
+_ANN_PROBES_CTE = f"""
+routed AS (
+  SELECT q.query_id, q.qvec, c.cell,
+         {_COS_FOLD.format(a='q.qvec', b='c.centroid')} AS ccos
+  FROM q, centl c
+),
+probes AS (
+  SELECT query_id, qvec, cell FROM (
+    SELECT *, row_number() OVER (PARTITION BY query_id
+                                 ORDER BY ccos DESC, cell) AS crank
+    FROM routed
+  ) WHERE crank <= 2
+)
+""".strip()
+
+# the 5 best `scored` neighbours per query
+_ANN_TOP5_SQL = """
+r AS (
+  SELECT query_id, neighbor_id, cos,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY cos DESC, neighbor_id) AS rank
+  FROM scored
+)
+SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id,
+       round(cos, 4) AS cos_r4
+FROM r WHERE rank <= 5
+""".strip()
+
+# 8 signed random-hyperplane projections of every `ex` vector
+_LSH_SUMS_CTE = """
+sums AS (
+  SELECT id, p.plane,
+         sum(CASE WHEN CAST(('0x' || substr(md5(
+                      CAST(p.plane AS VARCHAR) || ',' || CAST(pos AS VARCHAR)
+                    ), 1, 15)) AS UBIGINT) % 2 = 0
+                  THEN v ELSE -v END) AS dot
+  FROM ex, range(0, 8) p(plane) GROUP BY 1, 2
+)
+""".strip()
 
 
 def _w_stats_sql(w: int, name: str, src: str = "r") -> str:
@@ -2203,6 +2356,161 @@ b{tag} AS (
          round(sqrt(2 * {w} * (1 - least(max(c), 1.0))), 2) AS dist_r2
   FROM c{tag} GROUP BY 1, 3
 )"""
+
+
+def _dots_sql(pair: str) -> str:
+    """O(n²·w) brute-force window dot products of the w=16 `sub` starts
+    (a.i, b.i) of one series that `pair` admits — the exclusion zone of
+    the profile under test."""
+    return f"""dots AS (
+  SELECT a.conv_id, a.i AS i, b.i AS j, sum(x.value * y.value) AS qt
+  FROM sub a
+  JOIN sub b ON a.conv_id = b.conv_id AND {pair}
+  JOIN r x ON x.conv_id = a.conv_id AND x.i >= a.i AND x.i < a.i + {_MPX_W}
+  JOIN r y ON y.conv_id = a.conv_id AND y.i = b.i + (x.i - a.i)
+  GROUP BY 1, 2, 3
+)"""
+
+
+_MPX_PAIR = f"abs(a.i - b.i) > {_MPX_MINLAG}"
+
+# Pearson correlation of every `dots` pair, 0 where either window is flat
+_CORR_CTE = f"""corr AS (
+  SELECT d.conv_id, d.i,
+    CASE WHEN sa.sig = 0 OR sb.sig = 0 THEN 0.0
+         ELSE (d.qt - {_MPX_W} * sa.mu * sb.mu)
+              / ({_MPX_W} * sa.sig * sb.sig) END AS c
+  FROM dots d
+  JOIN sub sa ON sa.conv_id = d.conv_id AND sa.i = d.i
+  JOIN sub sb ON sb.conv_id = d.conv_id AND sb.i = d.j
+)"""
+
+
+def _mpx_oracle_sql(extra: str = "") -> str:
+    """Brute-force twin of the w=16 MPX profile (best correlation outside
+    the ceil(w/4) zone, as a rounded distance); `extra` appends literal
+    columns."""
+    return f"""
+WITH {_CHOSEN_CTE},
+{_dots_sql(_MPX_PAIR)},
+{_CORR_CTE},
+best AS (SELECT conv_id, i AS idx, max(c) AS cmax FROM corr GROUP BY 1, 2)
+SELECT conv_id, idx,
+       round(sqrt(2 * {_MPX_W} * (1 - least(cmax, 1.0))), 2) AS dist_r2{extra}
+FROM best
+""".strip()
+
+
+def _stomp_oracle_sql(pair: str) -> str:
+    """Brute-force twin of a w=16 STOMP profile over the pairs `pair`
+    admits: flat windows skipped, distances under 0.05 floored to 0."""
+    return f"""
+WITH {_CHOSEN_CTE},
+{_dots_sql(pair)},
+dist AS (
+  SELECT d.conv_id, d.i,
+    2 * ({_MPX_W} - (d.qt - {_MPX_W} * sa.mu * sb.mu)
+         / (sa.sig * sb.sig)) AS dsq
+  FROM dots d
+  JOIN sub sa ON sa.conv_id = d.conv_id AND sa.i = d.i
+  JOIN sub sb ON sb.conv_id = d.conv_id AND sb.i = d.j
+  WHERE sa.sig > 0 AND sb.sig > 0
+)
+SELECT conv_id, i AS idx,
+       CASE WHEN sqrt(greatest(min(dsq), 0)) < 0.05 THEN 0.0
+            ELSE round(sqrt(min(dsq)), 2) END AS dist_r2
+FROM (SELECT conv_id, i, greatest(dsq, 0) AS dsq FROM dist) GROUP BY 1, 2
+""".strip()
+
+
+def _discords_sql(w: int, st: str, tag: str, label: str | None = None) -> str:
+    """The width-w profile `mp` (via _mpx_block_sql over stats `st`),
+    then three discord rounds: argmax dist (ties to the later idx), and
+    the pick's [idx - ez, idx + ez) zone dropped before the next round,
+    ez = ceil(w/4). With a `label`, the picks as ranked rows; without,
+    p1..p3 carry `dist` for a global re-rank."""
+    ez = -(-w // 4)
+    cols = "conv_id, idx" if label else "conv_id, idx, dist"
+    parts = [_mpx_block_sql(w, st, tag), f"""mp AS MATERIALIZED (
+  SELECT conv_id, i AS idx, sqrt(2 * {w} * (1 - least(max(c), 1.0))) AS dist
+  FROM c{tag} GROUP BY 1, 2
+)"""]
+    src = "mp"
+    for k in (1, 2, 3):
+        if k > 1:
+            p = f"p{k - 1}"
+            parts.append(f"""m{k} AS (
+  SELECT {src}.* FROM {src} JOIN {p} USING (conv_id)
+  WHERE NOT ({src}.idx >= {p}.idx - {ez} AND {src}.idx < {p}.idx + {ez})
+)""")
+            src = f"m{k}"
+        parts.append(f"""p{k} AS (
+  SELECT {cols} FROM (
+    SELECT {cols}, row_number() OVER
+      (PARTITION BY conv_id ORDER BY dist DESC, idx DESC) AS rn FROM {src}
+  ) WHERE rn = 1
+)""")
+    sql = ",\n".join(parts)
+    if label:
+        sql += "\n" + "\nUNION ALL\n".join(
+            f"SELECT conv_id, '{label}' AS metric, CAST({k} AS BIGINT) AS rank,"
+            f" idx FROM p{k + 1}" for k in range(3))
+    return sql
+
+
+def _pmp_blocks_sql(windows, tag: str = "") -> str:
+    """Window stats for w=8 and w=32, then one _mpx_block_sql per width
+    in `windows` (w=16 reads the chosen CTE's `sub`), tagged tag + w."""
+    return ",\n".join(
+        [_w_stats_sql(8, "st8"), _w_stats_sql(32, "st32")]
+        + [_mpx_block_sql(w, "sub" if w == _MPX_W else f"st{w}", f"{tag}{w}")
+           for w in windows])
+
+
+def _skimp_oracle_sql(windows) -> str:
+    """The rounded pan-profile rows of the chosen series at `windows`."""
+    rows = "\nUNION ALL\n".join(
+        f"SELECT conv_id, 'token_count' AS metric, w, idx, dist_r2 FROM b{w}"
+        for w in windows)
+    return f"""
+WITH {_CHOSEN_CTE},
+{_pmp_blocks_sql(windows)}
+{rows}
+""".strip()
+
+
+def _mstomp_dims_sql() -> str:
+    """Both dimensions of the mstomp_w16 twin (0: the series `r`, 1: its
+    reverse `rrev`): window dots dt{k} over diagonals beyond the zone 8
+    in both pair directions, then z-normalized distances dd{k} over the
+    stats s{k}, flat windows skipped."""
+    dots = [f"""pr{k} AS (
+  SELECT x.conv_id, y.i - x.i AS d, x.i AS i, x.value * y.value AS p
+  FROM {src} x JOIN {src} y ON y.conv_id = x.conv_id AND y.i - x.i > 8
+),
+dt{k}0 AS (
+  SELECT conv_id, i, i + d AS j, qt FROM (
+    SELECT conv_id, d, i, sum(p) OVER wnd AS qt, count(*) OVER wnd AS cnt
+    FROM pr{k}
+    WINDOW wnd AS (PARTITION BY conv_id, d ORDER BY i
+                   ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING)
+  ) WHERE cnt = 16
+),
+dt{k} AS (
+  SELECT conv_id, i, j, qt FROM dt{k}0
+  UNION ALL
+  SELECT conv_id, j AS i, i AS j, qt FROM dt{k}0
+)""" for k, src in enumerate(("r", "rrev"))]
+    dists = [f"""dd{k} AS (
+  SELECT d.conv_id, d.i, d.j,
+    sqrt(greatest(2 * (16 - (d.qt - 16 * sa.mu * sb.mu)
+                       / (sa.sig * sb.sig)), 0)) AS dist
+  FROM dt{k} d
+  JOIN s{k} sa ON sa.conv_id = d.conv_id AND sa.i = d.i
+  JOIN s{k} sb ON sb.conv_id = d.conv_id AND sb.i = d.j
+  WHERE sa.sig > 0 AND sb.sig > 0
+)""" for k in (0, 1)]
+    return ",\n".join(dots + dists)
 
 
 def _motifs_oracle_sql(k: int = 3, max_neighbors: int = 10,
@@ -2540,6 +2848,20 @@ FROM fs{rnd}""" for rnd in range(1, k + 1)
 
 
 def oracle_sql() -> dict[str, str]:
+    # per-tier CTEs of incremental_manifest and retention_view
+    manifest = ",\n".join(f"""m{k} AS (
+  SELECT '{tier}' AS stage, day, count(*) AS n_rows,
+         (day + 1) * 86400 AS watermark_epoch
+  FROM (SELECT DISTINCT conv_id, metric, day,
+               CAST(FLOOR(ts_epoch / {tier_s}.0) * {tier_s} AS BIGINT) AS b FROM pts)
+  GROUP BY day
+)""" for k, (tier, tier_s) in enumerate(_TIERS, 1))
+    tier_sums = ",\n".join(f"""r{tier} AS (
+  SELECT conv_id, metric,
+         CAST(FLOOR(ts_epoch / {tier_s}.0) * {tier_s} AS BIGINT) AS bucket_epoch,
+         count(value) AS cnt, sum(value) AS vsum
+  FROM series WHERE value IS NOT NULL GROUP BY 1, 2, 3
+)""" for tier, tier_s in _TIERS)
     out = {
         "dedup_exact": f"""
 WITH {_CORPUS_CTE}
@@ -2549,13 +2871,7 @@ FROM corpus GROUP BY 1
 """.strip(),
         "dedup_minhash_lsh": f"""
 WITH {_CORPUS_CTE},
-toks AS (SELECT doc_id AS id, string_split(trim(text), ' ') AS t FROM corpus),
-sh AS (
-  SELECT DISTINCT id,
-    unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-                          i -> array_to_string(t[i:i+2], ' '))) AS shingle
-  FROM toks
-),
+{_SHINGLES_CTE},
 sig AS (
   SELECT id,
     min(md5('0|' || shingle)) AS h0, min(md5('1|' || shingle)) AS h1,
@@ -2575,22 +2891,7 @@ pairs AS (
   FROM banded a JOIN banded b
     ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
 ),
-sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY 1),
-inter AS (
-  SELECT p.id_a, p.id_b, count(*) AS n_inter
-  FROM pairs p
-  JOIN sh a ON a.id = p.id_a
-  JOIN sh b ON b.id = p.id_b AND b.shingle = a.shingle
-  GROUP BY 1, 2
-)
-SELECT i.id_a, i.id_b,
-       CAST(n_inter AS BIGINT) AS n_intersect,
-       CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT) AS n_union,
-       CAST((n_inter * 1000000) // (sa.n_sh + sb.n_sh - n_inter)
-            AS BIGINT) AS jaccard_ppm
-FROM inter i
-JOIN sizes sa ON sa.id = i.id_a
-JOIN sizes sb ON sb.id = i.id_b
+{_JACCARD_SQL}
 """.strip(),
         "dedup_simhash": f"""
 WITH {_CORPUS_CTE},
@@ -2634,26 +2935,11 @@ SELECT id, CAST(n_tokens AS BIGINT) AS n_tokens,
        + 300 * least(n_tokens, 5 * n_stop) AS BIGINT) AS quality_num
 FROM m
 """.strip(),
-        "langid": """
+        "langid": f"""
 WITH t AS (
   SELECT doc_id AS id, string_split(trim(text), ' ') AS toks FROM documents
 ),
-long AS (
-  SELECT id, 'de' AS lang, len(list_filter(toks, x -> list_contains(['der','die','das','und','ein'], x))) AS hits FROM t
-  UNION ALL
-  SELECT id, 'en', len(list_filter(toks, x -> list_contains(['the','a','of','and','to'], x))) FROM t
-  UNION ALL
-  SELECT id, 'es', len(list_filter(toks, x -> list_contains(['el','la','de','los','que'], x))) FROM t
-  UNION ALL
-  SELECT id, 'fr', len(list_filter(toks, x -> list_contains(['le','la','les','des','une'], x))) FROM t
-  UNION ALL
-  SELECT id, 'zh', len(list_filter(toks, x -> list_contains(['de','shi','le','zai','he'], x))) FROM t
-),
-best AS (
-  SELECT id, lang, hits,
-         row_number() OVER (PARTITION BY id ORDER BY hits DESC, lang DESC) AS rn
-  FROM long
-)
+{_LANG_CTE}
 SELECT id, CASE WHEN hits > 0 THEN lang ELSE 'und' END AS lang_pred,
        CAST(hits AS BIGINT) AS lang_hits
 FROM best WHERE rn = 1
@@ -2743,60 +3029,29 @@ SELECT doc_id, CAST(i AS BIGINT) AS pix_idx,
 FROM h, unnest(range(0, 64)) t(i)
 """.strip(),
         "ann_brute_topk": f"""
-WITH q AS (
-  SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 10
-),
+WITH {_ANN_Q_CTE},
 scored AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
          {_COS_FOLD.format(a='q.qvec', b='e.embedding')} AS cos
   FROM q, embeddings e WHERE e.vec_id <> q.query_id
 ),
-r AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id,
-       round(cos, 4) AS cos_r4
-FROM r WHERE rank <= 5
+{_ANN_TOP5_SQL}
 """.strip(),
         "ann_ivf_topk": f"""
-WITH q AS (
-  SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 10
-),
+WITH {_ANN_Q_CTE},
 cent AS (
   SELECT label AS cell, i, avg(CAST(embedding[i] AS DOUBLE)) AS m
   FROM embeddings, range(1, 65) r(i) GROUP BY 1, 2
 ),
 centl AS (SELECT cell, list(m ORDER BY i) AS centroid FROM cent GROUP BY 1),
-routed AS (
-  SELECT q.query_id, q.qvec, c.cell,
-         {_COS_FOLD.format(a='q.qvec', b='c.centroid')} AS ccos
-  FROM q, centl c
-),
-probes AS (
-  SELECT query_id, qvec, cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY ccos DESC, cell) AS crank
-    FROM routed
-  ) WHERE crank <= 2
-),
+{_ANN_PROBES_CTE},
 scored AS (
   SELECT p.query_id, e.vec_id AS neighbor_id,
          {_COS_FOLD.format(a='p.qvec', b='e.embedding')} AS cos
   FROM probes p JOIN embeddings e ON e.label = p.cell
   WHERE e.vec_id <> p.query_id
 ),
-r AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id,
-       round(cos, 4) AS cos_r4
-FROM r WHERE rank <= 5
+{_ANN_TOP5_SQL}
 """.strip(),
         "ann_ivf_learned": f"""
 WITH emb AS (SELECT vec_id AS id, embedding FROM embeddings),
@@ -2862,21 +3117,8 @@ a3 AS MATERIALIZED (
     FROM d3
   ) WHERE rn = 1
 ),
-q AS (
-  SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 10
-),
-routed AS (
-  SELECT q.query_id, q.qvec, c.cell,
-         {_COS_FOLD.format(a='q.qvec', b='c.centroid')} AS ccos
-  FROM q, centl c
-),
-probes AS (
-  SELECT query_id, qvec, cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY ccos DESC, cell) AS crank
-    FROM routed
-  ) WHERE crank <= 2
-),
+{_ANN_Q_CTE},
+{_ANN_PROBES_CTE},
 scored AS (
   SELECT p.query_id, e.id AS neighbor_id,
          {_COS_FOLD.format(a='p.qvec', b='e.embedding')} AS cos
@@ -2885,29 +3127,14 @@ scored AS (
   JOIN emb e ON e.id = a3.id
   WHERE e.id <> p.query_id
 ),
-r AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id,
-       round(cos, 4) AS cos_r4
-FROM r WHERE rank <= 5
+{_ANN_TOP5_SQL}
 """.strip(),
-        "ann_lsh_buckets": """
+        "ann_lsh_buckets": f"""
 WITH ex AS (
   SELECT vec_id AS id, i - 1 AS pos, CAST(embedding[i] AS DOUBLE) AS v
   FROM embeddings, range(1, 65) r(i)
 ),
-sums AS (
-  SELECT id, p.plane,
-         sum(CASE WHEN CAST(('0x' || substr(md5(
-                      CAST(p.plane AS VARCHAR) || ',' || CAST(pos AS VARCHAR)
-                    ), 1, 15)) AS UBIGINT) % 2 = 0
-                  THEN v ELSE -v END) AS dot
-  FROM ex, range(0, 8) p(plane) GROUP BY 1, 2
-)
+{_LSH_SUMS_CTE}
 SELECT id, CAST(sum(CASE WHEN dot > 0 THEN CAST(pow(2, plane) AS BIGINT)
                          ELSE 0 END) AS BIGINT) AS bucket
 FROM sums GROUP BY id
@@ -2926,14 +3153,7 @@ ex AS (
   SELECT id, i - 1 AS pos, CAST(embedding[i] AS DOUBLE) AS v
   FROM ecorpus, range(1, 65) r(i)
 ),
-sums AS (
-  SELECT id, p.plane,
-         sum(CASE WHEN CAST(('0x' || substr(md5(
-                      CAST(p.plane AS VARCHAR) || ',' || CAST(pos AS VARCHAR)
-                    ), 1, 15)) AS UBIGINT) % 2 = 0
-                  THEN v ELSE -v END) AS dot
-  FROM ex, range(0, 8) p(plane) GROUP BY 1, 2
-),
+{_LSH_SUMS_CTE},
 buckets AS (
   SELECT id, CAST(sum(CASE WHEN dot > 0 THEN CAST(pow(2, plane) AS BIGINT)
                            ELSE 0 END) AS BIGINT) AS bucket
@@ -2953,11 +3173,7 @@ scored AS (
 SELECT id_a, id_b, round(cos, 4) AS cos_r4 FROM scored WHERE cos >= 0.9
 """.strip(),
         "salted_mpx_hot": f"""
-WITH transcripts AS ({_T}),
-tok AS (
-  SELECT conv_id, turn_idx AS idx, CAST(length(text) AS DOUBLE) AS value
-  FROM transcripts
-),
+WITH {_TOK_CTE},
 sizes AS (SELECT conv_id, count(*) AS n FROM tok GROUP BY 1),
 hot AS (SELECT conv_id FROM sizes WHERE n >= 1024),
 r AS (
@@ -3038,82 +3254,16 @@ pts AS (
          CAST(FLOOR(ts_epoch / 86400.0) AS BIGINT) AS day
   FROM series WHERE value IS NOT NULL AND conv_id < 'conv-00100'
 ),
-m1 AS (
-  SELECT '1m' AS stage, day, count(*) AS n_rows,
-         (day + 1) * 86400 AS watermark_epoch
-  FROM (SELECT DISTINCT conv_id, metric, day,
-               CAST(FLOOR(ts_epoch / 60.0) * 60 AS BIGINT) AS b FROM pts)
-  GROUP BY day
-),
-m2 AS (
-  SELECT '1h' AS stage, day, count(*) AS n_rows,
-         (day + 1) * 86400 AS watermark_epoch
-  FROM (SELECT DISTINCT conv_id, metric, day,
-               CAST(FLOOR(ts_epoch / 3600.0) * 3600 AS BIGINT) AS b FROM pts)
-  GROUP BY day
-),
-m3 AS (
-  SELECT '1d' AS stage, day, count(*) AS n_rows,
-         (day + 1) * 86400 AS watermark_epoch
-  FROM (SELECT DISTINCT conv_id, metric, day,
-               CAST(FLOOR(ts_epoch / 86400.0) * 86400 AS BIGINT) AS b FROM pts)
-  GROUP BY day
-)
+{manifest}
 SELECT * FROM m1 UNION ALL SELECT * FROM m2 UNION ALL SELECT * FROM m3
 """.strip(),
-        "mpx_w16": f"""
-WITH {_CHOSEN_CTE},
-dots AS (
-  SELECT a.conv_id, a.i AS i, b.i AS j, sum(x.value * y.value) AS qt
-  FROM sub a
-  JOIN sub b ON a.conv_id = b.conv_id AND abs(a.i - b.i) > {_MPX_MINLAG}
-  JOIN r x ON x.conv_id = a.conv_id AND x.i >= a.i AND x.i < a.i + {_MPX_W}
-  JOIN r y ON y.conv_id = a.conv_id AND y.i = b.i + (x.i - a.i)
-  GROUP BY 1, 2, 3
-),
-corr AS (
-  SELECT d.conv_id, d.i,
-    CASE WHEN sa.sig = 0 OR sb.sig = 0 THEN 0.0
-         ELSE (d.qt - {_MPX_W} * sa.mu * sb.mu)
-              / ({_MPX_W} * sa.sig * sb.sig) END AS c
-  FROM dots d
-  JOIN sub sa ON sa.conv_id = d.conv_id AND sa.i = d.i
-  JOIN sub sb ON sb.conv_id = d.conv_id AND sb.i = d.j
-),
-best AS (SELECT conv_id, i AS idx, max(c) AS cmax FROM corr GROUP BY 1, 2)
-SELECT conv_id, idx,
-       round(sqrt(2 * {_MPX_W} * (1 - least(cmax, 1.0))), 2) AS dist_r2
-FROM best
-""".strip(),
+        "mpx_w16": _mpx_oracle_sql(),
         # PreSCRIMP's anytime contract as a value check: the exact
         # profile must hash-match the brute-force SQL, and the two
         # boolean claims (computed Spark-side against the PreSCRIMP
         # run) must all be TRUE — a violated bound mismatches the hash.
-        "prescrimp_w16": f"""
-WITH {_CHOSEN_CTE},
-dots AS (
-  SELECT a.conv_id, a.i AS i, b.i AS j, sum(x.value * y.value) AS qt
-  FROM sub a
-  JOIN sub b ON a.conv_id = b.conv_id AND abs(a.i - b.i) > {_MPX_MINLAG}
-  JOIN r x ON x.conv_id = a.conv_id AND x.i >= a.i AND x.i < a.i + {_MPX_W}
-  JOIN r y ON y.conv_id = a.conv_id AND y.i = b.i + (x.i - a.i)
-  GROUP BY 1, 2, 3
-),
-corr AS (
-  SELECT d.conv_id, d.i,
-    CASE WHEN sa.sig = 0 OR sb.sig = 0 THEN 0.0
-         ELSE (d.qt - {_MPX_W} * sa.mu * sb.mu)
-              / ({_MPX_W} * sa.sig * sb.sig) END AS c
-  FROM dots d
-  JOIN sub sa ON sa.conv_id = d.conv_id AND sa.i = d.i
-  JOIN sub sb ON sb.conv_id = d.conv_id AND sb.i = d.j
-),
-best AS (SELECT conv_id, i AS idx, max(c) AS cmax FROM corr GROUP BY 1, 2)
-SELECT conv_id, idx,
-       round(sqrt(2 * {_MPX_W} * (1 - least(cmax, 1.0))), 2) AS dist_r2,
-       TRUE AS anytime_ok, TRUE AS anchor_ok
-FROM best
-""".strip(),
+        "prescrimp_w16": _mpx_oracle_sql(
+            ",\n       TRUE AS anytime_ok, TRUE AS anchor_ok"),
         "mass2_w16": f"""
 WITH {_CHOSEN_CTE},
 q AS (
@@ -3145,102 +3295,9 @@ dist AS (
 SELECT conv_id, idx, round(sqrt(greatest(dsq, 0.0)), 2) AS dist_r2
 FROM dist
 """.strip(),
-        "stomp_w16": f"""
-WITH {_CHOSEN_CTE},
-dots AS (
-  SELECT a.conv_id, a.i AS i, b.i AS j, sum(x.value * y.value) AS qt
-  FROM sub a
-  JOIN sub b ON a.conv_id = b.conv_id AND abs(a.i - b.i) > {_STOMP_EZ}
-  JOIN r x ON x.conv_id = a.conv_id AND x.i >= a.i AND x.i < a.i + {_MPX_W}
-  JOIN r y ON y.conv_id = a.conv_id AND y.i = b.i + (x.i - a.i)
-  GROUP BY 1, 2, 3
-),
-dist AS (
-  SELECT d.conv_id, d.i,
-    2 * ({_MPX_W} - (d.qt - {_MPX_W} * sa.mu * sb.mu)
-         / (sa.sig * sb.sig)) AS dsq
-  FROM dots d
-  JOIN sub sa ON sa.conv_id = d.conv_id AND sa.i = d.i
-  JOIN sub sb ON sb.conv_id = d.conv_id AND sb.i = d.j
-  WHERE sa.sig > 0 AND sb.sig > 0
-)
-SELECT conv_id, i AS idx,
-       CASE WHEN sqrt(greatest(min(dsq), 0)) < 0.05 THEN 0.0
-            ELSE round(sqrt(min(dsq)), 2) END AS dist_r2
-FROM (SELECT conv_id, i, greatest(dsq, 0) AS dsq FROM dist) GROUP BY 1, 2
-""".strip(),
-        "stomp_left_w16": f"""
-WITH {_CHOSEN_CTE},
-dots AS (
-  SELECT a.conv_id, a.i AS i, b.i AS j, sum(x.value * y.value) AS qt
-  FROM sub a
-  JOIN sub b ON a.conv_id = b.conv_id AND b.i < a.i - {_STOMP_EZ}
-  JOIN r x ON x.conv_id = a.conv_id AND x.i >= a.i AND x.i < a.i + {_MPX_W}
-  JOIN r y ON y.conv_id = a.conv_id AND y.i = b.i + (x.i - a.i)
-  GROUP BY 1, 2, 3
-),
-dist AS (
-  SELECT d.conv_id, d.i,
-    2 * ({_MPX_W} - (d.qt - {_MPX_W} * sa.mu * sb.mu)
-         / (sa.sig * sb.sig)) AS dsq
-  FROM dots d
-  JOIN sub sa ON sa.conv_id = d.conv_id AND sa.i = d.i
-  JOIN sub sb ON sb.conv_id = d.conv_id AND sb.i = d.j
-  WHERE sa.sig > 0 AND sb.sig > 0
-)
-SELECT conv_id, i AS idx,
-       CASE WHEN sqrt(greatest(min(dsq), 0)) < 0.05 THEN 0.0
-            ELSE round(sqrt(min(dsq)), 2) END AS dist_r2
-FROM (SELECT conv_id, i, greatest(dsq, 0) AS dsq FROM dist) GROUP BY 1, 2
-""".strip(),
-        "stomp_right_w16": f"""
-WITH {_CHOSEN_CTE},
-dots AS (
-  SELECT a.conv_id, a.i AS i, b.i AS j, sum(x.value * y.value) AS qt
-  FROM sub a
-  JOIN sub b ON a.conv_id = b.conv_id AND b.i > a.i + {_STOMP_EZ}
-  JOIN r x ON x.conv_id = a.conv_id AND x.i >= a.i AND x.i < a.i + {_MPX_W}
-  JOIN r y ON y.conv_id = a.conv_id AND y.i = b.i + (x.i - a.i)
-  GROUP BY 1, 2, 3
-),
-dist AS (
-  SELECT d.conv_id, d.i,
-    2 * ({_MPX_W} - (d.qt - {_MPX_W} * sa.mu * sb.mu)
-         / (sa.sig * sb.sig)) AS dsq
-  FROM dots d
-  JOIN sub sa ON sa.conv_id = d.conv_id AND sa.i = d.i
-  JOIN sub sb ON sb.conv_id = d.conv_id AND sb.i = d.j
-  WHERE sa.sig > 0 AND sb.sig > 0
-)
-SELECT conv_id, i AS idx,
-       CASE WHEN sqrt(greatest(min(dsq), 0)) < 0.05 THEN 0.0
-            ELSE round(sqrt(min(dsq)), 2) END AS dist_r2
-FROM (SELECT conv_id, i, greatest(dsq, 0) AS dsq FROM dist) GROUP BY 1, 2
-""".strip(),
-        "scrimp_exact_w16": f"""
-WITH {_CHOSEN_CTE},
-dots AS (
-  SELECT a.conv_id, a.i AS i, b.i AS j, sum(x.value * y.value) AS qt
-  FROM sub a
-  JOIN sub b ON a.conv_id = b.conv_id AND abs(a.i - b.i) > {_MPX_MINLAG}
-  JOIN r x ON x.conv_id = a.conv_id AND x.i >= a.i AND x.i < a.i + {_MPX_W}
-  JOIN r y ON y.conv_id = a.conv_id AND y.i = b.i + (x.i - a.i)
-  GROUP BY 1, 2, 3
-),
-corr AS (
-  SELECT d.conv_id, d.i,
-    CASE WHEN sa.sig = 0 OR sb.sig = 0 THEN 0.0
-         ELSE (d.qt - {_MPX_W} * sa.mu * sb.mu)
-              / ({_MPX_W} * sa.sig * sb.sig) END AS c
-  FROM dots d
-  JOIN sub sa ON sa.conv_id = d.conv_id AND sa.i = d.i
-  JOIN sub sb ON sb.conv_id = d.conv_id AND sb.i = d.j
-),
-best AS (SELECT conv_id, i AS idx, max(c) AS cmax FROM corr GROUP BY 1, 2)
-SELECT conv_id, idx,
-       round(sqrt(2 * {_MPX_W} * (1 - least(cmax, 1.0))), 2) AS dist_r2
-FROM best
-""".strip(),
+        "stomp_w16": _stomp_oracle_sql(f"abs(a.i - b.i) > {_STOMP_EZ}"),
+        "stomp_left_w16": _stomp_oracle_sql(f"b.i < a.i - {_STOMP_EZ}"),
+        "stomp_right_w16": _stomp_oracle_sql(f"b.i > a.i + {_STOMP_EZ}"),
         "ab_join_w16": f"""
 WITH {_CHOSEN_CTE},
 ranked AS (
@@ -3281,23 +3338,8 @@ FROM sides
 """.strip(),
         "av_cmp_w16": f"""
 WITH {_CHOSEN_CTE},
-dots AS (
-  SELECT a.conv_id, a.i AS i, b.i AS j, sum(x.value * y.value) AS qt
-  FROM sub a
-  JOIN sub b ON a.conv_id = b.conv_id AND abs(a.i - b.i) > {_MPX_MINLAG}
-  JOIN r x ON x.conv_id = a.conv_id AND x.i >= a.i AND x.i < a.i + {_MPX_W}
-  JOIN r y ON y.conv_id = a.conv_id AND y.i = b.i + (x.i - a.i)
-  GROUP BY 1, 2, 3
-),
-corr AS (
-  SELECT d.conv_id, d.i,
-    CASE WHEN sa.sig = 0 OR sb.sig = 0 THEN 0.0
-         ELSE (d.qt - {_MPX_W} * sa.mu * sb.mu)
-              / ({_MPX_W} * sa.sig * sb.sig) END AS c
-  FROM dots d
-  JOIN sub sa ON sa.conv_id = d.conv_id AND sa.i = d.i
-  JOIN sub sb ON sb.conv_id = d.conv_id AND sb.i = d.j
-),
+{_dots_sql(_MPX_PAIR)},
+{_CORR_CTE},
 mp AS (
   SELECT conv_id, i AS idx,
          sqrt(2 * {_MPX_W} * (1 - least(max(c), 1.0))) AS dist
@@ -3382,31 +3424,10 @@ SELECT mp.conv_id, mp.idx,
              * max(mp.dist) OVER (PARTITION BY mp.conv_id), 2) AS cmp_r2
 FROM mp JOIN avn ON avn.conv_id = mp.conv_id AND avn.i = mp.idx
 """.strip(),
-        "skimp_pmp": f"""
-WITH {_CHOSEN_CTE},
-{_w_stats_sql(8, "st8")},
-{_w_stats_sql(32, "st32")},
-{_mpx_block_sql(8, "st8", "8")},
-{_mpx_block_sql(16, "sub", "16")},
-{_mpx_block_sql(32, "st32", "32")}
-SELECT conv_id, 'token_count' AS metric, w, idx, dist_r2 FROM b8
-UNION ALL
-SELECT conv_id, 'token_count' AS metric, w, idx, dist_r2 FROM b16
-UNION ALL
-SELECT conv_id, 'token_count' AS metric, w, idx, dist_r2 FROM b32
-""".strip(),
+        "skimp_pmp": _skimp_oracle_sql((8, 16, 32)),
         # anytime prefix of skimp_pmp: binary_split(5)=[0,2,1,3,4], 50%
         # keeps two entries → only w=8 and w=32 exist in the output
-        "skimp_sampled": f"""
-WITH {_CHOSEN_CTE},
-{_w_stats_sql(8, "st8")},
-{_w_stats_sql(32, "st32")},
-{_mpx_block_sql(8, "st8", "8")},
-{_mpx_block_sql(32, "st32", "32")}
-SELECT conv_id, 'token_count' AS metric, w, idx, dist_r2 FROM b8
-UNION ALL
-SELECT conv_id, 'token_count' AS metric, w, idx, dist_r2 FROM b32
-""".strip(),
+        "skimp_sampled": _skimp_oracle_sql((8, 32)),
         "mstomp_w16": f"""
 WITH {_CHOSEN_CTE},
 nsz AS (SELECT conv_id, count(*) AS n FROM r GROUP BY 1),
@@ -3416,58 +3437,7 @@ rrev AS (
 ),
 {_w_stats_sql(16, "s0", "r")},
 {_w_stats_sql(16, "s1", "rrev")},
-pr0 AS (
-  SELECT x.conv_id, y.i - x.i AS d, x.i AS i, x.value * y.value AS p
-  FROM r x JOIN r y ON y.conv_id = x.conv_id AND y.i - x.i > 8
-),
-dt00 AS (
-  SELECT conv_id, i, i + d AS j, qt FROM (
-    SELECT conv_id, d, i, sum(p) OVER wnd AS qt, count(*) OVER wnd AS cnt
-    FROM pr0
-    WINDOW wnd AS (PARTITION BY conv_id, d ORDER BY i
-                   ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING)
-  ) WHERE cnt = 16
-),
-dt0 AS (
-  SELECT conv_id, i, j, qt FROM dt00
-  UNION ALL
-  SELECT conv_id, j AS i, i AS j, qt FROM dt00
-),
-pr1 AS (
-  SELECT x.conv_id, y.i - x.i AS d, x.i AS i, x.value * y.value AS p
-  FROM rrev x JOIN rrev y ON y.conv_id = x.conv_id AND y.i - x.i > 8
-),
-dt10 AS (
-  SELECT conv_id, i, i + d AS j, qt FROM (
-    SELECT conv_id, d, i, sum(p) OVER wnd AS qt, count(*) OVER wnd AS cnt
-    FROM pr1
-    WINDOW wnd AS (PARTITION BY conv_id, d ORDER BY i
-                   ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING)
-  ) WHERE cnt = 16
-),
-dt1 AS (
-  SELECT conv_id, i, j, qt FROM dt10
-  UNION ALL
-  SELECT conv_id, j AS i, i AS j, qt FROM dt10
-),
-dd0 AS (
-  SELECT d.conv_id, d.i, d.j,
-    sqrt(greatest(2 * (16 - (d.qt - 16 * sa.mu * sb.mu)
-                       / (sa.sig * sb.sig)), 0)) AS dist
-  FROM dt0 d
-  JOIN s0 sa ON sa.conv_id = d.conv_id AND sa.i = d.i
-  JOIN s0 sb ON sb.conv_id = d.conv_id AND sb.i = d.j
-  WHERE sa.sig > 0 AND sb.sig > 0
-),
-dd1 AS (
-  SELECT d.conv_id, d.i, d.j,
-    sqrt(greatest(2 * (16 - (d.qt - 16 * sa.mu * sb.mu)
-                       / (sa.sig * sb.sig)), 0)) AS dist
-  FROM dt1 d
-  JOIN s1 sa ON sa.conv_id = d.conv_id AND sa.i = d.i
-  JOIN s1 sb ON sb.conv_id = d.conv_id AND sb.i = d.j
-  WHERE sa.sig > 0 AND sb.sig > 0
-),
+{_mstomp_dims_sql()},
 dims2 AS MATERIALIZED (
   SELECT a.conv_id, a.i, a.j, a.dist AS e0, b.dist AS e1
   FROM dd0 a JOIN dd1 b ON a.conv_id = b.conv_id AND a.i = b.i AND a.j = b.j
@@ -3485,11 +3455,7 @@ FROM prof
 """.strip(),
         "pmp_discords_top3": f"""
 WITH {_CHOSEN_CTE},
-{_w_stats_sql(8, "st8")},
-{_w_stats_sql(32, "st32")},
-{_mpx_block_sql(8, "st8", "q8")},
-{_mpx_block_sql(16, "sub", "q16")},
-{_mpx_block_sql(32, "st32", "q32")},
+{_pmp_blocks_sql((8, 16, 32), "q")},
 pmp AS MATERIALIZED (
   SELECT conv_id, 0 AS rw, 8 AS w, i AS idx,
          sqrt(2 * 8 * (1 - least(max(c), 1.0))) AS dist
@@ -3598,42 +3564,7 @@ WHERE rk.rn - 1 = least(rk.cnt - 1,
 """.strip(),
         "discords_top3": f"""
 WITH {_CHOSEN_CTE},
-{_mpx_block_sql(16, "sub", "d")},
-mp AS MATERIALIZED (
-  SELECT conv_id, i AS idx, sqrt(2 * 16 * (1 - least(max(c), 1.0))) AS dist
-  FROM cd GROUP BY 1, 2
-),
-p1 AS (
-  SELECT conv_id, idx FROM (
-    SELECT conv_id, idx, row_number() OVER
-      (PARTITION BY conv_id ORDER BY dist DESC, idx DESC) AS rn FROM mp
-  ) WHERE rn = 1
-),
-m2 AS (
-  SELECT mp.* FROM mp JOIN p1 USING (conv_id)
-  WHERE NOT (mp.idx >= p1.idx - 4 AND mp.idx < p1.idx + 4)
-),
-p2 AS (
-  SELECT conv_id, idx FROM (
-    SELECT conv_id, idx, row_number() OVER
-      (PARTITION BY conv_id ORDER BY dist DESC, idx DESC) AS rn FROM m2
-  ) WHERE rn = 1
-),
-m3 AS (
-  SELECT m2.* FROM m2 JOIN p2 USING (conv_id)
-  WHERE NOT (m2.idx >= p2.idx - 4 AND m2.idx < p2.idx + 4)
-),
-p3 AS (
-  SELECT conv_id, idx FROM (
-    SELECT conv_id, idx, row_number() OVER
-      (PARTITION BY conv_id ORDER BY dist DESC, idx DESC) AS rn FROM m3
-  ) WHERE rn = 1
-)
-SELECT conv_id, 'token_count' AS metric, CAST(0 AS BIGINT) AS rank, idx FROM p1
-UNION ALL
-SELECT conv_id, 'token_count' AS metric, CAST(1 AS BIGINT) AS rank, idx FROM p2
-UNION ALL
-SELECT conv_id, 'token_count' AS metric, CAST(2 AS BIGINT) AS rank, idx FROM p3
+{_discords_sql(16, "sub", "d", "token_count")}
 """.strip(),
         "tier_discords_1m": _tier_discords_oracle_sql(
             60, "token_count_1m", 64),
@@ -3752,37 +3683,7 @@ SELECT conv_id, 'token_count' AS metric, CAST(2 AS BIGINT) AS rank,
 """.strip(),
         "global_discords_top10": f"""
 WITH {_CHOSEN_CTE},
-{_mpx_block_sql(_MPX_W, "sub", "g")},
-mp AS MATERIALIZED (
-  SELECT conv_id, i AS idx, sqrt(2 * {_MPX_W} * (1 - least(max(c), 1.0))) AS dist
-  FROM cg GROUP BY 1, 2
-),
-p1 AS (
-  SELECT conv_id, idx, dist FROM (
-    SELECT conv_id, idx, dist, row_number() OVER
-      (PARTITION BY conv_id ORDER BY dist DESC, idx DESC) AS rn FROM mp
-  ) WHERE rn = 1
-),
-m2 AS (
-  SELECT mp.* FROM mp JOIN p1 USING (conv_id)
-  WHERE NOT (mp.idx >= p1.idx - 4 AND mp.idx < p1.idx + 4)
-),
-p2 AS (
-  SELECT conv_id, idx, dist FROM (
-    SELECT conv_id, idx, dist, row_number() OVER
-      (PARTITION BY conv_id ORDER BY dist DESC, idx DESC) AS rn FROM m2
-  ) WHERE rn = 1
-),
-m3 AS (
-  SELECT m2.* FROM m2 JOIN p2 USING (conv_id)
-  WHERE NOT (m2.idx >= p2.idx - 4 AND m2.idx < p2.idx + 4)
-),
-p3 AS (
-  SELECT conv_id, idx, dist FROM (
-    SELECT conv_id, idx, dist, row_number() OVER
-      (PARTITION BY conv_id ORDER BY dist DESC, idx DESC) AS rn FROM m3
-  ) WHERE rn = 1
-),
+{_discords_sql(_MPX_W, "sub", "g")},
 allp AS (
   SELECT * FROM p1 UNION ALL SELECT * FROM p2 UNION ALL SELECT * FROM p3
 )
@@ -3794,11 +3695,7 @@ FROM (
 ) WHERE rn <= 10
 """.strip(),
         "moving_median_w8": f"""
-WITH transcripts AS ({_T}),
-tok AS (
-  SELECT conv_id, turn_idx AS idx, CAST(length(text) AS DOUBLE) AS value
-  FROM transcripts
-)
+WITH {_TOK_CTE}
 SELECT conv_id, idx,
        median(value) OVER w AS mov_median,
        round(stddev_pop(value) OVER w, 6) AS mov_std_r6
@@ -3858,7 +3755,7 @@ GROUP BY 1, 2
         "rollup_1d": _rollup_oracle(86400),
         "cascade_fused": " UNION ALL ".join(
             f"SELECT *, '{tier}' AS tier FROM ({_rollup_oracle(tier_s)})"
-            for tier, tier_s in (("1m", 60), ("1h", 3600), ("1d", 86400))
+            for tier, tier_s in _TIERS
         ),
         "rollup_1h_stats": f"""
 WITH {_SERIES_CTE},
@@ -3875,30 +3772,7 @@ SELECT *, vsum / cnt AS mean,
 FROM r
 """.strip(),
         "gapfill_locf": f"""
-WITH transcripts AS ({_T}),
-tok AS (
-  SELECT conv_id, 'token_count' AS metric, ts_epoch,
-         CAST(length(text) AS DOUBLE) AS value
-  FROM transcripts
-),
-b AS (
-  SELECT conv_id, metric, CAST(FLOOR(ts_epoch / 60.0) * 60 AS BIGINT) AS ts_epoch,
-         sum(value) / count(value) AS value
-  FROM tok GROUP BY 1, 2, 3
-),
-spans AS (
-  SELECT conv_id, metric, min(ts_epoch) AS t0, max(ts_epoch) AS t1
-  FROM b GROUP BY 1, 2
-),
-grid AS (
-  SELECT conv_id, metric,
-         unnest(generate_series(t0, t1, 60)) AS ts_epoch
-  FROM spans
-),
-j AS (
-  SELECT g.conv_id, g.metric, g.ts_epoch, b.value
-  FROM grid g LEFT JOIN b USING (conv_id, metric, ts_epoch)
-)
+WITH {_GAPFILL_CTE}
 SELECT conv_id, metric, ts_epoch,
        coalesce(value, last_value(value IGNORE NULLS) OVER
          (PARTITION BY conv_id, metric ORDER BY ts_epoch
@@ -3906,30 +3780,7 @@ SELECT conv_id, metric, ts_epoch,
 FROM j
 """.strip(),
         "gapfill_window_mean": f"""
-WITH transcripts AS ({_T}),
-tok AS (
-  SELECT conv_id, 'token_count' AS metric, ts_epoch,
-         CAST(length(text) AS DOUBLE) AS value
-  FROM transcripts
-),
-b AS (
-  SELECT conv_id, metric, CAST(FLOOR(ts_epoch / 60.0) * 60 AS BIGINT) AS ts_epoch,
-         sum(value) / count(value) AS value
-  FROM tok GROUP BY 1, 2, 3
-),
-spans AS (
-  SELECT conv_id, metric, min(ts_epoch) AS t0, max(ts_epoch) AS t1
-  FROM b GROUP BY 1, 2
-),
-grid AS (
-  SELECT conv_id, metric,
-         unnest(generate_series(t0, t1, 60)) AS ts_epoch
-  FROM spans
-),
-j AS (
-  SELECT g.conv_id, g.metric, g.ts_epoch, b.value
-  FROM grid g LEFT JOIN b USING (conv_id, metric, ts_epoch)
-)
+WITH {_GAPFILL_CTE}
 SELECT conv_id, metric, ts_epoch,
        round(coalesce(value, avg(value) OVER
          (PARTITION BY conv_id, metric ORDER BY ts_epoch
@@ -3959,30 +3810,7 @@ SELECT conv_id, metric,
 FROM g GROUP BY 1, 2
 """.strip(),
         "gapfill_interp": f"""
-WITH transcripts AS ({_T}),
-tok AS (
-  SELECT conv_id, 'token_count' AS metric, ts_epoch,
-         CAST(length(text) AS DOUBLE) AS value
-  FROM transcripts
-),
-b AS (
-  SELECT conv_id, metric, CAST(FLOOR(ts_epoch / 60.0) * 60 AS BIGINT) AS ts_epoch,
-         sum(value) / count(value) AS value
-  FROM tok GROUP BY 1, 2, 3
-),
-spans AS (
-  SELECT conv_id, metric, min(ts_epoch) AS t0, max(ts_epoch) AS t1
-  FROM b GROUP BY 1, 2
-),
-grid AS (
-  SELECT conv_id, metric,
-         unnest(generate_series(t0, t1, 60)) AS ts_epoch
-  FROM spans
-),
-j AS (
-  SELECT g.conv_id, g.metric, g.ts_epoch, b.value
-  FROM grid g LEFT JOIN b USING (conv_id, metric, ts_epoch)
-),
+WITH {_GAPFILL_CTE},
 m AS (
   SELECT conv_id, metric, ts_epoch, value,
     last_value(CASE WHEN value IS NOT NULL THEN ts_epoch END IGNORE NULLS)
@@ -4010,11 +3838,7 @@ tok AS (
   SELECT conv_id, ts_epoch, CAST(length(text) AS DOUBLE) AS value
   FROM transcripts
 ),
-sizes AS (SELECT conv_id, count(*) AS n FROM tok GROUP BY 1),
-chosen AS (
-  SELECT conv_id FROM sizes WHERE n BETWEEN 64 AND 400
-  ORDER BY conv_id LIMIT 5
-),
+{_CHOSEN_SET},
 q AS (
   SELECT t.conv_id,
          list(ts_epoch ORDER BY ts_epoch, value) AS ts,
@@ -4062,56 +3886,16 @@ FROM steps
 UNION ALL
 SELECT conv_id, 'token_count', 19, ts[n], vs[n] FROM q
 """.strip(),
-        "events_sessions": """
-WITH e AS (
-  SELECT CAST(user_id AS VARCHAR) AS user_id,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS turn_idx,
-         epoch_us(ts) // 1000000 AS ts_epoch
-  FROM events
-),
-f AS (
-  SELECT user_id, turn_idx, ts_epoch,
-    CASE WHEN ts_epoch - lag(ts_epoch) OVER
-           (PARTITION BY user_id ORDER BY turn_idx) > 43200
-         THEN 1 ELSE 0 END AS newf
-  FROM e
-),
-s AS (
-  SELECT user_id, ts_epoch,
-    CAST(sum(newf) OVER (PARTITION BY user_id ORDER BY turn_idx
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      AS session_idx
-  FROM f
-)
+        "events_sessions": f"""
+WITH {_EVENT_SESSIONS_CTE}
 SELECT user_id, session_idx,
        min(ts_epoch) AS start_ts, max(ts_epoch) AS end_ts,
        count(*) AS n_turns,
        max(ts_epoch) - min(ts_epoch) AS span_s
 FROM s GROUP BY 1, 2
 """.strip(),
-        "interval_error_hits": """
-WITH e AS (
-  SELECT CAST(user_id AS VARCHAR) AS user_id,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS turn_idx,
-         epoch_us(ts) // 1000000 AS ts_epoch
-  FROM events
-),
-f AS (
-  SELECT user_id, turn_idx, ts_epoch,
-    CASE WHEN ts_epoch - lag(ts_epoch) OVER
-           (PARTITION BY user_id ORDER BY turn_idx) > 43200
-         THEN 1 ELSE 0 END AS newf
-  FROM e
-),
-s AS (
-  SELECT user_id, ts_epoch,
-    CAST(sum(newf) OVER (PARTITION BY user_id ORDER BY turn_idx
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      AS session_idx
-  FROM f
-),
+        "interval_error_hits": f"""
+WITH {_EVENT_SESSIONS_CTE},
 sess AS (
   SELECT user_id, session_idx,
          min(ts_epoch) AS start_ts, max(ts_epoch) AS end_ts
@@ -4152,22 +3936,7 @@ m AS (
         x -> list_contains(['the', 'a', 'of', 'and', 'to'], x))) AS n_stop
   FROM t
 ),
-long AS (
-  SELECT id, 'de' AS lang, len(list_filter(toks, x -> list_contains(['der','die','das','und','ein'], x))) AS hits FROM t
-  UNION ALL
-  SELECT id, 'en', len(list_filter(toks, x -> list_contains(['the','a','of','and','to'], x))) FROM t
-  UNION ALL
-  SELECT id, 'es', len(list_filter(toks, x -> list_contains(['el','la','de','los','que'], x))) FROM t
-  UNION ALL
-  SELECT id, 'fr', len(list_filter(toks, x -> list_contains(['le','la','les','des','une'], x))) FROM t
-  UNION ALL
-  SELECT id, 'zh', len(list_filter(toks, x -> list_contains(['de','shi','le','zai','he'], x))) FROM t
-),
-best AS (
-  SELECT id, lang, hits,
-         row_number() OVER (PARTITION BY id ORDER BY hits DESC, lang DESC) AS rn
-  FROM long
-),
+{_LANG_CTE},
 s AS (
   SELECT m.id, m.text, m.n_tokens,
     0.4 * least(1.0, n_tokens / 100.0)
@@ -4306,21 +4075,7 @@ FROM b WHERE n = 16
         # the IDENTICAL IEEE sequence (x + 3*s)/4, so even rounded
         # states hash bit-exactly (the LTTB recursive-oracle pattern).
         "ewma_q4": f"""
-WITH RECURSIVE transcripts AS ({_T}),
-tok AS (
-  SELECT conv_id, turn_idx AS idx, CAST(length(text) AS DOUBLE) AS value
-  FROM transcripts
-),
-sizes AS (SELECT conv_id, count(*) AS n FROM tok GROUP BY 1),
-chosen AS (
-  SELECT conv_id FROM sizes WHERE n BETWEEN 64 AND 400
-  ORDER BY conv_id LIMIT 5
-),
-q AS (
-  SELECT t.conv_id, list(idx ORDER BY idx) AS ids,
-         list(value ORDER BY idx) AS vs, count(*) AS n
-  FROM tok t JOIN chosen c USING (conv_id) GROUP BY 1
-),
+WITH RECURSIVE {_CHOSEN_LISTS_CTE},
 steps AS (
   SELECT conv_id, ids, vs, n, 1 AS i, vs[1] AS s FROM q
   UNION ALL
@@ -4331,21 +4086,7 @@ SELECT conv_id, 'token_count' AS metric, ids[i] AS idx, s AS ewma
 FROM steps
 """.strip(),
         "cusum_shift": f"""
-WITH RECURSIVE transcripts AS ({_T}),
-tok AS (
-  SELECT conv_id, turn_idx AS idx, CAST(length(text) AS DOUBLE) AS value
-  FROM transcripts
-),
-sizes AS (SELECT conv_id, count(*) AS n FROM tok GROUP BY 1),
-chosen AS (
-  SELECT conv_id FROM sizes WHERE n BETWEEN 64 AND 400
-  ORDER BY conv_id LIMIT 5
-),
-q AS (
-  SELECT t.conv_id, list(idx ORDER BY idx) AS ids,
-         list(value ORDER BY idx) AS vs, count(*) AS n
-  FROM tok t JOIN chosen c USING (conv_id) GROUP BY 1
-),
+WITH RECURSIVE {_CHOSEN_LISTS_CTE},
 steps AS (
   SELECT conv_id, ids, vs, n, 1 AS i,
          CAST(0 AS DOUBLE) AS gp, CAST(0 AS DOUBLE) AS gn FROM q
@@ -4406,21 +4147,7 @@ WHERE cum >= (pct * n + 99) // 100
         # the IDENTICAL IEEE sequence (x + 3*(l+b))/4 then
         # ((l_new - l) + 3*b)/4, so even rounded states hash bit-exactly
         "holt_forecast": f"""
-WITH RECURSIVE transcripts AS ({_T}),
-tok AS (
-  SELECT conv_id, turn_idx AS idx, CAST(length(text) AS DOUBLE) AS value
-  FROM transcripts
-),
-sizes AS (SELECT conv_id, count(*) AS n FROM tok GROUP BY 1),
-chosen AS (
-  SELECT conv_id FROM sizes WHERE n BETWEEN 64 AND 400
-  ORDER BY conv_id LIMIT 5
-),
-q AS (
-  SELECT t.conv_id, list(idx ORDER BY idx) AS ids,
-         list(value ORDER BY idx) AS vs, count(*) AS n
-  FROM tok t JOIN chosen c USING (conv_id) GROUP BY 1
-),
+WITH RECURSIVE {_CHOSEN_LISTS_CTE},
 steps AS (
   SELECT conv_id, ids, vs, n, 1 AS i,
          CAST(vs[1] AS DOUBLE) AS l,
@@ -4596,12 +4323,7 @@ SELECT conv_id, metric, bucket_epoch,
 FROM seg GROUP BY 1, 2, 3
 """.strip(),
         "downsample_m4": f"""
-WITH transcripts AS ({_T}),
-tok AS (
-  SELECT conv_id, 'token_count' AS metric, ts_epoch,
-         CAST(length(text) AS DOUBLE) AS value
-  FROM transcripts
-),
+WITH {_TOK_TS_CTE},
 b AS (
   SELECT conv_id, metric, ts_epoch, value,
          CAST(FLOOR(ts_epoch / 120.0) * 120 AS BIGINT) AS bucket_epoch
@@ -4721,13 +4443,7 @@ FROM l ASOF LEFT JOIN r0
 """.strip(),
         "dedup_ngram_jaccard": f"""
 WITH {_CORPUS_CTE},
-toks AS (SELECT doc_id AS id, string_split(trim(text), ' ') AS t FROM corpus),
-sh AS (
-  SELECT DISTINCT id,
-    unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-                          i -> array_to_string(t[i:i+2], ' '))) AS shingle
-  FROM toks
-),
+{_SHINGLES_CTE},
 freq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
 rare AS (SELECT s.id, s.shingle FROM sh s JOIN freq f USING (shingle)
          WHERE f.df <= 20),
@@ -4735,22 +4451,7 @@ pairs AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b
   FROM rare a JOIN rare b ON a.shingle = b.shingle AND a.id < b.id
 ),
-sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY 1),
-inter AS (
-  SELECT p.id_a, p.id_b, count(*) AS n_inter
-  FROM pairs p
-  JOIN sh a ON a.id = p.id_a
-  JOIN sh b ON b.id = p.id_b AND b.shingle = a.shingle
-  GROUP BY 1, 2
-)
-SELECT i.id_a, i.id_b,
-       CAST(n_inter AS BIGINT) AS n_intersect,
-       CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT) AS n_union,
-       CAST((n_inter * 1000000) // (sa.n_sh + sb.n_sh - n_inter)
-            AS BIGINT) AS jaccard_ppm
-FROM inter i
-JOIN sizes sa ON sa.id = i.id_a
-JOIN sizes sb ON sb.id = i.id_b
+{_JACCARD_SQL}
 WHERE n_inter / (sa.n_sh + sb.n_sh - n_inter) >= 0.5
 """.strip(),
         # exact sequential window-mean fill: a recursive CTE carries each
@@ -4759,17 +4460,8 @@ WHERE n_inter / (sa.n_sh + sb.n_sh - n_inter) >= 0.5
         # Grid endpoints are observed buckets by construction, so the
         # kernel's first/last boundary fill never triggers.
         "gapfill_sequential": f"""
-WITH RECURSIVE transcripts AS ({_T}),
-tok AS (
-  SELECT conv_id, 'token_count' AS metric, ts_epoch,
-         CAST(length(text) AS DOUBLE) AS value
-  FROM transcripts
-),
-sizes AS (SELECT conv_id, count(*) AS n FROM tok GROUP BY 1),
-chosen AS (
-  SELECT conv_id FROM sizes WHERE n BETWEEN 64 AND 400
-  ORDER BY conv_id LIMIT 5
-),
+WITH RECURSIVE {_TOK_TS_CTE},
+{_CHOSEN_SET},
 b AS (
   SELECT t.conv_id, metric,
          CAST(FLOOR(ts_epoch / 60.0) * 60 AS BIGINT) AS ts_epoch,
@@ -4777,19 +4469,7 @@ b AS (
   FROM tok t JOIN chosen c ON c.conv_id = t.conv_id
   GROUP BY 1, 2, 3
 ),
-spans AS (
-  SELECT conv_id, metric, min(ts_epoch) AS t0, max(ts_epoch) AS t1
-  FROM b GROUP BY 1, 2
-),
-grid AS (
-  SELECT conv_id, metric,
-         unnest(generate_series(t0, t1, 60)) AS ts_epoch
-  FROM spans
-),
-j AS (
-  SELECT g.conv_id, g.metric, g.ts_epoch, b.value
-  FROM grid g LEFT JOIN b USING (conv_id, metric, ts_epoch)
-),
+{_GRID_CTE},
 packed AS (
   SELECT conv_id, metric,
          list(ts_epoch ORDER BY ts_epoch) AS tss,
@@ -4820,11 +4500,7 @@ FROM final, unnest(range(1, len(tss) + 1)) AS t(i)
 WHERE rn = 1
 """.strip(),
         "moving_stats_w8": f"""
-WITH transcripts AS ({_T}),
-tok AS (
-  SELECT conv_id, turn_idx AS idx, CAST(length(text) AS DOUBLE) AS value
-  FROM transcripts
-),
+WITH {_TOK_CTE},
 m AS (
   SELECT conv_id, idx,
          avg(value) OVER w AS mov_avg, min(value) OVER w AS mov_min,
@@ -4845,24 +4521,7 @@ FROM series WHERE value IS NOT NULL GROUP BY 1, 2
         "retention_view": f"""
 WITH {_SERIES_CTE},
 now_t AS (SELECT max(ts_epoch) AS now FROM series),
-r1m AS (
-  SELECT conv_id, metric,
-         CAST(FLOOR(ts_epoch / 60.0) * 60 AS BIGINT) AS bucket_epoch,
-         count(value) AS cnt, sum(value) AS vsum
-  FROM series WHERE value IS NOT NULL GROUP BY 1, 2, 3
-),
-r1h AS (
-  SELECT conv_id, metric,
-         CAST(FLOOR(ts_epoch / 3600.0) * 3600 AS BIGINT) AS bucket_epoch,
-         count(value) AS cnt, sum(value) AS vsum
-  FROM series WHERE value IS NOT NULL GROUP BY 1, 2, 3
-),
-r1d AS (
-  SELECT conv_id, metric,
-         CAST(FLOOR(ts_epoch / 86400.0) * 86400 AS BIGINT) AS bucket_epoch,
-         count(value) AS cnt, sum(value) AS vsum
-  FROM series WHERE value IS NOT NULL GROUP BY 1, 2, 3
-)
+{tier_sums}
 SELECT s.conv_id, s.metric, s.ts_epoch AS bucket_epoch, 'raw' AS tier,
        CAST(1 AS BIGINT) AS cnt, s.value AS vsum
 FROM series s, now_t
@@ -4884,6 +4543,8 @@ WHERE bucket_epoch < now - {_KEEP_1H}
     # the JSON io layer must be value-preserving: the round-tripped MPX
     # profile shares the brute-force oracle verbatim
     out["profile_json_roundtrip"] = out["mpx_w16"]
+    # SCRIMP++ at sample_pct=1.0 is exact: the MPX brute-force twin
+    out["scrimp_exact_w16"] = out["mpx_w16"]
     out["mpf_roundtrip"] = out["mpx_w16"]
     # the drained incremental stream must equal the batch profile
     out["stream_mpx_incremental"] = out["mpx_w16"]

@@ -2,8 +2,9 @@
 
 Runs every __spark_entry__.queries() entry on Spark and its oracle_sql()
 twin on DuckDB (views over the sf parquet tables pre-registered), then
-compares row count, schema width, and an order-insensitive value hash
-(columns sorted by name, rows sorted, floats bit-compared).
+compares row count, schema width, per-column pandas dtype kinds (int64
+is not float64 even where the values agree) and an order-insensitive
+value hash (columns sorted by name, rows sorted, floats bit-compared).
 
 Usage: python tools/check_oracle.py [--json=PATH] [sf_dir] [query ...]
 
@@ -37,22 +38,31 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def compare(spdf: pd.DataFrame, ddf: pd.DataFrame, name: str) -> list[str]:
+    """Mismatches between the Spark and DuckDB frames; empty when they agree.
+
+    Dtype-strict: a column whose pandas dtype kinds differ (int64
+    against float64, say) is reported before any value is compared,
+    because the gate this mimics hashes typed values and goes red on such
+    a pair even when the numbers are equal. Width alone (int32 against
+    int64) is not reported: that gate has passed such columns
+    (asof_tool_context, asof_next_user_turn and rolling_corr_w16 in
+    CORRECTNESS_r06-r08.json)."""
     errs = []
     if len(spdf) != len(ddf):
         errs.append(f"rowcount spark={len(spdf)} duckdb={len(ddf)}")
     if sorted(spdf.columns) != sorted(ddf.columns):
         errs.append(f"columns spark={sorted(spdf.columns)} duckdb={sorted(ddf.columns)}")
         return errs
+    errs += [f"col {c}: dtype spark={spdf[c].dtype} duckdb={ddf[c].dtype}"
+             for c in sorted(spdf.columns)
+             if spdf[c].dtype.kind != ddf[c].dtype.kind]
     if errs:
         return errs
     a, b = _canon(spdf), _canon(ddf)
     for c in a.columns:
         av, bv = a[c].to_numpy(), b[c].to_numpy()
-        if np.issubdtype(av.dtype, np.floating) or np.issubdtype(bv.dtype, np.floating):
-            av = av.astype(np.float64)
-            bv = bv.astype(np.float64)
-            both_nan = np.isnan(av) & np.isnan(bv)
-            eq = (av == bv) | both_nan
+        if av.dtype.kind == "f":
+            eq = (av == bv) | (np.isnan(av) & np.isnan(bv))
         else:
             eq = av == bv
         bad = int((~np.asarray(eq)).sum())
